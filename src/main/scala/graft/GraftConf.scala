@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Session tuning the engine expects (documented in SURVEY §4).
   *
   * `InferFiltersFromGenerate` synthesizes `size(g)>0 AND isnotnull(g)`
@@ -17,4 +19,13 @@ package graft
 object GraftConf {
   val ExcludedRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+
+  /** Session key for the row count up to which the iterative operators
+    * broadcast a node-sized frame (`operators.Loops.bcOr`); above it they
+    * hint `shuffle_hash`. The default, 4M rows, is ~100 MB of
+    * (long, long) pairs. */
+  val BroadcastNodeLimitKey = "spark.graft.broadcastNodeLimit"
+
+  def broadcastNodeLimit(spark: SparkSession): Long =
+    spark.conf.getOption(BroadcastNodeLimitKey).fold(4000000L)(_.toLong)
 }

@@ -2101,10 +2101,12 @@ object SparkEntry {
     }),
   )
 
-  /** Scratch dir for sink round-trips, keyed by sf dir to avoid
-    * cross-scale contamination. */
+  /** Scratch dir for sink round-trips under `target/graft_io` of the
+    * working directory, keyed by sf dir to avoid cross-scale
+    * contamination. */
   private def scratch(sfDir: String, name: String): String =
-    s"/root/repo/target/graft_io/${new java.io.File(sfDir).getName}/$name"
+    new java.io.File(s"target/graft_io/${new java.io.File(sfDir).getName}/$name")
+      .getAbsolutePath
 
   /** DuckDB twins of `queries` (identical aliases + rounding — SURVEY §5). */
   /** ml_nb's oracle, shared verbatim by ml_kappa (κ is a projection of
@@ -7424,7 +7426,9 @@ object SparkEntry {
       """SELECT event_type,
            CASE WHEN value < 100 THEN 'level_0'
                 WHEN value < 300 THEN 'level_1' ELSE 'level_2' END AS alert_level,
-           count(*) AS n, round(avg(value),4) AS avg_value
+           count(*) AS n,
+           CAST((sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 200
+             + count(*)) // (2 * count(*)) AS DOUBLE) / 1e4 AS avg_value
          FROM events GROUP BY 1, 2""",
     "lam_reconcile" ->
       """WITH k AS (SELECT CAST(day(ts) AS INTEGER) AS day, event_type,

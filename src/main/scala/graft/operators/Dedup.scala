@@ -442,8 +442,9 @@ object Dedup {
     * the Spark-native CC (each round: join labels to edges, take the
     * neighborhood min; converges in O(diameter) rounds, O(log n) with
     * both edge directions). The loop is driver-side but each round is a
-    * distributed join; dup clusters are tiny diameter in practice, and
-    * `maxIter` bounds pathological chains.
+    * distributed join; dup clusters are tiny diameter in practice. A
+    * graph whose labels have not settled within `maxIter` rounds throws
+    * IllegalStateException rather than return partial clusters.
     *
     * Small-graph fast path (MEASURED, the broadcast-gate idiom): an edge
     * list under `driverEdgeLimit` rows (~32 MB of long pairs at the 2M
@@ -486,7 +487,6 @@ object Dedup {
   }
 
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
-                  broadcastLabelLimit: Long = 4000000L,
                   driverEdgeLimit: Long = 2000000L): DataFrame = {
     // near-dup edge lists are usually tiny relative to the corpus:
     // collapse to a few partitions before caching so each fixpoint round
@@ -516,15 +516,11 @@ object Dedup {
       else edgesAll
     // dup-cluster label frames are usually tiny relative to the corpus
     // (only docs appearing in pairs) — broadcast them into the per-round
-    // joins so an iteration is shuffle-free. The choice is MEASURED, not
-    // caller-trusted: the node count (constant across rounds — every
-    // node keeps its label row) is taken once off the cached edge list,
-    // and label frames past `broadcastLabelLimit` rows (~100 MB of
-    // (long,long) at the 4M default) degrade to shuffled hash joins
-    // instead of OOMing the driver.
+    // joins so an iteration is shuffle-free, guarded (Loops.bcOr) by the
+    // node count (constant across rounds — every node keeps its label
+    // row), taken once off the cached edge list.
     lazy val nNodes = edges.select(col("a")).distinct().count()
-    def bc(df: DataFrame): DataFrame =
-      if (nNodes <= broadcastLabelLimit) broadcast(df) else df
+    def bc(df: DataFrame): DataFrame = Loops.bcOr(df, nNodes)
     def nbMin(cur: DataFrame): DataFrame = {
       val via = edges
         .join(bc(cur.select(col("id").as("b"), col("cluster_id").as("nb_label"))), "b")
@@ -543,37 +539,22 @@ object Dedup {
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("ll"), col("cluster_id")))
             .as("cluster_id"))
-    // labels only ever decrease, so sum(cluster_id) is a monotone
-    // fixpoint witness: an unchanged sum across a full round means every
-    // label was unchanged — one scalar agg instead of the join-with-prev
-    // count the judge flagged as per-round driver sync. Decimal sum so
-    // billions of large ids can't overflow at scale.
-    def sumLabels(cur: DataFrame): java.math.BigDecimal =
-      cur.agg(coalesce(sum(col("cluster_id").cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO))).head.getDecimal(0)
     // label init fused with the first neighbor-min round: edges carry
     // both directions, so every node appears on the `a` side and one
-    // aggregation yields label = min(self, neighbors). localCheckpoint
-    // per block: without it the logical plan nests per iteration and the
-    // driver OOMs compiling it (the classic iterative-Spark trap).
-    var labels = ptrDouble(
-        edges.groupBy(col("a").as("id")).agg(min("b").as("nb_min"))
-          .select(col("id"), least(col("id"), col("nb_min")).as("cluster_id")))
-      .localCheckpoint(true)
-    var prevSum = sumLabels(labels)
-    var converged = false
-    var i = 0
-    // one propagation round per materialization: each round's broadcast
-    // sides re-read the previous checkpoint, so stacking un-materialized
+    // aggregation yields label = min(self, neighbors). Labels only ever
+    // decrease, so the decimal Σlabel is the fixpoint witness. One
+    // propagation round per checkpoint: each round's broadcast sides
+    // re-read the previous checkpoint, so stacking un-materialized
     // rounds recomputes the whole prior round inside every broadcast
     // subtree (measured 2x slower than checkpointing each round)
-    while (!converged && i < maxIter) {
-      labels = ptrDouble(nbMin(labels)).localCheckpoint(true)
-      i += 1
-      val s = sumLabels(labels)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-    }
+    val (labels, settled) = Loops.fixpoint(
+        ptrDouble(
+          edges.groupBy(col("a").as("id")).agg(min("b").as("nb_min"))
+            .select(col("id"), least(col("id"), col("nb_min")).as("cluster_id")))
+          .localCheckpoint(true),
+        maxIter)(Loops.decimalSum(_, "cluster_id"))(cur => ptrDouble(nbMin(cur)))
+    if (!settled) throw new IllegalStateException(
+      s"dupClusters did not settle in $maxIter rounds")
     labels.withColumnRenamed("id", "doc_id")
   }
 
@@ -589,18 +570,15 @@ object Dedup {
     * drop list against the full corpus scan (no corpus shuffle). The
     * quality scores are computed only for clustered docs via a semi-
     * filtered scan, not corpus-wide. */
-  def keepCanonical(documents: DataFrame, pairs: DataFrame,
-                    broadcastDropLimit: Long = 4000000L): DataFrame = {
+  def keepCanonical(documents: DataFrame, pairs: DataFrame): DataFrame = {
     val clusters = dupClusters(pairs) // (doc_id, cluster_id), small
-    // measured, not caller-trusted (the dd_cluster lesson): the labels
-    // frame is already checkpointed, so this count is one cheap action;
-    // a boilerplate-heavy corpus whose clustered set exceeds the limit
-    // degrades to shuffled joins instead of OOMing executors
-    val bc: DataFrame => DataFrame =
-      if (clusters.count() <= broadcastDropLimit) broadcast else identity
+    // guarded by one cheap count off the labels (a local relation or a
+    // checkpoint)
+    val nClustered = clusters.count()
     val scored = TextAnalysis
       .qualityScores(documents.join(
-        bc(clusters.select("doc_id")), Seq("doc_id"), "left_semi"))
+        Loops.bcOr(clusters.select("doc_id"), nClustered), Seq("doc_id"),
+        "left_semi"))
       .select(col("doc_id"), col("quality_score"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("cluster_id").orderBy(desc("quality_score"), asc("doc_id"))
@@ -608,7 +586,7 @@ object Dedup {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") =!= 1)
       .select("doc_id")
-    documents.join(bc(drops), Seq("doc_id"), "left_anti")
+    documents.join(Loops.bcOr(drops, nClustered), Seq("doc_id"), "left_anti")
       .select("doc_id", "n_chars")
   }
 
@@ -623,17 +601,14 @@ object Dedup {
     * sized (≪ corpus), so the corpus-wide join is a measured broadcast
     * (shuffled-join degrade above the limit, never an executor OOM) —
     * the corpus itself is scanned once and never re-shuffles. */
-  def reweightByCluster(documents: DataFrame, pairs: DataFrame,
-                        broadcastLabelLimit: Long = 4000000L): DataFrame = {
+  def reweightByCluster(documents: DataFrame, pairs: DataFrame): DataFrame = {
     val clusters = dupClusters(pairs) // (doc_id, cluster_id), checkpointed
     val sizes = clusters.groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
     val labeled = clusters.join(sizes, "cluster_id")
       .select("doc_id", "cluster_size")
-    val bc: DataFrame => DataFrame =
-      if (clusters.count() <= broadcastLabelLimit) broadcast else identity
     documents.select("doc_id")
-      .join(bc(labeled), Seq("doc_id"), "left")
+      .join(Loops.bcOr(labeled, clusters.count()), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_size"), lit(1L)).as("cluster_size"),
         round(lit(1.0) / coalesce(col("cluster_size"), lit(1L)), 6)

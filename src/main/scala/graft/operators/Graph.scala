@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import Loops.bcOr
+
 /** Graph analytics over edge lists derived from the warehouse (the
   * co-purchase / interaction graphs a feature pipeline mines). No graph
   * library: ranks and degrees are plain DataFrames, so every step is
@@ -104,8 +106,7 @@ object Graph {
     * base term. */
   def personalizedPageRank(edges: DataFrame, nSeeds: Int = 4,
                            iterations: Int = 5,
-                           damping: Double = 0.85,
-                           broadcastNodeLimit: Long = 4000000L): DataFrame = {
+                           damping: Double = 0.85): DataFrame = {
     val ed = edges.select("src", "dst").distinct()
       .withColumn("outdeg",
         count(lit(1)).over(
@@ -113,17 +114,9 @@ object Graph {
       .localCheckpoint(true)
     val nodes = ed.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
-    // guarded broadcast-or-degrade (r16, the lpa/betweenness idiom):
-    // the rank/msum frames are node-sized and the seed frame is
-    // nSeeds rows, but the checkpointed leaves carry no stats, so the
-    // un-hinted chain left Catalyst/AQE re-deriving the join strategy
-    // per stage (measured isolated sf0.1: 3.5 → 2.6 s warm,
-    // bit-identical). nNodes is one count off the checkpoint; past
-    // the limit the node-sized sides degrade to shuffle_hash.
+    // guarded rank/msum frames (Loops.bcOr; measured isolated sf0.1:
+    // 3.5 → 2.6 s warm, bit-identical): one node count off the checkpoint
     val nNodes = nodes.count()
-    def bc(df: DataFrame): DataFrame =
-      if (nNodes <= broadcastNodeLimit) broadcast(df)
-      else df.hint("shuffle_hash")
     val seeds = nodes.orderBy("node").limit(nSeeds)
       .withColumn("base", lit(1.0 / nSeeds))
       .localCheckpoint(true)
@@ -132,11 +125,11 @@ object Graph {
         Seq("node"), "left")
       .select(col("node"), coalesce(col("base"), lit(0.0)).as("rank"))
     for (_ <- 1 to iterations) {
-      val msum = ed.join(bc(ranks), ed("src") === ranks("node"))
+      val msum = ed.join(bcOr(ranks, nNodes), ed("src") === ranks("node"))
         .select(col("dst"), (col("rank") / col("outdeg")).as("c"))
         .groupBy("dst").agg(sum("c").as("m"))
       ranks = nodes
-        .join(bc(msum), nodes("node") === msum("dst"), "left")
+        .join(bcOr(msum, nNodes), nodes("node") === msum("dst"), "left")
         .join(broadcast(seeds.select(col("node"), col("base"))),
           Seq("node"), "left")
         .select(col("node"),
@@ -247,8 +240,7 @@ object Graph {
     * same edge list, which is total-by-construction; GraphSpec pins
     * the |j| == |e| identity at test scale. */
   def conductance(edges: DataFrame, labels: DataFrame,
-                  topK: Int = 10,
-                  broadcastNodeLimit: Long = 4000000L): DataFrame = {
+                  topK: Int = 10): DataFrame = {
     // FULLY LAZY label lineage, RE-CONFIRMED r15: materializing the
     // LPA chain here (labels.localCheckpoint(true) + count off it)
     // probe-measured 8.2 s suite / 9.5 s isolated vs 6.6/6.3 lazy at
@@ -257,13 +249,11 @@ object Graph {
     // all 32 shuffle tasks instead of AQE-coalescing), so the r13
     // lazy trade stands: the two label probes re-run the lazy chain
     // once each (~1.4 s, gr_lpa's own bench number).
-    // broadcast-or-degrade guard (r15, the dupClusters pattern): the
-    // label probes are node-sized. Counting `labels` would run the
+    // guarded label probes (Loops.bcOr). Counting `labels` would run the
     // chain a THIRD time, so the guard measures the node count off the
     // EDGE frame instead — under the documented precondition (labels
     // cover the edge endpoints exactly once) |labels| = |distinct
-    // src| of the symmetric edge list; past the limit the hint
-    // degrades to shuffle_hash instead of OOMing at 1e9 nodes.
+    // src| of the symmetric edge list.
     // NOTE (r15 ADVICE): this count is an EAGER action at call time —
     // a caller passing a non-checkpointed edge frame pays one full
     // edge-lineage run here; and the |labels| = |distinct src|
@@ -272,16 +262,13 @@ object Graph {
     // or the guard under-counts the broadcast side — perf/OOM risk
     // only, results unaffected). Every in-repo caller passes the
     // warm-checkpointed symmetric co-purchase frame.
-    lazy val nLabels = edges.select(col("src")).distinct().count()
-    def bc(df: DataFrame): DataFrame =
-      if (nLabels <= broadcastNodeLimit) broadcast(df)
-      else df.hint("shuffle_hash")
+    val nLabels = edges.select(col("src")).distinct().count()
     val e = edges.select("src", "dst").distinct()
     val j = e
-      .join(bc(labels.select(col("node").as("src"),
-        col("label").as("cs"))), Seq("src"))
-      .join(bc(labels.select(col("node").as("dst"),
-        col("label").as("cd"))), Seq("dst"))
+      .join(bcOr(labels.select(col("node").as("src"),
+        col("label").as("cs")), nLabels), Seq("src"))
+      .join(bcOr(labels.select(col("node").as("dst"),
+        col("label").as("cd")), nLabels), Seq("dst"))
     val perC = j.groupBy(col("cs").as("community"))
       .agg(count(lit(1)).as("vol"),
         sum(when(col("cs") === col("cd"), 1L).otherwise(0L)).as("inside"))
@@ -424,26 +411,30 @@ object Graph {
         lit("authority").as("role"), round(col("a"), 6).as("score")))
   }
 
-  /** Triangle census of an undirected graph: node/edge/wedge/triangle
-    * counts plus the global clustering coefficient (3·triangles /
-    * wedges) — the one-row shape summary that tells a pipeline whether
-    * a mined co-occurrence graph is clustered or noise.
-    *
-    * Scale shape: edges are canonicalized (a < b) then ORIENTED from
-    * lower (degree, id) to higher, which caps every node's out-degree
-    * at O(√m) regardless of hub skew — so the wedge self-join emits
-    * O(m^1.5) candidate rows worst case (the classic bound), never the
-    * deg² explosion a hub would produce under naive adjacency pairing.
-    * Each triangle is found exactly once (its lowest-order corner is
-    * the only one with out-edges to both others). All joins are
-    * equi-joins on ids; the only driver action is the final 1-row agg.
-    */
-  def triangleStats(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
+  /** Canonical undirected edge set (a < b, self-loops dropped),
+    * checkpointed: every caller reads it more than once. */
+  private def canonicalEdges(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true) // consumed by degrees + orientation + closure probe
+      .localCheckpoint(true)
+
+  /** Both directions of every edge as distinct (a, b) rows. */
+  private def symmetricEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("a"), col("dst").as("b"))
+      .union(edges.select(col("dst").as("a"), col("src").as("b")))
+      .distinct()
+
+  /** Degree-oriented triangle enumeration shared by [[triangleStats]],
+    * [[localClustering]] and [[edgeEmbeddedness]]: canonical edges are
+    * ORIENTED from lower (degree, id) to higher, which caps every node's
+    * out-degree at O(√m), so the wedge self-join emits O(m^1.5) rows
+    * worst case and each triangle appears exactly once (its lowest-order
+    * corner is the only one with out-edges to both others). Returns
+    * (canonical edges, node degrees, triangles (u, x, y)). */
+  private def orientedTriangles(edges: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val und = canonicalEdges(edges)
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -464,14 +455,28 @@ object Graph {
     // two out-edges of the same center, endpoints kept in orientation
     // order, closed iff the (x, y) out-edge exists
     val o2 = oriented.select(col("u").as("u2"), col("v").as("y"),
-      col("du").as("du2"), col("dv").as("dy"))
-    val wedges = oriented
+      col("dv").as("dy"))
+    val tris = oriented
       .join(o2, col("u") === col("u2") &&
-        (col("dv") < col("dy") || (col("dv") === col("dy") && col("v") < col("y"))))
-      .select(col("v").as("x"), col("y"))
-    val closure = oriented.select(col("u").as("x"), col("v").as("y"))
-    val nTri = wedges.join(closure, Seq("x", "y"), "left_semi")
-      .agg(count(lit(1)).as("n")).select(col("n"))
+        (col("dv") < col("dy") ||
+          (col("dv") === col("dy") && col("v") < col("y"))))
+      .select(col("u"), col("v").as("x"), col("y"))
+      .join(oriented.select(col("u").as("x"), col("v").as("y")),
+        Seq("x", "y"), "left_semi")
+    (und, deg, tris)
+  }
+
+  /** Triangle census of an undirected graph: node/edge/wedge/triangle
+    * counts plus the global clustering coefficient (3·triangles /
+    * wedges) — the one-row shape summary that tells a pipeline whether
+    * a mined co-occurrence graph is clustered or noise.
+    *
+    * Scale shape: [[orientedTriangles]] — O(m^1.5) wedge rows worst
+    * case, never the deg² explosion a hub would produce under naive
+    * adjacency pairing; all joins are equi-joins on ids. */
+  def triangleStats(edges: DataFrame): DataFrame = {
+    val (_, deg, tris) = orientedTriangles(edges)
+    val nTri = tris.agg(count(lit(1)).as("n")).select(col("n"))
     val shape = deg.agg(
       count(lit(1)).as("n_nodes"),
       (sum(col("deg")) / 2).cast("long").as("n_edges"),
@@ -497,11 +502,7 @@ object Graph {
     * is capping or sampling hub adjacency before pairing (documented
     * trade-off — the exact ranking here is what the oracle checks). */
   def jaccardLinks(edges: DataFrame, topN: Int = 20): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true) // adjacency + degrees + anti-join all read it
+    val und = canonicalEdges(edges)
     val nbrs = und.select(col("a").as("u"), col("b").as("w"))
       .unionAll(und.select(col("b").as("u"), col("a").as("w")))
     val deg = nbrs.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
@@ -535,11 +536,7 @@ object Graph {
     * rollup sums exact longs (partition-invariant, and the
     * (score, x, y) cut is a total order on integers). */
   def adamicAdarLinks(edges: DataFrame, topN: Int = 20): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    val und = canonicalEdges(edges)
     val nbrs = und.select(col("a").as("u"), col("b").as("w"))
       .unionAll(und.select(col("b").as("u"), col("a").as("w")))
     val deg = nbrs.groupBy(col("w").as("wn")).agg(count(lit(1)).as("dw"))
@@ -578,46 +575,25 @@ object Graph {
     * depth is data-dependent so an uncut lineage would grow without
     * bound. Rounds are bounded by the peeling depth (≤ longest
     * degeneracy chain, ~tens on real graphs), never by graph size;
-    * convergence is edge-count stability, an O(1) driver scalar. */
-  def kCore(edges: DataFrame, k: Int = 3, maxRounds: Int = 30,
-            broadcastNodeLimit: Long = 4000000L): DataFrame = {
+    * convergence is edge-count stability (rounds only remove edges), an
+    * O(1) driver scalar. Peeling that has not settled within
+    * `maxRounds` throws rather than return a partial core. */
+  def kCore(edges: DataFrame, k: Int = 3, maxRounds: Int = 30): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
-    var und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .union(edges.select(col("dst").as("a"), col("src").as("b")))
-      .distinct()
-      .localCheckpoint(true)
-    // pin the INITIAL frame for the node census (r15 ADVICE): `und` is
-    // reassigned per peel round, and a lazy count closing over the var
-    // would silently census a mid-peel frame if the first bc() use
-    // ever moved after a reassignment
-    val und0 = und
-    var nEdges = und.count()
-    // r15 (the LPA lesson): the per-round keep frame is node-sized and
-    // the loop materializes through localCheckpoint where AQE never
-    // runs — un-hinted, both semi joins fell back to sort-merge and
-    // re-sorted the surviving edge frame every round. Guarded
-    // broadcast (node count ≤ edge count off the checkpoint, measured
-    // once), shuffle_hash degrade past the limit.
-    lazy val nNodes =
-      und0.select(col("a")).distinct().count()
-    def bc(df: DataFrame): DataFrame =
-      if (nNodes <= broadcastNodeLimit) broadcast(df)
-      else df.hint("shuffle_hash")
-    var converged = nEdges == 0L
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val keep = und.groupBy("a").agg(count(lit(1)).as("deg"))
+    val und = symmetricEdges(edges).localCheckpoint(true)
+    // the keep frame is node-sized: guard it by the node count, measured
+    // once off the initial checkpoint at its first use
+    lazy val nNodes = und.select(col("a")).distinct().count()
+    val (core, settled) = Loops.fixpoint(und, maxRounds)(_.count()) { cur =>
+      val keep = cur.groupBy("a").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("a")
-      val next = und.join(bc(keep), Seq("a"), "left_semi")
-        .join(bc(keep.select(col("a").as("b"))), Seq("b"), "left_semi")
-        .localCheckpoint(true)
-      val nNext = next.count()
-      // monotone: rounds only remove, so equal counts == true fixpoint
-      converged = nNext == nEdges
-      und = next; nEdges = nNext
-      round += 1
+      cur.join(bcOr(keep, nNodes), Seq("a"), "left_semi")
+        .join(bcOr(keep.select(col("a").as("b")), nNodes), Seq("b"),
+          "left_semi")
     }
-    und.groupBy(col("a").as("node")).agg(count(lit(1)).as("core_deg"))
+    if (!settled) throw new IllegalStateException(
+      s"kCore peeling did not settle in $maxRounds rounds")
+    core.groupBy(col("a").as("node")).agg(count(lit(1)).as("core_deg"))
   }
 
   /** FULL coreness decomposition — every node's core NUMBER (the
@@ -640,55 +616,38 @@ object Graph {
     * #distinct-current-c rows (≤ √(2m) once converged), map-side
     * combined, window-sorted and spillable, instead of one 10⁷-element
     * collect_list row (the straggler/OOM a skewed 100 TB graph would
-    * hit). Convergence is one changed-count scalar per round; state
-    * (node, c) checkpoints per round (loop-carried). */
-  def coreness(edges: DataFrame, maxIters: Int = 30,
-               broadcastNodeLimit: Long = 4000000L): DataFrame = {
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .union(edges.select(col("dst").as("a"), col("src").as("b")))
-      .distinct()
-      .repartition(col("b")).localCheckpoint(true)
-    var c = und.groupBy(col("a").as("node"))
+    * hit). Convergence is one Σc scalar per round (per-node c is
+    * monotone non-increasing, so an unchanged Σc is a true fixpoint);
+    * state (node, c) checkpoints per round (loop-carried).
+    *
+    * `maxIters` is a RESULT contract, like [[bfs]]'s `maxDepth`: at the
+    * cap the current (upper-bound) c is returned, not an error —
+    * gr_coreness pins it to the oracle's 10-round unroll. */
+  def coreness(edges: DataFrame, maxIters: Int = 30): DataFrame = {
+    val und = symmetricEdges(edges).repartition(col("b")).localCheckpoint(true)
+    val c0 = und.groupBy(col("a").as("node"))
       .agg(count(lit(1)).cast("int").as("c"))
       .localCheckpoint(true)
-    // r15 (the LPA lesson, previously un-applied here): the per-round
-    // c-frame join compiles through localCheckpoint's .rdd route where
-    // AQE never runs, so the un-hinted join fell back to sort-merge and
-    // re-sorted the b-partitioned edge frame EVERY round. The c frame
-    // is node-sized → guarded broadcast (count taken once off the
-    // checkpoint), shuffle_hash degrade past the limit.
-    val nNodes = c.count()
-    def bc(df: DataFrame): DataFrame =
-      if (nNodes <= broadcastNodeLimit) broadcast(df)
-      else df.hint("shuffle_hash")
-    var it = 0
-    var changed = true
-    // per-node c is MONOTONE non-increasing, so an unchanged Σc is a
-    // true fixpoint witness — one scalar agg per round, no compare join
-    var prevSum = c.agg(sum("c")).head().getLong(0)
-    while (changed && it < maxIters) {
-      // h = max_w min(w, C_w) over the neighbor-value histogram, where
-      // C_w = #neighbors with value ≥ w (proof: count(values ≥ k) ≥ k
-      // holds for k = min(w, C_w) at every distinct w, and the max over
-      // thresholds is attained at a distinct value)
-      val wCum = org.apache.spark.sql.expressions.Window
-        .partitionBy("a").orderBy(col("cb").desc)
-        .rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, 0)
-      val next = und
-        .join(bc(c.select(col("node").as("b"), col("c").as("cb"))), Seq("b"))
+    val nNodes = c0.count()
+    // h = max_w min(w, C_w) over the neighbor-value histogram, where
+    // C_w = #neighbors with value ≥ w (proof: count(values ≥ k) ≥ k
+    // holds for k = min(w, C_w) at every distinct w, and the max over
+    // thresholds is attained at a distinct value)
+    val wCum = org.apache.spark.sql.expressions.Window
+      .partitionBy("a").orderBy(col("cb").desc)
+      .rowsBetween(org.apache.spark.sql.expressions.Window
+        .unboundedPreceding, 0)
+    val (c, _) = Loops.fixpoint(c0, maxIters)(
+        _.agg(sum("c")).head().getLong(0)) { cur =>
+      und
+        .join(bcOr(cur.select(col("node").as("b"), col("c").as("cb")),
+          nNodes), Seq("b"))
         .groupBy(col("a"), col("cb"))
         .agg(count(lit(1)).as("n"))
         .withColumn("cw", sum("n").over(wCum))
         .groupBy(col("a").as("node"))
         .agg(max(least(col("cb").cast("long"), col("cw")))
           .cast("int").as("c"))
-        .localCheckpoint(true)
-      val sumC = next.agg(sum("c")).head().getLong(0)
-      changed = sumC != prevSum
-      prevSum = sumC
-      c = next
-      it += 1
     }
     c.groupBy("c").agg(count(lit(1)).as("n_nodes"))
       .withColumnRenamed("c", "coreness")
@@ -712,10 +671,7 @@ object Graph {
     // the doubled edge frame feeds THREE consumers (degree rollup + both
     // endpoint joins): materialize it once — an uncut lineage would
     // replicate the upstream edge mining into every consumer subtree
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .union(edges.select(col("dst").as("a"), col("src").as("b")))
-      .distinct()
-      .localCheckpoint(true)
+    val und = symmetricEdges(edges).localCheckpoint(true)
     val deg = und.groupBy("a").agg(count(lit(1)).as("deg"))
     val s = und
       .join(deg.select(col("a"), col("deg").as("dx")), Seq("a"))
@@ -748,54 +704,27 @@ object Graph {
     * loop-carried, so it localCheckpoints per round — the frontier
     * collapses geometrically on small-world graphs, so rounds get
     * cheaper, and depth is a fixed constant (the oracle unrolls the
-    * same bound via a depth-capped recursive CTE). */
-  def bfs(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 4,
-          broadcastNodeLimit: Long = 4000000L): DataFrame = {
-    // pre-partition the (static) edge list on src before checkpointing:
-    // LogicalRDD keeps the partitioning, so every round's frontier⋈edges
-    // join shuffles only the frontier — the edge list never moves again
-    val ed = edges.select("src", "dst").distinct()
-      .repartition(col("src")).localCheckpoint(true)
-    // guarded broadcast-or-degrade (r16, the betweenness forward-pass
-    // idiom): frontier and settled are node-sized and their row counts
-    // are ALREADY measured by the loop's own termination test, so the
-    // guard is free. Broadcasting them leaves the checkpointed edge
-    // frame with NO per-round Exchange or Sort — a checkpoint carries
-    // no outputPartitioning into Catalyst, so the un-hinted loop joins
-    // compiled to per-round sort-merge over the edge frame. Past the
-    // limit the hint degrades to shuffle_hash, never a driver OOM.
-    def bcOr(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastNodeLimit) broadcast(df) else df.hint("shuffle_hash")
-    // per-round DELTA checkpoints (not the whole settled union): each
-    // round materializes only its newly-reached nodes; settled stays a
-    // lazy union of the already-checkpointed levels
-    val lvl0 = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint(true)
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](lvl0)
-    var frontier = lvl0.select("node")
-    var settled = frontier
-    var frontierSize = lvl0.count()
-    var settledSize = frontierSize
-    var depth = 0
-    while (depth < maxDepth && frontierSize > 0) {
-      depth += 1
-      val next = bcOr(frontier, frontierSize)
-        .join(ed, col("node") === ed("src"))
+    * same bound via a depth-capped recursive CTE), so `maxDepth` is a
+    * RESULT contract: reaching it is the answer, not an error. */
+  def bfs(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 4): DataFrame = {
+    val ed = partitionedEdges(edges)
+    val (levels, _) = Loops.frontier(
+        seeds.select(col("node")).distinct().withColumn("dist", lit(0)),
+        Seq("node"), maxDepth) { (f, depth) =>
+      f.join(ed, col("node") === ed("src"))
         .select(col("dst").as("node")).distinct()
-        .join(bcOr(settled, settledSize), Seq("node"), "left_anti")
         .withColumn("dist", lit(depth))
-        .localCheckpoint(true)
-      frontierSize = next.count()
-      if (frontierSize > 0) {
-        levels += next
-        settled = settled.unionByName(next.select("node"))
-        settledSize += frontierSize
-        frontier = next.select("node")
-      }
     }
     levels.reduce(_ unionByName _)
       .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
   }
+
+  /** The static edge list, deduplicated, hash-partitioned on src and
+    * checkpointed once: every frontier round probes it with a guarded
+    * broadcast frontier, so it never moves again. */
+  private def partitionedEdges(edges: DataFrame): DataFrame =
+    edges.select("src", "dst").distinct()
+      .repartition(col("src")).localCheckpoint(true)
 
   /** Landmark HARMONIC closeness centrality — "which nodes sit nearest
     * to everything" — estimated from `nLandmarks` pivot nodes instead of
@@ -818,47 +747,19 @@ object Graph {
     * frame (only the frontier ever moves), settled (node, lm, dist)
     * out. */
   private def landmarkDistances(edges: DataFrame, nLandmarks: Int,
-                                maxDepth: Int,
-                                broadcastNodeLimit: Long = 4000000L): DataFrame = {
-    val ed = edges.select("src", "dst").distinct()
-      .repartition(col("src")).localCheckpoint(true)
+                                maxDepth: Int): DataFrame = {
+    val ed = partitionedEdges(edges)
     val nodes = ed.select(col("src").as("node"))
       .unionByName(ed.select(col("dst").as("node"))).distinct()
     val lms = nodes
       .orderBy(md5(col("node").cast("string")), col("node"))
       .limit(nLandmarks)
       .select(col("node"), col("node").as("lm"))
-    // guarded broadcast + per-round DELTA checkpoints (r16 — the same
-    // betweenness forward-pass idiom as [[bfs]], see there): the
-    // (node, lm) frontier/settled frames are ≤ V·L rows and their
-    // counts ride along for free, so broadcasting them removes every
-    // per-round Exchange/Sort of the checkpointed edge frame, and each
-    // round materializes only its delta instead of the whole settled
-    // union. Past the limit the hint degrades to shuffle_hash.
-    def bcOr(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastNodeLimit) broadcast(df) else df.hint("shuffle_hash")
-    val lvl0 = lms.withColumn("dist", lit(0)).localCheckpoint(true)
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame](lvl0)
-    var frontier = lvl0.select("node", "lm")
-    var settled = frontier
-    var frontierSize = lvl0.count()
-    var settledSize = frontierSize
-    var depth = 0
-    while (depth < maxDepth && frontierSize > 0) {
-      depth += 1
-      val next = bcOr(frontier, frontierSize)
-        .join(ed, col("node") === ed("src"))
+    val (levels, _) = Loops.frontier(lms.withColumn("dist", lit(0)),
+        Seq("node", "lm"), maxDepth) { (f, depth) =>
+      f.join(ed, col("node") === ed("src"))
         .select(col("dst").as("node"), col("lm")).distinct()
-        .join(bcOr(settled, settledSize), Seq("node", "lm"), "left_anti")
         .withColumn("dist", lit(depth))
-        .localCheckpoint(true)
-      frontierSize = next.count()
-      if (frontierSize > 0) {
-        levels += next
-        settled = settled.unionByName(next.select("node", "lm"))
-        settledSize += frontierSize
-        frontier = next.select("node", "lm")
-      }
     }
     levels.reduce(_ unionByName _)
   }
@@ -926,37 +827,25 @@ object Graph {
     * width is the live (node, neighbor-label) pair count, never the
     * raw edge count. The loop itself stays one lazy plan: each round's
     * labels feed exactly one consumer (the next round). */
-  def labelPropagation(edges: DataFrame, rounds: Int = 3,
-                       broadcastNodeLimit: Long = 4000000L): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val ed = edges.select("src", "dst").distinct().localCheckpoint(true)
     val nodes = ed.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
-    // broadcast-or-degrade guard (r15, the dupClusters pattern): the
-    // per-round label/adopted frames are node-sized, so the broadcast
-    // hint is MEASURED against the node count (one cheap count off the
-    // checkpoint) and degrades to shuffle_hash past the limit (~100 MB
-    // of (long,long) at the 4M default) instead of OOMing at 1e9 nodes
+    // the label/adopted frames are node-sized: guarded hints (one node
+    // count off the checkpoint) so a materializing consumer of this lazy
+    // chain plans the same joins as a lazy one (measured at sf0.1:
+    // cache()+count of the un-hinted chain 4.9 s vs 0.2 s lazy)
     val nNodes = nodes.count()
-    def bc(df: DataFrame): DataFrame =
-      if (nNodes <= broadcastNodeLimit) broadcast(df)
-      else df.hint("shuffle_hash")
     var labels = nodes.withColumn("label", col("node"))
     for (_ <- 1 to rounds) {
-      // the label/adopted frames are node-sized by construction —
-      // EXPLICIT hints (r13), not AQE bets: materializing any
-      // consumer of this chain (cache(), localCheckpoint's .rdd route)
-      // compiles the rounds WITHOUT adaptive execution, where the
-      // un-hinted joins fell back to sort-merge (measured at sf0.1:
-      // cache()+count of the un-hinted chain 4.9 s vs 0.2 s lazy; with
-      // the hints the chain costs the same materialized or lazy)
-      val adopted = ed.join(bc(labels), ed("src") === labels("node"))
+      val adopted = ed.join(bcOr(labels, nNodes), ed("src") === labels("node"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("dst").as("__n"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
           .getField("l").as("__adopt"))
       // keep-previous on nodes with no in-edges (vacuous on a
       // symmetric graph, load-bearing on a general directed one)
-      labels = labels.join(bc(adopted),
+      labels = labels.join(bcOr(adopted, nNodes),
           labels("node") === col("__n"), "left")
         .select(col("node"),
           coalesce(col("__adopt"), col("label")).as("label"))
@@ -1014,44 +903,13 @@ object Graph {
     * sit at lcc 0 — exactly what this histogram exposes (the shape that
     * decides whether community detection is worth running).
     *
-    * Scale shape: triangles enumerate ONCE via the same degree-oriented
-    * wedge join as triangleStats (each triangle materializes exactly
-    * once, hub wedge blowup bounded by orientation), then each triangle
+    * Scale shape: triangles enumerate ONCE via [[orientedTriangles]],
+    * then each triangle
     * feeds its three corners into a node-keyed partial-agg count —
     * integers end to end; the one double division per node happens on
     * exact longs, so bucket edges are engine-stable. */
   def localClustering(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    val deg = und.select(col("a").as("node"))
-      .unionAll(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .select(
-        when(col("da") < col("db") ||
-             (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("v"),
-            col("da").as("du"), col("db").as("dv")))
-          .otherwise(struct(col("b").as("u"), col("a").as("v"),
-            col("db").as("du"), col("da").as("dv")))
-          .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"),
-        col("e.du").as("du"), col("e.dv").as("dv"))
-      .localCheckpoint(true)
-    val o2 = oriented.select(col("u").as("u2"), col("v").as("y"),
-      col("dv").as("dy"))
-    val tris = oriented
-      .join(o2, col("u") === col("u2") &&
-        (col("dv") < col("dy") ||
-          (col("dv") === col("dy") && col("v") < col("y"))))
-      .select(col("u"), col("v").as("x"), col("y"))
-      .join(oriented.select(col("u").as("x"), col("v").as("y")),
-        Seq("x", "y"), "left_semi")
+    val (_, deg, tris) = orientedTriangles(edges)
     val perNode = tris.select(col("u").as("node"))
       .unionAll(tris.select(col("x").as("node")))
       .unionAll(tris.select(col("y").as("node")))
@@ -1087,11 +945,7 @@ object Graph {
     * are exact-integer conditional counts; one division per ladder rung
     * at the end. */
   def richClub(edges: DataFrame, maxK: Int = 64): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    val und = canonicalEdges(edges)
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -1123,42 +977,12 @@ object Graph {
     * [[jaccardLinks]] (which scores NON-edges). Output: the
     * embeddedness histogram plus the bridge share riding every row.
     *
-    * Scale shape: same one-pass oriented triangle enumeration; each
+    * Scale shape: one pass of [[orientedTriangles]]; each
     * triangle credits its three edges (canonical a<b keys) in one
     * partial-agg rollup; the left join back to the edge list charges
     * untriangled edges zero. Exact integers throughout. */
   def edgeEmbeddedness(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    val deg = und.select(col("a").as("node"))
-      .unionAll(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .select(
-        when(col("da") < col("db") ||
-             (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("v"),
-            col("da").as("du"), col("db").as("dv")))
-          .otherwise(struct(col("b").as("u"), col("a").as("v"),
-            col("db").as("du"), col("da").as("dv")))
-          .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"),
-        col("e.du").as("du"), col("e.dv").as("dv"))
-      .localCheckpoint(true)
-    val o2 = oriented.select(col("u").as("u2"), col("v").as("y"),
-      col("dv").as("dy"))
-    val tris = oriented
-      .join(o2, col("u") === col("u2") &&
-        (col("dv") < col("dy") ||
-          (col("dv") === col("dy") && col("v") < col("y"))))
-      .select(col("u"), col("v").as("x"), col("y"))
-      .join(oriented.select(col("u").as("x"), col("v").as("y")),
-        Seq("x", "y"), "left_semi")
+    val (und, _, tris) = orientedTriangles(edges)
     // each triangle's three edges, re-canonicalized to (a < b)
     val perEdge = tris.select(least(col("u"), col("x")).as("a"),
         greatest(col("u"), col("x")).as("b"))
@@ -1195,11 +1019,7 @@ object Graph {
     * the common-count is a partial agg on the pair key; L₃ is one
     * degree join over the edge frame. All counts exact longs. */
   def bipartiteSquares(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    val und = canonicalEdges(edges)
     val degA = und.groupBy("a").agg(count(lit(1)).as("da"))
     val degB = und.groupBy("b").agg(count(lit(1)).as("db"))
     // same-side (a-side) pairs through a shared b-side neighbor
@@ -1259,10 +1079,8 @@ object Graph {
     * bit-identical on any engine and partitioning (σ is exact by
     * construction). One edge join + rollup per level, each way. */
   def betweennessSampled(edges: DataFrame, nSources: Int = 4,
-                         maxDepth: Int = 6,
-                         broadcastNodeLimit: Long = 4000000L): DataFrame = {
-    val ed = edges.select("src", "dst").distinct()
-      .repartition(col("src")).localCheckpoint(true)
+                         maxDepth: Int = 6): DataFrame = {
+    val ed = partitionedEdges(edges)
     val nodes = ed.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
     val sources = nodes
@@ -1270,55 +1088,21 @@ object Graph {
         col("node"))
       .limit(nSources)
       .select(col("node").as("s"))
-    // forward: one frame per BFS level, (s, node, sigma); per-level row
-    // counts ride along (already measured as frontierSize) so the
-    // backward pass can guard its broadcast for free
-    val levels = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val levelSizes = scala.collection.mutable.ArrayBuffer[Long]()
-    levels += sources.select(col("s"), col("s").as("node"))
-      .withColumn("sigma", lit(1L)).localCheckpoint(true)
-    var settled = levels.head.select("s", "node")
-    var depth = 0
-    var frontierSize = levels.head.count()
-    var settledSize = frontierSize
-    levelSizes += frontierSize
-    // guarded broadcast-or-degrade for every per-round small side
-    // (r16, the lpa/scc/coreness idiom finally applied to THIS loop):
-    // the frontier/settled sizes are already counted each round (the
-    // loop's own termination test), so the guard is free. Broadcasting
-    // the ≤ K·V frontier leaves the checkpointed edge frame with NO
-    // per-round Exchange at all — the r15 shuffle_hash hint still
-    // re-shuffled ~1.2M edge rows every round because a checkpoint
-    // carries no outputPartitioning into Catalyst (measured isolated
-    // sf0.1: 7.8 → 4.4 s steady-state, bit-identical output). Past
-    // `broadcastNodeLimit` rows the hint degrades to shuffle_hash —
-    // the r15 scale guard, never a driver OOM.
-    def bcOr(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastNodeLimit) broadcast(df) else df.hint("shuffle_hash")
-    while (depth < maxDepth && frontierSize > 0) {
-      depth += 1
-      // σ-aggregate BEFORE the settled anti-join (r14, probe-measured
-      // 10-12% whole-query at sf0.1 in both run orders): the anti-join
-      // then filters the (s, node)-aggregated frame — ≤ frontier width
-      // — instead of the full edge fan-out. Result-identical: the
-      // anti-join drops whole keys and per-key σ sums don't depend on
-      // filter order.
-      val next = bcOr(levels.last, frontierSize)
-        .join(ed, col("node") === ed("src"))
+    // forward: one frame per BFS level, (s, node, sigma), with its row
+    // count, which guards the backward pass's broadcasts for free. σ
+    // aggregates BEFORE the settled anti-join (probe-measured 10-12%
+    // whole-query at sf0.1): the
+    // anti-join then filters the (s, node)-aggregated frame — ≤ frontier
+    // width — instead of the full edge fan-out; it drops whole keys, so
+    // per-key σ sums don't depend on the order.
+    val (levels, levelSizes) = Loops.frontier(
+        sources.select(col("s"), col("s").as("node"))
+          .withColumn("sigma", lit(1L)),
+        Seq("s", "node"), maxDepth) { (f, _) =>
+      f.join(ed, col("node") === ed("src"))
         .select(col("s"), col("dst"), col("sigma"))
         .groupBy(col("s"), col("dst").as("node"))
         .agg(sum("sigma").as("sigma"))
-        .join(bcOr(settled, settledSize), Seq("s", "node"), "left_anti")
-        .localCheckpoint(true)
-      frontierSize = next.count()
-      if (frontierSize > 0) {
-        levels += next
-        levelSizes += frontierSize
-        // no re-checkpoint: settled is a union of already-checkpointed
-        // level frames — the next anti-join reads k small cached RDDs
-        settled = settled.unionByName(next.select("s", "node"))
-        settledSize += frontierSize
-      }
     }
     // backward: δ in exact nano-units, deepest level seeds at 0
     var delta = levels.last.select(col("s"), col("node"), lit(0L).as("du"))
@@ -1338,13 +1122,11 @@ object Graph {
       // isolated probe): deepest backward rounds 2.31→1.46 s and
       // 1.75→1.26 s; forward-round variants (broadcast settled, fewer
       // shuffle partitions, 2-level fusion) measured within noise and
-      // were not kept. r15 guard: |w| = the level's row count, already
-      // measured in the forward pass — past broadcastNodeLimit the
-      // hint degrades to shuffle_hash instead of OOMing at scale
+      // were not kept. Guarded by the level's row count from the
+      // forward pass.
       val bcW = bcOr(w, levelSizes(l + 1))
-      // v is one level's ≤ K·width rows — broadcast it too (r16, same
-      // guard), so the backward edge join also leaves the edge frame
-      // un-exchanged; past the limit both degrade to shuffle_hash
+      // v is one level's ≤ K·width rows — broadcast it too, so the
+      // backward edge join also leaves the edge frame un-exchanged
       val terms = bcOr(v, levelSizes(l)).join(ed, col("v") === ed("src"))
         .select(col("s"), col("v"), col("sv"), col("dst").as("w"))
         .join(bcW, Seq("s", "w"))
@@ -1386,19 +1168,18 @@ object Graph {
     *
     * Scale shape: relaxation is the pageRank join pattern — labels ⋈
     * edges into a (dst, min) partial agg, per-round localCheckpoint
-    * (the Graph.scala loop discipline); the convergence probes are
+    * (the Graph.scala loop discipline); a relaxation has settled when
+    * its Σm repeats (labels only decrease), and the pass probes are
     * node-sized counts on a shrinking frame. Rounds = active-subgraph
     * diameter per pass, passes = 1 + (SCCs whose forward-min and
-    * backward-min disagree) — bounded by `maxPasses` with a hard
-    * IllegalStateException rather than a silently partial answer.
+    * backward-min disagree) — bounded by `maxRounds` and `maxPasses`
+    * with a hard IllegalStateException rather than a silently partial
+    * answer.
     * Output: (scc_id, n_nodes) — scc_id is the component's minimum
     * node id, matching the SQL oracle's closure definition
     * scc(u) = min{v : u→*v ∧ v→*u}. */
   def stronglyConnectedComponents(edges: DataFrame, maxPasses: Int = 30,
-                                  maxRounds: Int = 60,
-                                  broadcastNodeLimit: Long = 4000000L)
-      : DataFrame = {
-    val spark = edges.sparkSession
+                                  maxRounds: Int = 60): DataFrame = {
     val ed0 = edges.select("src", "dst")
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
     var active = ed0.select(col("src").as("node"))
@@ -1407,15 +1188,11 @@ object Graph {
     var ed = ed0
     val results = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var pass = 0
-    // broadcast-or-degrade guard (r15, the dupClusters pattern): every
-    // hinted frame below (label probes, pulled mins, classified set) is
-    // bounded by the ACTIVE node count, re-measured per pass off the
-    // checkpoint (the active set shrinks as SCCs peel off); past the
-    // limit the hint degrades to shuffle_hash instead of OOMing at scale
+    // every hinted frame below (label probes, pulled mins, classified
+    // set) is bounded by the ACTIVE node count, re-measured per pass off
+    // the checkpoint (the active set shrinks as SCCs peel off)
     var nActive = active.count()
-    def bc(df: DataFrame): DataFrame =
-      if (nActive <= broadcastNodeLimit) broadcast(df)
-      else df.hint("shuffle_hash")
+    def bc(df: DataFrame): DataFrame = bcOr(df, nActive)
     while (nActive > 0 && pass < maxPasses) {
       pass += 1
       // min-label relaxation to fixpoint; rev=false propagates labels
@@ -1425,28 +1202,17 @@ object Graph {
         val e = if (reverse)
           ed.select(col("dst").as("from"), col("src").as("to"))
         else ed.select(col("src").as("from"), col("dst").as("to"))
-        var lab = active.withColumn("m", col("node"))
-          .localCheckpoint(true)
-        var round = 0
-        var changed = 1L
-        while (changed > 0 && round < maxRounds) {
-          round += 1
-          // node-sized frames ride EXPLICIT hints (r13, the LPA
-          // lesson): per-round localCheckpoints compile without AQE,
-          // where un-hinted joins fell back to sort-merge per round
+        val (lab, settled) = Loops.fixpoint(
+            active.withColumn("m", col("node")).localCheckpoint(true),
+            maxRounds)(Loops.decimalSum(_, "m")) { lab =>
           val pulled = e.join(bc(lab.select(col("node").as("to"),
               col("m").as("mt"))), Seq("to"))
             .groupBy(col("from").as("node")).agg(min("mt").as("mp"))
-          val next = lab.join(bc(pulled), Seq("node"), "left")
+          lab.join(bc(pulled), Seq("node"), "left")
             .select(col("node"),
               least(col("m"), coalesce(col("mp"), col("m"))).as("m"))
-            .localCheckpoint(true)
-          changed = next.join(bc(lab.select(col("node"),
-              col("m").as("m0"))), Seq("node"))
-            .filter(col("m") =!= col("m0")).count()
-          lab = next
         }
-        if (changed > 0) throw new IllegalStateException(
+        if (!settled) throw new IllegalStateException(
           s"SCC relaxation did not settle in $maxRounds rounds")
         lab
       }
@@ -1486,8 +1252,7 @@ object Graph {
     * ⌈log₂ n⌉ rounds, each one labels⋈edges join + a component-sized
     * rollup. Not SQL-expressible (union-find state) → rows-only
     * surface; the brute-force Kruskal twin lives in the spec. */
-  def minimumSpanningForest(edges: DataFrame, maxRounds: Int = 40,
-                            broadcastNodeLimit: Long = 4000000L)
+  def minimumSpanningForest(edges: DataFrame, maxRounds: Int = 40)
       : DataFrame = {
     // canonical undirected edges with a strict total order on weight
     val canon = edges
@@ -1503,25 +1268,17 @@ object Graph {
       .localCheckpoint(true)
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("comp", col("node")).localCheckpoint(true)
-    // broadcast-or-degrade guard (r15, the dupClusters pattern): label
-    // probes and the relabel map are node-sized (the node set is
-    // constant across rounds — only the comp column changes), so the
-    // count is taken ONCE off the checkpoint and the hint degrades to
-    // shuffle_hash past the limit instead of OOMing at 1e9 nodes
+    // label probes and the relabel map are node-sized (the node set is
+    // constant across rounds — only the comp column changes): one count
+    // off the checkpoint guards them all
     val nNodes = labels.count()
-    def bc(df: DataFrame): DataFrame =
-      if (nNodes <= broadcastNodeLimit) broadcast(df)
-      else df.hint("shuffle_hash")
+    def bc(df: DataFrame): DataFrame = bcOr(df, nNodes)
     var picked = canon.filter(lit(false)).select("s", "t", "w")
     var round = 0
     var remaining = 1L
     while (remaining > 0 && round < maxRounds) {
       round += 1
       val lab = labels
-      // node-sized label probes are EXPLICIT hints (r13, the LPA
-      // lesson): every round materializes through localCheckpoint's
-      // .rdd route where AQE never runs, so un-hinted probes fell back
-      // to sort-merge and re-sorted the edge frame each round
       val crossing = sym
         .join(bc(lab.select(col("node").as("u"), col("comp").as("cu"))),
           Seq("u"))

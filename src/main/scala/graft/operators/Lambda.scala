@@ -27,12 +27,17 @@ object Lambda {
       .when(valueCol < 300, "level_1")
       .otherwise("level_2")
 
-  /** Alert classification + distribution per event type. */
+  /** Alert classification + distribution per event type. The mean is
+    * the exact [[Exact.avgValue4dp]] (integer cents, one half-up integer
+    * division), so a group whose mean falls on a 4dp half rounds the same
+    * in any row order; `round(avg(value), 4)` did not (seed 10:
+    * 352.64125 came out as 352.6413 or 352.6412). */
   def alertClassify(events: DataFrame): DataFrame =
     events
       .withColumn("alert_level", alertLevel(col("value")))
       .groupBy("event_type", "alert_level")
-      .agg(count(lit(1)).as("n"), round(avg("value"), 4).as("avg_value"))
+      .agg(count(lit(1)).as("n"),
+        (Exact.avgValue4dp.cast("double") / lit(1e4)).as("avg_value"))
 
   /** Batch layer: per-day per-type profiles (mean + stddev), the
     * reference's monthly seasonal profile at event-data granularity. */

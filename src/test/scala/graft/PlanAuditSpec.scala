@@ -759,7 +759,7 @@ class PlanAuditSpec extends SparkSpec {
   test("src_manifest_skip: pruned read scans a subset and combines map-side") {
     val df = SparkEntry.queries("src_manifest_skip")(spark, sf)
     val lake = spark.read.parquet(
-      s"/root/repo/target/graft_io/${new java.io.File(sf).getName}/manifest_lineitem")
+      s"target/graft_io/${new java.io.File(sf).getName}/manifest_lineitem")
     assert(df.inputFiles.nonEmpty &&
       df.inputFiles.length < lake.inputFiles.length,
       s"manifest must skip files: read ${df.inputFiles.length} of ${lake.inputFiles.length}")

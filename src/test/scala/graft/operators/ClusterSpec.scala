@@ -33,13 +33,15 @@ class ClusterSpec extends SparkSpec {
   test("dupClusters shuffled-label mode (over the broadcast limit) matches broadcast mode") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 21L)).toDF("d1", "d2")
-    // broadcastLabelLimit = 0 forces every per-round join onto the
-    // shuffled path — the auto-degrade route for huge label frames —
+    // a session broadcast limit of 0 forces every per-round join onto
+    // the shuffled path — the auto-degrade route for huge label frames —
     // and driverEdgeLimit = 0 keeps the graph OFF the union-find fast
     // path so the distributed rounds are what's under test
-    val got = Dedup.dupClusters(pairs, broadcastLabelLimit = 0L,
-      driverEdgeLimit = 0L).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    spark.conf.set(graft.GraftConf.BroadcastNodeLimitKey, "0")
+    val got =
+      try Dedup.dupClusters(pairs, driverEdgeLimit = 0L).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally spark.conf.unset(graft.GraftConf.BroadcastNodeLimitKey)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
@@ -52,6 +54,13 @@ class ClusterSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n)
     assert(got.values.forall(_ == 1L))
+  }
+
+  test("dupClusters: a distributed run that has not settled at maxIter throws") {
+    val chain = (1 until 40).map(i => (i.toLong, (i + 1).toLong)).toDF("d1", "d2")
+    val msg = intercept[IllegalStateException](
+      Dedup.dupClusters(chain, maxIter = 1, driverEdgeLimit = 0L)).getMessage
+    assert(msg.contains("dupClusters") && msg.contains("1 rounds"), msg)
   }
 
   test("driver union-find fast path labels exactly like the distributed rounds") {

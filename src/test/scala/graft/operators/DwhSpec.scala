@@ -255,7 +255,7 @@ class DwhSpec extends SparkSpec {
   }
 
   test("forgetKeys erases only the requested keys, rewrites only hit partitions, idempotent") {
-    val dir = s"/root/repo/target/graft_io/forget_${System.nanoTime()}"
+    val dir = s"target/graft_io/forget_${System.nanoTime()}"
     // day=d1: user 1 + user 2; day=d2: user 2 only (fully emptied);
     // day=d3: user 3 only (untouched)
     Seq((1L, "d1", "a"), (2L, "d1", "b"), (2L, "d2", "c"),
@@ -296,7 +296,7 @@ class DwhSpec extends SparkSpec {
   }
 
   test("retentionSweep drops exactly the pre-cutoff partitions; survivors untouched") {
-    val dir = s"/root/repo/target/graft_io/retain_${System.nanoTime()}"
+    val dir = s"target/graft_io/retain_${System.nanoTime()}"
     Seq((1L, "2024-01-01"), (2L, "2024-01-01"), (3L, "2024-01-05"),
       (4L, "2024-01-08"), (5L, "2024-01-09"))
       .toDF("id", "day")

@@ -507,11 +507,11 @@ class GraphSpec extends SparkSpec {
       "bridge share rides every row")
   }
 
-  // r15: the five graph round-loops guard their node-sized broadcast
-  // hints behind a measured node count (the dupClusters pattern —
-  // broadcast under broadcastNodeLimit, shuffle_hash degrade above).
-  // limit = 0 forces every loop onto the degrade path; results must be
-  // IDENTICAL — the guard changes join strategy, never answers.
+  // The graph round-loops guard their node-sized broadcast hints
+  // behind a measured node count (Loops.bcOr — broadcast under the
+  // session's spark.graft.broadcastNodeLimit, shuffle_hash degrade
+  // above). Limit 0 forces every loop onto the degrade path; results
+  // must be IDENTICAL — the guard changes join strategy, never answers.
   test("broadcast guard: degrade path (limit 0) is result-identical " +
     "for LPA, SCC, MST, conductance, betweenness") {
     // two triangles joined by a bridge + a separate directed 2-cycle
@@ -519,37 +519,106 @@ class GraphSpec extends SparkSpec {
       (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
+    def degraded[T](body: => T): T = {
+      spark.conf.set(graft.GraftConf.BroadcastNodeLimitKey, "0")
+      try body finally spark.conf.unset(graft.GraftConf.BroadcastNodeLimitKey)
+    }
 
     val lpaHint = Graph.labelPropagation(und)
-    val lpaDeg = Graph.labelPropagation(und, broadcastNodeLimit = 0L)
+    val lpaDeg = degraded(Graph.labelPropagation(und))
     assert(rows(lpaHint) == rows(lpaDeg), "LPA degrade mismatch")
+    // the session limit really switches the strategy
+    assert(lpaHint.queryExecution.sparkPlan.toString
+      .contains("BroadcastHashJoin"))
+    assert(!lpaDeg.queryExecution.sparkPlan.toString
+      .contains("BroadcastHashJoin"))
 
     assert(rows(Graph.conductance(und, lpaHint)) ==
-      rows(Graph.conductance(und, lpaDeg, broadcastNodeLimit = 0L)),
+      degraded(rows(Graph.conductance(und, lpaDeg))),
       "conductance degrade mismatch")
 
     val dir = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
       (5L, 4L)).toDF("src", "dst")
     assert(rows(Graph.stronglyConnectedComponents(dir)) ==
-      rows(Graph.stronglyConnectedComponents(dir,
-        broadcastNodeLimit = 0L)), "SCC degrade mismatch")
+      degraded(rows(Graph.stronglyConnectedComponents(dir))),
+      "SCC degrade mismatch")
 
     val wund = Seq((1L, 2L, 3L), (2L, 3L, 1L), (1L, 3L, 2L),
       (3L, 4L, 5L), (4L, 5L, 1L), (4L, 6L, 2L)).toDF("src", "dst", "w")
     assert(rows(Graph.minimumSpanningForest(wund)) ==
-      rows(Graph.minimumSpanningForest(wund, broadcastNodeLimit = 0L)),
+      degraded(rows(Graph.minimumSpanningForest(wund))),
       "MST degrade mismatch")
 
     assert(rows(Graph.betweennessSampled(und, nSources = 7)) ==
-      rows(Graph.betweennessSampled(und, nSources = 7,
-        broadcastNodeLimit = 0L)), "betweenness degrade mismatch")
+      degraded(rows(Graph.betweennessSampled(und, nSources = 7))),
+      "betweenness degrade mismatch")
 
     assert(rows(Graph.coreness(und)) ==
-      rows(Graph.coreness(und, broadcastNodeLimit = 0L)),
+      degraded(rows(Graph.coreness(und))),
       "coreness degrade mismatch")
 
     assert(rows(Graph.kCore(und, k = 2)) ==
-      rows(Graph.kCore(und, k = 2, broadcastNodeLimit = 0L)),
+      degraded(rows(Graph.kCore(und, k = 2))),
       "kCore degrade mismatch")
+
+    assert(rows(Graph.personalizedPageRank(und)) ==
+      degraded(rows(Graph.personalizedPageRank(und))),
+      "ppr degrade mismatch")
+
+    val seeds = Seq(1L).toDF("node")
+    assert(rows(Graph.bfs(und, seeds)) ==
+      degraded(rows(Graph.bfs(und, seeds))), "bfs degrade mismatch")
+
+    assert(rows(Graph.harmonicCentrality(und, nLandmarks = 6)) ==
+      degraded(rows(Graph.harmonicCentrality(und, nLandmarks = 6))),
+      "harmonic degrade mismatch")
+  }
+
+  // Run-to-fixpoint loops fail loudly at their cap instead of returning
+  // a partial answer; the message names the operator and the cap.
+  private def capFailure(body: => Any): String =
+    intercept[IllegalStateException](body).getMessage
+
+  test("kCore: peeling that has not settled at maxRounds throws") {
+    // a path peels one endpoint pair per round at k = 2
+    val path = undirected((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    val msg = capFailure(Graph.kCore(path, k = 2, maxRounds = 1).collect())
+    assert(msg.contains("kCore") && msg.contains("1 rounds"), msg)
+    assert(Graph.kCore(path, k = 2, maxRounds = 4).count() == 0L)
+  }
+
+  test("coreness: maxIters is a result contract, not a convergence cap") {
+    // a pendant chain off a triangle needs several H-index rounds; one
+    // round returns the capped (upper-bound) values instead of throwing
+    val g = undirected((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
+      (5L, 6L))
+    val capped = Graph.coreness(g, maxIters = 1).collect()
+      .map(r => r.getAs[Int]("coreness") -> r.getAs[Long]("n_nodes")).toMap
+    assert(capped.values.sum == 6L)
+  }
+
+  test("SCC: relaxation and peeling that have not settled at their caps throw") {
+    // 1 → 2 → 3 → 4 → 1 needs several relaxation rounds
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
+    val relax = capFailure(
+      Graph.stronglyConnectedComponents(cycle, maxRounds = 1).collect())
+    assert(relax.contains("SCC relaxation") && relax.contains("1 rounds"),
+      relax)
+    // {1,2} peels in pass 1; {3,4} is backward-reachable from 1, so it
+    // only classifies in pass 2
+    val two = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L), (4L, 3L))
+      .toDF("src", "dst")
+    val peel = capFailure(
+      Graph.stronglyConnectedComponents(two, maxPasses = 1).collect())
+    assert(peel.contains("SCC peeling") && peel.contains("1 passes"), peel)
+    assert(Graph.stronglyConnectedComponents(two, maxPasses = 2).count() == 2L)
+  }
+
+  test("minimumSpanningForest: Borůvka that has not converged at maxRounds throws") {
+    // contraction needs one round to merge and one to find no crossing edge
+    val w = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 3L)).toDF("src", "dst", "w")
+    val msg = capFailure(Graph.minimumSpanningForest(w, maxRounds = 1).collect())
+    assert(msg.contains("Borůvka") && msg.contains("1 rounds"), msg)
+    assert(Graph.minimumSpanningForest(w).count() == 3L)
   }
 }

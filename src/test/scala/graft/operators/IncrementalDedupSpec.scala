@@ -39,7 +39,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("incrementalDedupLsh against a stored index agrees on the synthetic corpus") {
-    val dir = s"/root/repo/target/graft_io/incdedup_${System.nanoTime()}"
+    val dir = s"target/graft_io/incdedup_${System.nanoTime()}"
     IncrementalDedup.buildDedupIndex(corpus, dir)
     val admitted = IncrementalDedup.incrementalDedupLsh(spark, batch, dir)
       .collect().map(_.getLong(0)).sorted
@@ -58,7 +58,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val oldDocs = all.filter(col("doc_id") % 5 =!= 0)
     val exact = IncrementalDedup.incrementalDedup(newDocs, oldDocs)
       .collect().map(_.getLong(0)).toSet
-    val dir = s"/root/repo/target/graft_io/incdedup_real_${System.nanoTime()}"
+    val dir = s"target/graft_io/incdedup_real_${System.nanoTime()}"
     IncrementalDedup.buildDedupIndex(oldDocs, dir)
     val lsh = IncrementalDedup.incrementalDedupLsh(spark, newDocs, dir)
       .collect().map(_.getLong(0)).toSet

@@ -39,6 +39,24 @@ class WindowsLambdaSpec extends SparkSpec {
     assert(df.collect().forall(_.getAs[Long]("n_anomalies") > 0))
   }
 
+  test("alertClassify: a mean on the 4dp half rounds up in every row order") {
+    import spark.implicits._
+    // seven 352.64 + one 352.65: mean 352.64125, exactly on the half
+    val vals = Seq.fill(7)(352.64) :+ 352.65
+    val orders = Seq(vals, vals.reverse, vals.sorted.reverse,
+      scala.util.Random.shuffle(vals))
+    for (o <- orders; parts <- Seq(1, 3, 8)) {
+      val ev = o.map(v => ("click", v)).toDF("event_type", "value")
+        .repartition(parts)
+      val got = Lambda.alertClassify(ev).collect()
+      assert(got.length == 1)
+      assert(got.head.getAs[String]("alert_level") == "level_2")
+      assert(got.head.getAs[Long]("n") == 8L)
+      assert(got.head.getAs[Double]("avg_value") == 352.6413,
+        s"order $o in $parts partitions gave ${got.head}")
+    }
+  }
+
   test("slidingWindowAgg: each event lands in exactly two 6h/3h windows") {
     val total = Lambda.slidingWindowAgg(Tables.events(spark, sf))
       .agg(sum("n")).first().getLong(0)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class LakeSpec extends SparkSpec {
 
   test("compact collapses a fragmented lake dir without losing rows") {
-    val dir = s"/root/repo/target/graft_io/compact_test"
+    val dir = s"target/graft_io/compact_test"
     val li = Tables.lineitem(spark, sf)
     li.repartition(64).write.mode("overwrite").parquet(dir) // fragment: 64 files
     def parquetFiles = new java.io.File(dir).listFiles()
@@ -20,7 +20,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("compact preserves a hive-partitioned layout and rejects silent flattening") {
-    val dir = s"/root/repo/target/graft_io/compact_part_test"
+    val dir = s"target/graft_io/compact_part_test"
     val ev = Tables.events(spark, sf)
       .withColumn("day", dayofmonth(col("ts")))
     ev.repartition(8).write.mode("overwrite").partitionBy("day").parquet(dir)
@@ -41,8 +41,8 @@ class LakeSpec extends SparkSpec {
   }
 
   test("manifest read skips non-overlapping files, keeps straddlers, matches a full scan") {
-    val data = "/root/repo/target/graft_io/manifest_test"
-    val meta = "/root/repo/target/graft_io/manifest_test_meta"
+    val data = "target/graft_io/manifest_test"
+    val meta = "target/graft_io/manifest_test_meta"
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     li.repartitionByRange(8, col("l_orderkey"))
       .write.mode("overwrite").parquet(data)
@@ -110,7 +110,7 @@ class LakeSpec extends SparkSpec {
 
   test("schema evolution: merged read surfaces added columns as null on old files") {
     val sup = Tables.supplier(spark, sf)
-    val dir = s"/root/repo/target/graft_io/test/evolve_${System.nanoTime()}"
+    val dir = s"target/graft_io/test/evolve_${System.nanoTime()}"
     val merged = Lake.schemaEvolutionRoundtrip(spark,
       sup.filter(col("s_suppkey") % 2 === 0).select("s_suppkey", "s_name"),
       sup.filter(col("s_suppkey") % 2 === 1)
@@ -138,7 +138,7 @@ class LakeSpec extends SparkSpec {
   test("bloom manifest: point lookup prunes files with zero false negatives") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = s"/root/repo/target/graft_io/bloom_${System.nanoTime()}"
+    val dir = s"target/graft_io/bloom_${System.nanoTime()}"
     // cluster on v so the key sprays: every file's key [min,max]
     // straddles, min/max skipping would keep all 8 files
     (0L until 4000L).map(i => (i % 500, i))
@@ -183,7 +183,7 @@ class LakeSpec extends SparkSpec {
   test("deletion vectors: merge-on-read delete never touches data files") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = s"/root/repo/target/graft_io/dv_test_${System.nanoTime()}"
+    val dir = s"target/graft_io/dv_test_${System.nanoTime()}"
     (1L to 100L).map(i => (i, s"row$i")).toDF("id", "payload")
       .write.parquet(dir)
     def dataFiles = new java.io.File(dir).listFiles()
@@ -205,7 +205,7 @@ class LakeSpec extends SparkSpec {
   test("corruptJsonAudit: the injected mod-97 faults all quarantine, " +
       "every clean line parses, and survivor revenue is exact") {
     import spark.implicits._
-    val dir = s"/root/repo/target/graft_io/json_corrupt_test"
+    val dir = s"target/graft_io/json_corrupt_test"
     // keys 97 and 194 get truncated in the lake; 1..5 stay clean
     val orders = Seq((1L, "O", 10.0), (2L, "F", 20.0), (3L, "O", 30.0),
       (4L, "P", 40.5), (5L, "F", 50.0), (97L, "O", 99.0),

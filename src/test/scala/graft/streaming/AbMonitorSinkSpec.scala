@@ -23,7 +23,7 @@ class AbMonitorSinkSpec extends SparkSpec {
 
   test("A/B monitor: streamed report equals the batch st_power; replay is a no-op") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/ab_${System.nanoTime()}"
+    val dir = s"target/graft_io/ab_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[AbEvent](Encoders.product[AbEvent], sq)

@@ -26,7 +26,7 @@ class AccumulatingSinkSpec extends SparkSpec {
 
   test("accumulating sink: streamed snapshot equals batch rebuild; replay converges") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/acc_${System.nanoTime()}"
+    val dir = s"target/graft_io/acc_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[LifeEvent](Encoders.product[LifeEvent], sq)

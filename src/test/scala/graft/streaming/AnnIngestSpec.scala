@@ -12,7 +12,7 @@ class AnnIngestSpec extends SparkSpec {
 
   test("streamed vectors land in their cells, probes see them, replay adds nothing") {
     val emb = Tables.embeddings(spark, sf)
-    val dir = s"/root/repo/target/graft_io/ann_ingest_${System.nanoTime()}"
+    val dir = s"target/graft_io/ann_ingest_${System.nanoTime()}"
     val lake = s"$dir/lake"
 
     // codebook trained on the initial corpus half; the other half arrives

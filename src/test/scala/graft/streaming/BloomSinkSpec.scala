@@ -18,7 +18,7 @@ class BloomSinkSpec extends SparkSpec {
   test("streamed Bloom store: every seen key probes present (no false " +
       "negatives), absent keys read absent, replay is a no-op") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/bloom_${System.nanoTime()}"
+    val dir = s"target/graft_io/bloom_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[BloomEvent](

@@ -15,7 +15,7 @@ class CdcAnomalySpec extends SparkSpec {
   test("streaming CDC apply equals one batch apply of the full changelog; replay converges") {
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[Ch]
-    val dir = s"/root/repo/target/graft_io/cdc_sink_${System.nanoTime()}"
+    val dir = s"target/graft_io/cdc_sink_${System.nanoTime()}"
     // batch 1 bootstraps (pure inserts + an immediate update);
     // batch 2 updates, deletes, and inserts across the batch boundary
     val b1 = Seq(ch(1, "I", "a", 1, 1), ch(2, "I", "b", 2, 2),

@@ -18,7 +18,7 @@ class CmsSinkSpec extends SparkSpec {
 
   test("streamed CMS store answers merged frequency probes; replay is a no-op") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/cms_${System.nanoTime()}"
+    val dir = s"target/graft_io/cms_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[CmsEvent](Encoders.product[CmsEvent], sq)

@@ -12,7 +12,7 @@ class CorpusDedupSpec extends SparkSpec {
   test("stream incremental dedup: historical fingerprints drop cross-batch dups; replay adds nothing") {
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[Doc]
-    val dir = s"/root/repo/target/graft_io/corpus_dedup_${System.nanoTime()}"
+    val dir = s"target/graft_io/corpus_dedup_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[Doc](enc, sq)
@@ -53,7 +53,7 @@ class CorpusDedupSpec extends SparkSpec {
   test("curateSink gates quality on the stream before the dedup admit") {
     implicit val sq = spark.sqlContext
     implicit val enc = org.apache.spark.sql.Encoders.product[Doc]
-    val dir = s"/root/repo/target/graft_io/curate_sink_${System.nanoTime()}"
+    val dir = s"target/graft_io/curate_sink_${System.nanoTime()}"
     val input = MemoryStream[Doc](enc, sq)
     // prose clears the default gates; "spam spam ..." fails dup-word;
     // digit noise fails the quality floor

@@ -15,7 +15,7 @@ class DimensionSinkSpec extends SparkSpec {
   test("streaming SCD2 maintenance equals the batch rebuild; replay never duplicates") {
     implicit val sq = spark.sqlContext
     implicit val enc = Encoders.product[Obs]
-    val dir = s"/root/repo/target/graft_io/scd2_sink_${System.nanoTime()}"
+    val dir = s"target/graft_io/scd2_sink_${System.nanoTime()}"
     val b1 = Seq(obs(1, "A", 1, 1), obs(1, "B", 2, 2), obs(2, "X", 3, 3))
     val b2 = Seq(obs(1, "B", 4, 4), obs(1, "C", 5, 5), obs(3, "N", 6, 6))
 

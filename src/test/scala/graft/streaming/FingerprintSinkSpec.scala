@@ -25,7 +25,7 @@ class FingerprintSinkSpec extends SparkSpec {
   test("streamed fingerprint equals the batch dq_fingerprint on the " +
       "union; empty batches are inert; replay is a no-op") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/fp_${System.nanoTime()}"
+    val dir = s"target/graft_io/fp_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[FpOrder](Encoders.product[FpOrder], sq)

@@ -25,7 +25,7 @@ class GrowthSinkSpec extends SparkSpec {
 
   test("streamed growth ledger equals the batch ledger; replay is a no-op") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/growth_${System.nanoTime()}"
+    val dir = s"target/graft_io/growth_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[GaEvent](Encoders.product[GaEvent], sq)

@@ -16,7 +16,7 @@ class InferredMemberSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val fenc = Encoders.product[Fact]
     val denc = Encoders.product[Dim]
-    val dir = s"/root/repo/target/graft_io/inferred_${System.nanoTime()}"
+    val dir = s"target/graft_io/inferred_${System.nanoTime()}"
     val lake = s"$dir/dim"
 
     def readLake() = spark.read.parquet(lake).collect()

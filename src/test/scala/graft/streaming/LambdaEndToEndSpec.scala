@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class LambdaEndToEndSpec extends SparkSpec {
 
   test("speed layer -> lake -> batch profiles -> streaming anomalies") {
-    val root = s"/root/repo/target/graft_io/lambda_e2e_${System.nanoTime()}"
+    val root = s"target/graft_io/lambda_e2e_${System.nanoTime()}"
     val events = Tables.events(spark, sf)
 
     // producer stand-in: land the events as JSON lines

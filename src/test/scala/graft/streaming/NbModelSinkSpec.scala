@@ -18,7 +18,7 @@ class NbModelSinkSpec extends SparkSpec {
 
   test("NB model sink: streamed counts equal one cold pass; replay adds nothing") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/nb_${System.nanoTime()}"
+    val dir = s"target/graft_io/nb_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[LabeledDoc](

@@ -22,7 +22,7 @@ class OnlineSgdSpec extends SparkSpec {
   test("online SGD sink: stream state equals the offline sequential fold; replay converges") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val dir = s"/root/repo/target/graft_io/sgd_${System.nanoTime()}"
+    val dir = s"target/graft_io/sgd_${System.nanoTime()}"
     val batches = Seq(mk(1, 200), mk(2, 200), mk(3, 200))
 
     def runOnce(ckpt: String): Unit = {
@@ -72,7 +72,7 @@ class OnlineSgdSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = s"/root/repo/target/graft_io/sforget_${System.nanoTime()}"
+    val dir = s"target/graft_io/sforget_${System.nanoTime()}"
     Seq((1L, "d1", "a"), (2L, "d1", "b"), (2L, "d2", "c"),
       (3L, "d2", "d"), (4L, "d3", "e"))
       .toDF("user_id", "day", "payload")

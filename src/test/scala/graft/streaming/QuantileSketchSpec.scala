@@ -23,7 +23,7 @@ class QuantileSketchSpec extends SparkSpec {
   test("quantile sketch sink: streamed store merges to the batch answer; replay is idempotent") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val dir = s"/root/repo/target/graft_io/qsketch_${System.nanoTime()}"
+    val dir = s"target/graft_io/qsketch_${System.nanoTime()}"
     val batches = Seq(mk(1, 300), mk(2, 300), mk(3, 300))
 
     val input = MemoryStream[Ev](Encoders.product[Ev], sq)

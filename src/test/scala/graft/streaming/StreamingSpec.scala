@@ -264,7 +264,7 @@ class StreamingSpec extends SparkSpec {
 
   test("upsert sink: multi-batch accumulation, key updates, and replay idempotence") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/stream_upsert_${System.nanoTime()}"
+    val dir = s"target/graft_io/stream_upsert_${System.nanoTime()}"
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[String](Encoders.STRING, sq)
       val classified = EventStream.classify(
@@ -299,7 +299,7 @@ class StreamingSpec extends SparkSpec {
 
   test("mv sink: incremental view equals full agg; replay never double-counts; compact preserves") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/stream_mv_${System.nanoTime()}"
+    val dir = s"target/graft_io/stream_mv_${System.nanoTime()}"
     val all = Seq(
       jsonOf(1, "2024-01-01 00:00:00", 1, "click", 10.0),
       jsonOf(2, "2024-01-01 00:01:00", 2, "click", 20.0),
@@ -338,7 +338,7 @@ class StreamingSpec extends SparkSpec {
 
   test("partitioned lake sink writes exactly-once with checkpoint") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/stream_lake_${System.nanoTime()}"
+    val dir = s"target/graft_io/stream_lake_${System.nanoTime()}"
     val input = MemoryStream[String](Encoders.STRING, sq)
     val classified = EventStream.classify(
       EventStream.parseJson(input.toDF().select(col("value"))))

@@ -21,7 +21,7 @@ class TopKSinkSpec extends SparkSpec {
 
   test("top-k report equals batch freqTopN on the union; replay is a no-op") {
     implicit val sq = spark.sqlContext
-    val dir = s"/root/repo/target/graft_io/topk_${System.nanoTime()}"
+    val dir = s"target/graft_io/topk_${System.nanoTime()}"
 
     def runOnce(ckpt: String): Unit = {
       val input = MemoryStream[TkEvent](Encoders.product[TkEvent], sq)
@@ -51,7 +51,7 @@ class TopKSinkSpec extends SparkSpec {
   }
 
   test("SpaceSaving cap: planted heavy hitter survives eviction with an exact count; bounds bracket truth") {
-    val dir = s"/root/repo/target/graft_io/topkcap_${System.nanoTime()}"
+    val dir = s"target/graft_io/topkcap_${System.nanoTime()}"
     // 3 batches: "hot" 50× each + 40 UNIQUE noise values 1× each — an
     // unbounded-domain stand-in. capM=8 stores 8 of 41 values/batch.
     val batches3 = (0 until 3).map(b =>
