@@ -9015,9 +9015,11 @@ object SparkEntry {
            FROM e JOIN a3 ON a3.node = e.dst GROUP BY 1),
          h3 AS (SELECT src AS node,
              round(hr / (SELECT max(hr) FROM h3r), 9) AS h FROM h3r)
-         SELECT node, 'hub' AS role, round(h, 6) AS score FROM h3
+         SELECT node, 'hub' AS role, floor(h * 1e6 + 0.5) / 1e6 AS score
+         FROM h3
          UNION ALL
-         SELECT node, 'authority' AS role, round(a, 6) AS score FROM a3""",
+         SELECT node, 'authority' AS role, floor(a * 1e6 + 0.5) / 1e6 AS score
+         FROM a3""",
     "st_prop_test" ->
       """WITH s AS (SELECT
              CAST(sum(CASE WHEN event_type = 'click' AND value > 50

@@ -116,7 +116,4 @@ object TextFunctions {
     "perf" -> Seq("fast", "slow", "big", "small", "scan", "sort"),
     "data" -> Seq("data", "stream", "batch", "vector", "value", "hash"),
     "en"   -> Seq("the", "a"))
-
-  def langScore(text: Column, profile: Seq[String]): Column =
-    tokenCountIn(text, profile)
 }

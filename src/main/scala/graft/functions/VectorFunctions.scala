@@ -16,20 +16,11 @@ object VectorFunctions {
   import graft.plans.DotProduct
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
-  private def asDouble(v: Column): Column = v.cast("array<double>")
-
   /** Σ aᵢ·bᵢ in double — native codegen'd expression (primitive loop
     * over ArrayData; see graft.plans.DotProduct for why not zip_with). */
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Σ aᵢ·bᵢ via higher-order functions — portable fallback kept for
-    * environments that disallow custom expressions; semantics identical. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
 
   def normSq(a: Column): Column = dot(a, a)
 
@@ -38,12 +29,6 @@ object VectorFunctions {
   /** Cosine similarity in [-1, 1]. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Euclidean distance. */
-  def l2Dist(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 
   /** 0-based id of the nearest centroid under cosine (first max wins
     * ties). Centroids MUST be unit-normalized: cosine-argmax then equals

@@ -338,20 +338,18 @@ object Dwh {
           .as("rows_removed"))
       .filter(col("rows_removed") > 0)
       .localCheckpoint(true)
-    // survivors exist → partition-pruned rewrite via dynamic overwrite
+    // survivors exist → rewrite of exactly those partitions: the scan
+    // is pruned to them, and dynamic overwrite swaps their directories
+    // only at job commit, after every task reading the old files is done
     val partial = hitParts.filter(col("rows_removed") < col("__total"))
-    if (!partial.isEmpty) {
-      val touched = lake
-        .join(broadcast(partial.select(partitionCols.map(col): _*)),
-          partitionCols, "left_semi")
+      .select(partitionCols.map(col): _*).collect()
+    if (partial.nonEmpty)
+      graft.sources.Lake.inPartitions(lake, partitionCols, partial.toSeq)
         .join(broadcast(keys.select(col(keyCol))), Seq(keyCol), "left_anti")
-        .localCheckpoint(true)
-      try touched.write.mode("overwrite")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partitionCols: _*)
         .parquet(path)
-      finally touched.unpersist()
-    }
     // fully-emptied partitions write NO rows, so dynamic overwrite
     // would leave their old files — delete those directories explicitly
     // (bounded by the hit-partition count: a justified driver action)

@@ -240,20 +240,6 @@ object SketchDedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Adaptive strategy (AQE-spirit): the corpus row count is one
-    * metadata-cheap action; below `bruteCutoff` the quadratic-but-cheap
-    * scan wins, above it banding bounds the work. Identical pair sets
-    * unless a pair's EVERY agreeing chunk bucket exceeds the banded
-    * path's `bucketCap` (see simhashPairs) — a much narrower recall
-    * trade than the former first-agreeing-chunk cap. */
-  def simhashPairsAuto(documents: DataFrame, n: Int = 3, maxHamming: Int = 3,
-                       bruteCutoff: Long = 100000L): DataFrame = {
-    require(maxHamming <= 3,
-      "4x16-bit banding only guarantees recall for hamming <= 3")
-    if (documents.count() <= bruteCutoff) simhashPairsBrute(documents, n, maxHamming)
-    else simhashPairs(documents, n, maxHamming)
-  }
-
   /** All ordered (d1 < d2) pairs from a SORTED id array, row-local. */
   private def sortedPairs(ids: Column): Column =
     flatten(transform(ids, (x, i) =>

@@ -68,10 +68,6 @@ object Stats {
       round(corr(col(x), col(y)), 6).as("corr_xy"),
       round(covar_samp(col(x), col(y)), 4).as("cov_xy"))
 
-  /** Seeded Bernoulli sample (deterministic per partition layout). */
-  def sampleFraction(df: DataFrame, fraction: Double, seed: Long): DataFrame =
-    df.sample(withReplacement = false, fraction, seed)
-
   /** Stratified sample: per-stratum fractions (seeded). The scale tool
     * for class-balanced training subsets — one scan, no shuffle. */
   def stratifiedSample(df: DataFrame, stratumCol: String,

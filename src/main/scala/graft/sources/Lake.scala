@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -21,16 +21,29 @@ object Lake {
               header: Boolean = true): DataFrame =
     spark.read.schema(schema).option("header", header.toString).csv(path)
 
-  /** Schema inference variant (interactive convenience — extra pass). */
-  def readCsvInfer(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
-    spark.read.option("header", header.toString)
-      .option("inferSchema", "true").csv(path)
-
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** `lake` cut down to the partition tuples in `parts` (one row per
+    * tuple, values in `partitionCols` order) by a static null-safe
+    * predicate. Unlike a join on the tuple, the predicate lands in the
+    * scan's PartitionFilters, so no other partition's files are read; a
+    * null value matches the `__HIVE_DEFAULT_PARTITION__` directory. The
+    * disjunction is built balanced: a backfill frame can touch thousands
+    * of partitions, and every optimizer pass recurses as deep as the
+    * expression tree. */
+  private[graft] def inPartitions(lake: DataFrame, partitionCols: Seq[String],
+                                  parts: Seq[Row]): DataFrame = {
+    def anyOf(ps: Seq[Column]): Column =
+      if (ps.length == 1) ps.head
+      else { val (l, r) = ps.splitAt(ps.length / 2); anyOf(l) || anyOf(r) }
+    val tuples = parts.map(r => partitionCols.zipWithIndex
+      .map { case (c, i) => col(c) <=> lit(r.get(i)) }.reduce(_ && _))
+    lake.filter(if (tuples.isEmpty) lit(false) else anyOf(tuples))
+  }
 
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", header.toString).csv(path)

@@ -20,10 +20,10 @@ import org.apache.spark.sql.types._
   * construction — the Lambda-architecture property the reference builds
   * by hand.
   *
-  * Sources are pluggable: the Kafka source/sink builders below carry the
-  * exact options the reference uses, but every transform takes a plain
-  * DataFrame, so tests drive them from MemoryStream/file sources (this
-  * build environment ships no Kafka connector jar or broker).
+  * Sources are pluggable: every transform takes a plain DataFrame, so a
+  * Kafka source (`readStream.format("kafka")`, which needs the
+  * spark-sql-kafka connector on the classpath) plugs in where the tests
+  * and the benchmark use MemoryStream or the JSON-lines `fileSource`.
   */
 object EventStream {
 
@@ -148,17 +148,6 @@ object EventStream {
 
   // ---- sources / sinks ----------------------------------------------
 
-  /** Kafka source (reference: readStream.format("kafka")). Requires the
-    * spark-sql-kafka connector on the deployment classpath. */
-  def kafkaSource(spark: SparkSession, bootstrapServers: String,
-                  topic: String, startingOffsets: String = "latest"): DataFrame =
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-      .load()
-
   /** JSON-lines file source — the broker-free twin used in tests and
     * local lake replay (schema-on-read, bounded per-trigger intake). */
   def fileSource(spark: SparkSession, path: String,
@@ -167,16 +156,6 @@ object EventStream {
       .schema(eventSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .json(path)
-
-  /** Kafka sink with checkpoint (reference: writeStream.format("kafka")
-    * + checkpointLocation). */
-  def kafkaSink(df: DataFrame, bootstrapServers: String, topic: String,
-                checkpoint: String): DataStreamWriter[Row] =
-    toJsonValue(df).writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
 
   /** Idempotent lake UPSERT sink: foreachBatch + key-merge + dynamic
     * partition overwrite. Each micro-batch is merged into the lake BY
@@ -200,42 +179,58 @@ object EventStream {
       }
 
   /** One micro-batch (or backfill frame) of the upsert merge — also the
-    * batch-twin API. Scale shape: only the partitions the batch touches
-    * are read back (left_semi on the partition tuple → partition pruning
-    * on the lake scan) and rewritten (dynamic overwrite); the rest of a
-    * 100 TB lake is never scanned. Rows within a batch are deduped by
-    * key first (at-least-once sources can repeat a key within one
-    * batch). localCheckpoint materializes the merge before the write so
-    * the dynamic overwrite is not reading the path it replaces. */
+    * batch-twin API. Its cost is bounded by the batch and the partitions
+    * it touches, never by the rest of the lake:
+    *  - the batch is deduped by key (at-least-once sources can repeat a
+    *    key within one batch) and checkpointed, so its source is read
+    *    once;
+    *  - the distinct partition tuples it touches are collected (bounded
+    *    by the partitions one batch writes) and the lake is read with the
+    *    batch's schema (no inference job), cut to those tuples by a
+    *    static predicate in the scan's PartitionFilters
+    *    (`Lake.inPartitions`): untouched partitions are neither read nor
+    *    rewritten;
+    *  - existing rows whose key is not in the batch are kept, batch rows
+    *    win per key, and the merge is written straight to the lake by
+    *    dynamic partition overwrite. That is safe although the write reads
+    *    the path it replaces: dynamic overwrite writes into a
+    *    `.spark-staging-<job>` directory and swaps partition directories
+    *    only at job commit, when every task reading the old files is done.
+    * A lake without partition columns is one partition, replaced by a
+    * plain overwrite that deletes the path up front, so there the merge
+    * is materialized before the write. */
   def upsertBatch(batch: DataFrame, path: String,
                   partitionCols: Seq[String], keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val spark = batch.sparkSession
     val lake = new org.apache.hadoop.fs.Path(path)
     val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = batch.dropDuplicates(keyCols)
-    val merged =
-      if (!fs.exists(lake)) fresh
-      else {
-        val existing = spark.read.parquet(path)
-        val inTouched =
-          if (partitionCols.isEmpty) existing
-          else existing.join(
-            broadcast(fresh.select(partitionCols.map(col): _*).distinct()),
-            partitionCols, "left_semi")
-        // no forced broadcast on the key side: micro-batches broadcast on
-        // size estimation anyway, and a large backfill frame must not be
-        inTouched
-          .join(fresh.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(fresh)
-      }
-    val out = merged.localCheckpoint(true)
+    val fresh = batch.dropDuplicates(keyCols).localCheckpoint(true)
     try {
-      val w = out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(path)
-    } finally out.unpersist()
+      val merged =
+        if (!fs.exists(lake)) fresh
+        else {
+          val existing = spark.read.schema(fresh.schema).parquet(path)
+          val touched =
+            if (partitionCols.isEmpty) existing
+            else graft.sources.Lake.inPartitions(existing, partitionCols,
+              fresh.select(partitionCols.map(col): _*).distinct().collect().toSeq)
+          // no forced broadcast on the key side: micro-batches broadcast on
+          // size estimation anyway, and a large backfill frame must not be
+          touched
+            .join(fresh.select(keyCols.map(col): _*), keyCols, "left_anti")
+            .unionByName(fresh)
+        }
+      if (partitionCols.nonEmpty)
+        merged.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(partitionCols: _*)
+          .parquet(path)
+      else {
+        val out = merged.localCheckpoint(true)
+        try out.write.mode("overwrite").parquet(path) finally out.unpersist()
+      }
+    } finally fresh.unpersist()
   }
 
   /** Streaming erasure: right-to-be-forgotten REQUESTS arrive as a

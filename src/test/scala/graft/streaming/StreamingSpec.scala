@@ -297,6 +297,80 @@ class StreamingSpec extends SparkSpec {
       "key update did not take the latest batch's row")
   }
 
+  private def parquetFiles(dir: String): Set[(String, Long)] =
+    Option(new java.io.File(dir).listFiles()).toSet.flatten
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.lastModified())
+
+  test("upsert batch: partitions the batch does not touch are never read") {
+    import spark.implicits._
+    val dir = s"target/graft_io/upsert_prune_${System.nanoTime()}"
+    val first = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "p", "v")
+    EventStream.upsertBatch(first, dir, Seq("p"), Seq("id"))
+    // an unreadable file in partition b: any scan that opens it fails
+    val junk = new java.io.File(s"$dir/p=b/part-99999-planted.parquet")
+    java.nio.file.Files.write(junk.toPath, "not parquet".getBytes("UTF-8"))
+    EventStream.upsertBatch(Seq((1L, "a", 10.0), (3L, "a", 3.0))
+      .toDF("id", "p", "v"), dir, Seq("p"), Seq("id"))
+    assert(junk.exists(), "an untouched partition must keep its files")
+    val a = spark.read.schema(first.schema).parquet(dir)
+      .filter(col("p") === "a").collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Double]("v")).toMap
+    assert(a == Map(1L -> 10.0, 3L -> 3.0), s"touched partition merged: $a")
+  }
+
+  test("upsert batch: two partition columns with a null partition value") {
+    import spark.implicits._
+    val dir = s"target/graft_io/upsert_null_${System.nanoTime()}"
+    def frame(rows: (Long, Option[String], Option[Int], Double)*) =
+      rows.toDF("id", "p1", "p2", "v")
+    val schema = frame().schema
+    EventStream.upsertBatch(frame(
+      (1L, Some("x"), Some(1), 1.0), (2L, Some("x"), None, 2.0),
+      (3L, None, Some(2), 3.0)), dir, Seq("p1", "p2"), Seq("id"))
+    assert(new java.io.File(s"$dir/p1=x/p2=__HIVE_DEFAULT_PARTITION__").isDirectory)
+    val untouched = parquetFiles(s"$dir/p1=x/p2=1") ->
+      parquetFiles(s"$dir/p1=__HIVE_DEFAULT_PARTITION__/p2=2")
+    // updates key 2 and adds key 4 in (x, null); adds key 5 in (y, 1)
+    EventStream.upsertBatch(frame(
+      (2L, Some("x"), None, 20.0), (4L, Some("x"), None, 4.0),
+      (5L, Some("y"), Some(1), 5.0)), dir, Seq("p1", "p2"), Seq("id"))
+    val back = spark.read.schema(schema).parquet(dir).collect()
+      .map(r => (r.getAs[Long]("id"), Option(r.getAs[String]("p1")),
+        Option(r.get(r.fieldIndex("p2"))).map(_.asInstanceOf[Int]),
+        r.getAs[Double]("v"))).toSet
+    assert(back == Set((1L, Some("x"), Some(1), 1.0), (2L, Some("x"), None, 20.0),
+      (3L, None, Some(2), 3.0), (4L, Some("x"), None, 4.0),
+      (5L, Some("y"), Some(1), 5.0)), s"merged lake: $back")
+    assert((parquetFiles(s"$dir/p1=x/p2=1") ->
+      parquetFiles(s"$dir/p1=__HIVE_DEFAULT_PARTITION__/p2=2")) == untouched,
+      "partitions the batch does not touch keep their files")
+  }
+
+  test("upsert batch: a lake without partition columns merges and replays") {
+    import spark.implicits._
+    val dir = s"target/graft_io/upsert_flat_${System.nanoTime()}"
+    val second = Seq((2L, 20.0), (3L, 3.0)).toDF("id", "v")
+    EventStream.upsertBatch(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"), dir,
+      Nil, Seq("id"))
+    EventStream.upsertBatch(second, dir, Nil, Seq("id"))
+    EventStream.upsertBatch(second, dir, Nil, Seq("id"))
+    val back = spark.read.parquet(dir).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Double]("v")).sorted.toSeq
+    assert(back == Seq(1L -> 1.0, 2L -> 20.0, 3L -> 3.0), s"merged lake: $back")
+  }
+
+  test("upsert batch: the first batch creates a missing lake, deduped by key") {
+    import spark.implicits._
+    val dir = s"target/graft_io/upsert_first_${System.nanoTime()}"
+    assert(!new java.io.File(dir).exists())
+    EventStream.upsertBatch(Seq((1L, "a", 1.0), (1L, "a", 1.0), (2L, "b", 2.0))
+      .toDF("id", "p", "v"), dir, Seq("p"), Seq("id"))
+    val back = spark.read.parquet(dir).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("p"))).sorted.toSeq
+    assert(back == Seq(1L -> "a", 2L -> "b"), s"first batch: $back")
+  }
+
   test("mv sink: incremental view equals full agg; replay never double-counts; compact preserves") {
     implicit val sq = spark.sqlContext
     val dir = s"target/graft_io/stream_mv_${System.nanoTime()}"
