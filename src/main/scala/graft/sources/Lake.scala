@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 
 /** Lake IO layer (reference: work/Intro_pySpark.ipynb multi-format
@@ -45,6 +47,94 @@ object Lake {
     lake.filter(if (tuples.isEmpty) lit(false) else anyOf(tuples))
   }
 
+  // ---- the streaming sinks' store -------------------------------------
+
+  /** The checkpointed writer every streaming sink returns: `body` runs
+    * on each micro-batch with its batch id. After a crash the query
+    * restarts on `checkpoint` and re-runs the last uncommitted batch id
+    * over the same input, so `body` must be replay-safe. */
+  def batchSink(df: DataFrame, checkpoint: String)
+               (body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(body)
+
+  /** The per-batch store write and its replay discipline: micro-batch
+    * `batchId`'s partial `df` lands in its own `__batch=<id>` partition
+    * of `path` by dynamic partition overwrite. A batch re-run after a
+    * crash, or redelivered by an at-least-once source, recomputes the
+    * same partial from the same rows (every partial written here is
+    * deterministic in its batch) and replaces its own partition with
+    * identical bytes, so nothing is counted twice. No store state is
+    * read on this write path; readers merge the partitions, and read
+    * `__batch` as the batch id. */
+  def writeBatchPartition(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn("__batch", lit(batchId))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch")
+      .parquet(path)
+
+  /** The parquet store at `path`, or None while there is none: the path
+    * is missing or holds no entry a reader sees. A failed first write
+    * leaves such a directory (empty, or holding only `_temporary` or
+    * `.spark-staging-*`), and reading it would fail schema inference.
+    * Hidden names follow Spark's file index: a leading `.`, or a leading
+    * `_` outside a `k=v` partition directory. `schema` skips inference. */
+  def readStore(spark: SparkSession, path: String,
+                schema: Option[StructType] = None): Option[DataFrame] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val visible = fs.exists(p) && fs.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+    }
+    if (!visible) None
+    else Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
+  }
+
+  /** Replace the snapshot at `path` with what `write` writes into the
+    * directory it is given; `write` may read `path` (through
+    * [[readStore]]) and its result is returned. The new snapshot is
+    * written beside the path, in `<path>.__next`, so a failed write leaves
+    * the old one as it was (a plain overwrite deletes the path before its
+    * job runs). The swap then moves the old snapshot aside to
+    * `<path>.__prev` and the new one in, checking both renames
+    * (HDFS-style FileSystems report a failed rename by returning false)
+    * and moving the old one back when the second fails; the old copy is
+    * deleted only once the new one is in place.
+    *
+    * A crash between the two renames leaves `path` missing beside a
+    * complete `.__next`, which carries its job's `_SUCCESS` marker. The
+    * next call finishes that swap before `write` runs, so the read sees
+    * the last snapshot instead of none; a `.__next` without the marker
+    * is discarded. One writer per path: a reader racing the renames can
+    * see the path briefly missing. */
+  def swapIn[T](spark: SparkSession, path: String)(write: String => T): T = {
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val next = new Path(path.stripSuffix("/") + ".__next")
+    val prev = new Path(path.stripSuffix("/") + ".__prev")
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"failed to rename $from to $to")
+    if (!fs.exists(dst) && fs.exists(new Path(next, "_SUCCESS")))
+      rename(next, dst)
+    fs.delete(next, true)
+    fs.delete(prev, true)
+    val out = write(next.toString)
+    val had = fs.exists(dst)
+    if (had) rename(dst, prev)
+    try rename(next, dst)
+    catch {
+      case e: java.io.IOException =>
+        if (had) fs.rename(prev, dst) // the new snapshot stays in .__next
+        throw e
+    }
+    fs.delete(prev, true)
+    out
+  }
+
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", header.toString).csv(path)
 
@@ -64,47 +154,33 @@ object Lake {
     *
     * Hive-partitioned inputs must pass their `partitionCols` so the
     * rewrite preserves the layout (and pruning); compacting one without
-    * them is rejected rather than silently flattened. The swap renames
-    * the old dir aside before moving the rewrite in: a crash or failed
-    * rename strands a `__old`/`__compacting` copy (and is rolled back
-    * where possible), never the data. Readers racing the two renames can
-    * observe a briefly missing path — run compaction in a maintenance
-    * window or behind a catalog swap. */
+    * them is rejected rather than silently flattened. The rewrite
+    * replaces the dir through [[swapIn]]: a failed rewrite or rename
+    * leaves the data in place, and readers racing the swap can observe
+    * a briefly missing path, so run compaction in a maintenance window
+    * or behind a catalog swap. */
   def compact(spark: SparkSession, path: String, targetRowsPerFile: Long,
-              partitionCols: Seq[String] = Nil): Long = {
-    // resolve the filesystem OWNING `path` (s3a://, hdfs://, file://) —
-    // FileSystem.get(conf) returns the default scheme's FS and throws
-    // Wrong-FS (or hits the wrong store) for any non-default lake
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hivePartitioned = fs.listStatus(dst).exists(s =>
-      s.isDirectory && s.getPath.getName.contains("="))
-    require(partitionCols.nonEmpty || !hivePartitioned,
-      s"$path is hive-partitioned; pass partitionCols to preserve the layout")
-
-    val df = spark.read.parquet(path)
-    val rows = df.count()
-    val files = math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")
-    val writer =
-      if (partitionCols.isEmpty) df.repartition(files).write
-      else df.repartition(files, partitionCols.map(col): _*)
-        .write.partitionBy(partitionCols: _*)
-    writer.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(old, true) // clear any leftover from a prior crash
-    // HDFS-style FileSystems signal rename failure by returning false,
-    // not throwing — check both, and roll the data back rather than
-    // deleting the only surviving copy
-    if (!fs.rename(dst, old))
-      throw new java.io.IOException(s"compact: failed to move $dst aside")
-    if (!fs.rename(tmp, dst)) {
-      fs.rename(old, dst) // restore; the rewrite stays at tmp for retry
-      throw new java.io.IOException(s"compact: failed to swap in $tmp")
+              partitionCols: Seq[String] = Nil): Long =
+    swapIn(spark, path) { next =>
+      // resolve the filesystem OWNING `path` (s3a://, hdfs://, file://) —
+      // FileSystem.get(conf) returns the default scheme's FS and throws
+      // Wrong-FS (or hits the wrong store) for any non-default lake
+      val dst = new Path(path)
+      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val hivePartitioned = fs.listStatus(dst).exists(s =>
+        s.isDirectory && s.getPath.getName.contains("="))
+      require(partitionCols.nonEmpty || !hivePartitioned,
+        s"$path is hive-partitioned; pass partitionCols to preserve the layout")
+      val df = spark.read.parquet(path)
+      val rows = df.count()
+      val files = math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
+      val writer =
+        if (partitionCols.isEmpty) df.repartition(files).write
+        else df.repartition(files, partitionCols.map(col): _*)
+          .write.partitionBy(partitionCols: _*)
+      writer.parquet(next)
+      files
     }
-    fs.delete(old, true)
-    files
-  }
 
   /** File-level min/max MANIFEST over a parquet lake — the data-skipping
     * half of a lakehouse table format (Delta `add.stats` / Iceberg
@@ -438,11 +514,8 @@ object Lake {
   def readWithDeletes(spark: SparkSession, path: String,
                       keyCol: String): DataFrame = {
     val data = spark.read.parquet(path)
-    val dvPath = new org.apache.hadoop.fs.Path(s"$path/_dv")
-    val fs = dvPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dvPath)) data
-    else data.join(
-      spark.read.parquet(s"$path/_dv").select("__key").distinct(),
-      data(keyCol) === col("__key"), "left_anti")
+    readStore(spark, s"$path/_dv").fold(data)(dv => data.join(
+      dv.select("__key").distinct(), data(keyCol) === col("__key"), "left_anti"))
   }
+
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Stats
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -14,14 +15,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *
   * State design: per-user `max(conv)` partials are MERGEABLE (a user
   * who converts in any batch is converted — max over batches), so the
-  * store is append-only per-batch rollups in a `__batch`-partitioned
-  * lake with dynamic overwrite: a replayed micro-batch recomputes the
-  * same partial from the same data and overwrites its own partition
-  * with identical bytes (the NbModelSink discipline — at-least-once
-  * redelivery converges, nothing double-counts). No state is read on
-  * the write path. Arms come from [[Stats.md5Arm]] — the same
-  * deterministic split st_power and dq_srm audit, so batch and stream
-  * agree user-by-user.
+  * store is one rollup per batch under the replay discipline of
+  * [[graft.sources.Lake.writeBatchPartition]]. Arms come from
+  * [[Stats.md5Arm]] — the same deterministic split st_power and dq_srm
+  * audit, so batch and stream agree user-by-user.
   *
   * Scale shape: the per-batch increment is one map-side-combined
   * (user) rollup over the batch; the store grows by
@@ -36,15 +33,10 @@ object AbMonitorSink {
     * backfill twin. `batch` carries (user_id, event_type, value). */
   def incrementsBatch(batch: DataFrame, batchId: Long, statePath: String,
                       minValue: Double = 95.0): Unit = {
-    batch.groupBy("user_id")
+    Lake.writeBatchPartition(batch.groupBy("user_id")
       .agg(max(when(col("event_type") === "purchase" &&
         col("value") > minValue, 1).otherwise(0)).as("conv"))
-      .withColumn("arm", Stats.md5Arm(col("user_id")))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(statePath)
+      .withColumn("arm", Stats.md5Arm(col("user_id"))), batchId, statePath)
   }
 
   /** The live power report over every stored partial: user-level max
@@ -59,9 +51,6 @@ object AbMonitorSink {
 
   def sink(stream: DataFrame, statePath: String, checkpoint: String,
            minValue: Double = 95.0): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        incrementsBatch(batch, id, statePath, minValue)
-      }
+    Lake.batchSink(stream, checkpoint)(
+      incrementsBatch(_, _, statePath, minValue))
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dwh
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -11,52 +12,29 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * redelivery, out-of-order batches and whole replays all converge to
   * the batch rebuild (the spec's equality). State is the
   * process-instance-count-sized snapshot itself, rewritten per batch
-  * behind a temp-dir swap (read-modify-overwrite of the SAME path would
-  * corrupt on failure mid-write; the swap keeps the previous snapshot
-  * until the new one is fully on disk).
+  * through [[Lake.swapIn]]: the previous snapshot stays until the new one
+  * is fully on disk, and a crash mid-swap is finished by the replayed
+  * batch, which then reads the previous snapshot instead of
+  * re-initializing from one batch.
   */
 object AccumulatingSink {
 
   def applyBatch(batch: DataFrame, statePath: String,
                  milestones: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val state = new Path(statePath)
-    val next = new Path(s"$statePath.__next")
-    val aside = new Path(s"$statePath.__prev")
-    val fs = state.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery: the swap below never deletes the live snapshot until
-    // the new one is in place, but a crash between rename(state, aside) and
-    // rename(next, state) leaves state absent with a COMPLETE __next on disk
-    // (it carries a _SUCCESS marker — written before any swap step starts).
-    // Finish that swap before reading, so the checkpoint-replayed batch sees
-    // the previous snapshot instead of silently re-initializing from one
-    // batch. A partial __next (no marker) is just overwritten below.
-    if (!fs.exists(state) && fs.exists(new Path(next, "_SUCCESS")))
-      fs.rename(next, state)
-    val exists = fs.exists(state)
-    val merged =
-      if (exists)
-        Dwh.accumulatingApply(spark.read.parquet(statePath), batch,
-          milestones)
-      else Dwh.accumulatingSnapshot(batch, milestones)
-    merged.write.mode("overwrite").parquet(next.toString)
-    // Swap with no window where the only copy is gone: old snapshot is moved
-    // aside (not deleted) before the new one takes its place.
-    fs.delete(aside, true)
-    if (exists) fs.rename(state, aside)
-    fs.rename(next, state)
-    fs.delete(aside, true)
+    Lake.swapIn(spark, statePath) { next =>
+      Lake.readStore(spark, statePath)
+        .fold(Dwh.accumulatingSnapshot(batch, milestones))(
+          Dwh.accumulatingApply(_, batch, milestones))
+        .write.parquet(next)
+    }
   }
 
   def sink(stream: DataFrame, statePath: String, checkpoint: String,
            milestones: Seq[String] = Seq("signup", "click", "purchase"))
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, statePath, milestones)
-      }
+    Lake.batchSink(stream, checkpoint)((batch, _) =>
+      applyBatch(batch, statePath, milestones))
 
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(statePath)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.VectorFunctions._
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -25,9 +26,6 @@ object AnnIngest {
     * vec_ids the lake already holds, append the rest. */
   def admitBatch(batch: DataFrame, codebook: Seq[Seq[Double]],
                  lakePath: String): Unit = {
-    val spark = batch.sparkSession
-    val lake = new org.apache.hadoop.fs.Path(lakePath)
-    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the assignment feeds the touched-cell collect AND the write —
     // materialize once
     val assigned = batch
@@ -36,15 +34,12 @@ object AnnIngest {
         coalesce(nearestCentroidId(col("embedding"), codebook), lit(-1)))
       .localCheckpoint(true)
     try {
-      val fresh =
-        if (!fs.exists(lake)) assigned
-        else {
+      val fresh = Lake.readStore(batch.sparkSession, lakePath)
+        .fold(assigned) { lake =>
           val cells = assigned.select("cell").distinct()
             .collect().map(_.getInt(0))
           assigned.join(
-            spark.read.parquet(lakePath)
-              .filter(col("cell").isin(cells.toSeq: _*))
-              .select("vec_id"),
+            lake.filter(col("cell").isin(cells.toSeq: _*)).select("vec_id"),
             Seq("vec_id"), "left_anti")
         }
       fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
@@ -55,9 +50,6 @@ object AnnIngest {
   /** Checkpointed sink over `admitBatch`; replay appends nothing. */
   def sink(vectors: DataFrame, codebook: Seq[Seq[Double]], lakePath: String,
            checkpoint: String): DataStreamWriter[Row] =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        admitBatch(batch, codebook, lakePath)
-      }
+    Lake.batchSink(vectors, checkpoint)((batch, _) =>
+      admitBatch(batch, codebook, lakePath))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -25,11 +26,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * so a probe re-derives positions through the SAME expression — no
   * second hash implementation to drift.
   *
-  * Replay discipline (NbModelSink's): the per-batch row lands in a
-  * `__batch`-partitioned lake with dynamic overwrite, so at-least-once
-  * redelivery overwrites its own partition with identical bytes
-  * (positions are deterministic in the batch's rows and set-union
-  * commutes) — nothing double-inserts. No false negatives is the
+  * The per-batch rows follow the replay discipline of
+  * [[graft.sources.Lake.writeBatchPartition]] (positions are
+  * deterministic in the batch's rows and set-union commutes), so
+  * nothing double-inserts. No false negatives is the
   * spec-locked invariant: every streamed key probes present on any
   * replay/merge order; false positives cost one wasted downstream
   * lookup, exactly the src_bloom_skip trade.
@@ -44,24 +44,16 @@ object BloomSink {
     * Also the backfill twin. */
   def sketchBatch(batch: DataFrame, batchId: Long, storePath: String,
                   c: String, bits: Int = 8192, k: Int = 4): Unit =
-    batch
+    Lake.writeBatchPartition(batch
       .select(explode(positions(c, bits, k)).as("p"))
       .agg(sort_array(collect_set(col("p"))).as("positions"),
-        count(lit(1)).as("n_hashed"))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(storePath)
+        count(lit(1)).as("n_hashed")), batchId, storePath)
 
   def sink(stream: DataFrame, storePath: String, checkpoint: String,
            c: String, bits: Int = 8192, k: Int = 4)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sketchBatch(batch, id, storePath, c, bits, k)
-      }
+    Lake.batchSink(stream, checkpoint)(
+      sketchBatch(_, _, storePath, c, bits, k))
 
   /** Read side: probe the UNION position set for a caller's value
     * list — true = maybe present (FP-bounded), false = DEFINITELY
@@ -74,13 +66,9 @@ object BloomSink {
     import spark.implicits._
     // probing before the first micro-batch commits: a missing store is
     // an EMPTY filter — everything is definitely-absent, not a crash
-    val set =
-      try spark.read.parquet(storePath)
-        .select(explode(col("positions")).as("p")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => Set.empty[Int]
-      }
+    val set = Lake.readStore(spark, storePath).fold(Set.empty[Int])(
+      _.select(explode(col("positions")).as("p")).distinct()
+        .collect().map(_.getInt(0)).toSet)
     val hashed = probes.toDF("value")
       .select(col("value"), positions("value", bits, k).as("ps"))
       .collect()

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dwh
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -18,11 +19,13 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * (spec-verified), because batches arrive time-ordered by contract.
   *
   * Like DimensionSink, the twin rewrites the compacted dimension per
-  * batch; at warehouse scale the snapshot is bucket-partitioned by key
-  * and only touched buckets rewrite (EventStream.upsertSink's
-  * dynamic-partition-overwrite shape). Per-batch compute is bounded by
-  * cdcApply's shape: the changelog collapses map-side and broadcasts —
-  * the snapshot is joined, never shuffled.
+  * batch, through [[graft.sources.Lake.swapIn]] so a failed batch
+  * leaves the previous snapshot in place; at warehouse scale the
+  * snapshot is bucket-partitioned by key and only touched buckets
+  * rewrite (EventStream.upsertSink's dynamic-partition-overwrite
+  * shape). Per-batch compute is bounded by cdcApply's shape: the
+  * changelog collapses map-side and broadcasts — the snapshot is
+  * joined, never shuffled.
   */
 object CdcSink {
 
@@ -33,26 +36,18 @@ object CdcSink {
                  ord: String): Unit = {
     val spark = batch.sparkSession
     import org.apache.spark.sql.functions.col
-    val lake = new org.apache.hadoop.fs.Path(lakePath)
-    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snapshot =
-      if (fs.exists(lake)) spark.read.parquet(lakePath)
-      else batch.select(col(key), col(newState).as("state")).limit(0)
-    val updated = Dwh.cdcApply(snapshot, batch, key, "state",
-      op, newState, ts, ord)
-    // materialize before overwriting the very lake the plan reads
-    val snap = updated.localCheckpoint(true)
-    try snap.write.mode("overwrite").parquet(lakePath)
-    finally snap.unpersist()
+    Lake.swapIn(spark, lakePath) { next =>
+      val snapshot = Lake.readStore(spark, lakePath).getOrElse(
+        batch.select(col(key), col(newState).as("state")).limit(0))
+      Dwh.cdcApply(snapshot, batch, key, "state", op, newState, ts, ord)
+        .write.parquet(next)
+    }
   }
 
   /** Checkpointed sink: incremental CDC apply per micro-batch. */
   def sink(changes: DataFrame, lakePath: String, checkpoint: String,
            key: String, op: String, newState: String, ts: String,
            ord: String): DataStreamWriter[Row] =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, lakePath, key, op, newState, ts, ord)
-      }
+    Lake.batchSink(changes, checkpoint)((batch, _) =>
+      applyBatch(batch, lakePath, key, op, newState, ts, ord))
 }

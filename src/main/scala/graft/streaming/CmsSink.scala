@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.CmsAggregator
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -16,11 +17,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * batch carries (the two sinks bracket the trade: exact counts for
   * the head vs ε-bounded counts for EVERYTHING).
   *
-  * Replay discipline (NbModelSink's): the per-batch sketch lands in a
-  * `__batch`-partitioned lake with dynamic overwrite, so at-least-once
-  * redelivery overwrites its own partition with identical bytes —
-  * sketches are deterministic in the batch's rows (fixed seeds,
-  * cell-wise sums commute), so nothing double-counts. Mergeability is
+  * The per-batch sketches follow the replay discipline of
+  * [[graft.sources.Lake.writeBatchPartition]] (fixed seeds, cell-wise
+  * sums commute), so nothing double-counts. Mergeability is
   * the CmsSpec-locked invariant: sketch(A ∪ B) == merge(sketch(A),
   * sketch(B)) cell-wise, so the merged store sketch IS the
   * whole-history sketch. */
@@ -38,23 +37,15 @@ object CmsSink {
     * backfill twin. */
   def sketchBatch(batch: DataFrame, batchId: Long, storePath: String,
                   c: String, depth: Int = 5, width: Int = 2048): Unit =
-    batch
+    Lake.writeBatchPartition(batch
       .agg(CmsAggregator.cms(depth, width)(xxhash64(col(c))).as("sk"))
-      .withColumn("cms_family", lit(CmsFamily))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(storePath)
+      .withColumn("cms_family", lit(CmsFamily)), batchId, storePath)
 
   def sink(stream: DataFrame, storePath: String, checkpoint: String,
            c: String, depth: Int = 5, width: Int = 2048)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sketchBatch(batch, id, storePath, c, depth, width)
-      }
+    Lake.batchSink(stream, checkpoint)(
+      sketchBatch(_, _, storePath, c, depth, width))
 
   /** Read side: probe the MERGED whole-history sketch for a caller's
     * value list — the same sketch-only report shape as the batch
@@ -66,9 +57,8 @@ object CmsSink {
     import spark.implicits._
     // probing before the first micro-batch commits must report zero
     // estimates, not crash (missing store path / zero stored sketches)
-    val sketches =
-      try {
-        val store = spark.read.parquet(storePath)
+    val sketches = Lake.readStore(spark, storePath).fold(
+      Array.empty[Array[Long]]) { store =>
         // stale-format stores fail LOUDLY (r12 ADVICE): pre-CW sketches
         // probed through the CW cell layout would return garbage counts
         require(store.columns.contains("cms_family"),
@@ -87,10 +77,6 @@ object CmsSink {
             s"this build expects $CmsFamily")
         store.select("sk").collect()
           .map(_.getAs[scala.collection.Seq[Long]]("sk").toArray)
-      }
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          Array.empty[Array[Long]]
       }
     val merged = sketches.foldLeft(
       new Array[Long](depth * width))(CmsAggregator.merge)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.TextFunctions._
+import graft.sources.Lake
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -25,18 +26,14 @@ object CorpusDedup {
 
   /** Admit one micro-batch (or backfill frame) against the store. */
   def admitBatch(batch: DataFrame, storePath: String, outPath: String): Unit = {
-    val spark = batch.sparkSession
-    val store = new org.apache.hadoop.fs.Path(storePath)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val w = Window.partitionBy("fp").orderBy("doc_id")
     val batchKeep = batch
       .withColumn("fp", contentFingerprint(col("text")))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    val novel0 =
-      if (!fs.exists(store)) batchKeep
-      else batchKeep.join(spark.read.parquet(storePath), Seq("fp"), "left_anti")
+    val novel0 = Lake.readStore(batch.sparkSession, storePath).fold(batchKeep)(
+      batchKeep.join(_, Seq("fp"), "left_anti"))
     // materialize once: the admit set feeds two writes, one of which
     // appends to the very store the plan reads
     val novel = novel0.localCheckpoint(true)
@@ -49,11 +46,8 @@ object CorpusDedup {
   /** Checkpointed sink: corpus-incremental dedup per micro-batch. */
   def sink(docs: DataFrame, storePath: String, outPath: String,
            checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        admitBatch(batch, storePath, outPath)
-      }
+    Lake.batchSink(docs, checkpoint)((batch, _) =>
+      admitBatch(batch, storePath, outPath))
 
   /** Streaming twin of operators.TextAnalysis.curate: the row-local
     * quality and repetition gates run ON THE STREAM (pure Column

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dwh
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -17,9 +18,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * checkpoint full replay.
   *
   * The twin rewrites the whole (tiny, per-key-compacted) dimension per
-  * batch for simplicity; at warehouse scale the SCD2 table is laid out
-  * partitioned by a key bucket and only touched buckets are rewritten
-  * (same dynamic-partition-overwrite shape as EventStream.upsertSink) —
+  * batch for simplicity, through [[graft.sources.Lake.swapIn]] so a
+  * failed batch leaves the previous table in place; at warehouse scale
+  * the SCD2 table is laid out partitioned by a key bucket and only
+  * touched buckets are rewritten (same dynamic-partition-overwrite
+  * shape as EventStream.upsertSink) —
   * per-batch cost stays proportional to the batch's key set either way.
   */
 object DimensionSink {
@@ -28,25 +31,18 @@ object DimensionSink {
   def applyBatch(batch: DataFrame, lakePath: String, key: String,
                  state: String, ts: String, ord: String): Unit = {
     val spark = batch.sparkSession
-    val lake = new org.apache.hadoop.fs.Path(lakePath)
-    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val updated =
-      if (!fs.exists(lake)) Dwh.scd2Build(batch, key, state, ts, ord)
-      else Dwh.scd2Apply(spark.read.parquet(lakePath), batch,
-        key, state, ts, ord)
-    // materialize before overwriting the very lake the plan reads
-    val snap = updated.localCheckpoint(true)
-    try snap.write.mode("overwrite").parquet(lakePath)
-    finally snap.unpersist()
+    Lake.swapIn(spark, lakePath) { next =>
+      Lake.readStore(spark, lakePath)
+        .fold(Dwh.scd2Build(batch, key, state, ts, ord))(
+          Dwh.scd2Apply(_, batch, key, state, ts, ord))
+        .write.parquet(next)
+    }
   }
 
   /** Checkpointed sink: incremental SCD2 maintenance per micro-batch. */
   def sink(changes: DataFrame, lakePath: String, checkpoint: String,
            key: String, state: String, ts: String,
            ord: String): DataStreamWriter[Row] =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, lakePath, key, state, ts, ord)
-      }
+    Lake.batchSink(changes, checkpoint)((batch, _) =>
+      applyBatch(batch, lakePath, key, state, ts, ord))
 }

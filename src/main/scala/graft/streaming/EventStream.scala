@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Lambda
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -172,11 +173,8 @@ object EventStream {
   def upsertSink(df: DataFrame, path: String, checkpoint: String,
                  partitionCols: Seq[String],
                  keyCols: Seq[String] = Seq("event_id")): DataStreamWriter[Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, path, partitionCols, keyCols)
-      }
+    Lake.batchSink(df, checkpoint)((batch, _) =>
+      upsertBatch(batch, path, partitionCols, keyCols))
 
   /** One micro-batch (or backfill frame) of the upsert merge — also the
     * batch-twin API. Its cost is bounded by the batch and the partitions
@@ -196,24 +194,19 @@ object EventStream {
     *    the path it replaces: dynamic overwrite writes into a
     *    `.spark-staging-<job>` directory and swaps partition directories
     *    only at job commit, when every task reading the old files is done.
-    * A lake without partition columns is one partition, replaced by a
-    * plain overwrite that deletes the path up front, so there the merge
-    * is materialized before the write. */
+    * A lake without partition columns is one snapshot, replaced through
+    * `Lake.swapIn`, so a failed batch leaves the previous one in place. */
   def upsertBatch(batch: DataFrame, path: String,
                   partitionCols: Seq[String], keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val spark = batch.sparkSession
-    val lake = new org.apache.hadoop.fs.Path(path)
-    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh = batch.dropDuplicates(keyCols).localCheckpoint(true)
     try {
-      val merged =
-        if (!fs.exists(lake)) fresh
-        else {
-          val existing = spark.read.schema(fresh.schema).parquet(path)
+      def merged = Lake.readStore(spark, path, Some(fresh.schema))
+        .fold(fresh) { existing =>
           val touched =
             if (partitionCols.isEmpty) existing
-            else graft.sources.Lake.inPartitions(existing, partitionCols,
+            else Lake.inPartitions(existing, partitionCols,
               fresh.select(partitionCols.map(col): _*).distinct().collect().toSeq)
           // no forced broadcast on the key side: micro-batches broadcast on
           // size estimation anyway, and a large backfill frame must not be
@@ -226,10 +219,7 @@ object EventStream {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partitionCols: _*)
           .parquet(path)
-      else {
-        val out = merged.localCheckpoint(true)
-        try out.write.mode("overwrite").parquet(path) finally out.unpersist()
-      }
+      else Lake.swapIn(spark, path)(merged.write.parquet(_))
     } finally fresh.unpersist()
   }
 
@@ -240,23 +230,15 @@ object EventStream {
     * to `auditPath` (the erasure log a compliance review reads).
     * Replay-safe the same way the batch op is: re-forgetting an
     * already-erased key finds no hits and rewrites nothing; the audit
-    * append is keyed by batch id so a replayed batch overwrites its own
-    * audit partition instead of double-logging. */
+    * rows follow the replay discipline of `Lake.writeBatchPartition`, so
+    * a replayed batch does not double-log. */
   def forgetSink(requests: DataFrame, lakePath: String, auditPath: String,
                  checkpoint: String, keyCol: String,
                  partitionCols: Seq[String]): DataStreamWriter[Row] =
-    requests.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val audit = graft.operators.Dwh.forgetKeys(
-          batch.sparkSession, lakePath, batch.select(col(keyCol)),
-          keyCol, partitionCols)
-        audit.withColumn("__batch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch")
-          .parquet(auditPath)
-      }
+    Lake.batchSink(requests, checkpoint)((batch, id) =>
+      Lake.writeBatchPartition(graft.operators.Dwh.forgetKeys(
+        batch.sparkSession, lakePath, batch.select(col(keyCol)),
+        keyCol, partitionCols), id, auditPath))
 
   /** Partitioned parquet lake sink with checkpoint — exactly-once lake
     * appends (replaces the reference's hand-rolled HDFS append consumer). */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Quality
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -19,10 +20,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * hash Column — [[graft.operators.Quality.orderRowHash]] — under
   * both surfaces; the spec locks streamed ≡ batch).
   *
-  * Replay discipline (NbModelSink's): partials land in a
-  * `__batch`-partitioned lake with dynamic overwrite — at-least-once
-  * redelivery rewrites its own partition with identical bytes (the
-  * partial is deterministic in the batch's rows), so nothing
+  * The partials follow the replay discipline of
+  * [[graft.sources.Lake.writeBatchPartition]], so nothing
   * double-counts. */
 object FingerprintSink {
 
@@ -33,23 +32,15 @@ object FingerprintSink {
     * the backfill twin. */
   def fingerprintBatch(batch: DataFrame, batchId: Long,
                        storePath: String): Unit =
-    batch
+    Lake.writeBatchPartition(batch
       .select(Quality.orderRowHash.as("h"))
       .agg(count(lit(1)).as("n_rows"),
-        coalesce(sum(col("h").cast(Dec)), lit(0).cast(Dec)).as("hsum"))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(storePath)
+        coalesce(sum(col("h").cast(Dec)), lit(0).cast(Dec)).as("hsum")),
+      batchId, storePath)
 
   def sink(stream: DataFrame, storePath: String, checkpoint: String)
       : DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        fingerprintBatch(batch, id, storePath)
-      }
+    Lake.batchSink(stream, checkpoint)(fingerprintBatch(_, _, storePath))
 
   /** Read side: the whole-history fingerprint — partial sums re-summed
     * (abelian, so batch boundaries and arrival order cannot matter),
@@ -58,13 +49,9 @@ object FingerprintSink {
   def report(spark: SparkSession, storePath: String): DataFrame = {
     // probing before the first micro-batch commits reports the empty
     // history (0 rows, fingerprint 0), not a missing-path crash
-    val stored =
-      try spark.read.parquet(storePath)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          import spark.implicits._
-          Seq.empty[(Long, java.math.BigDecimal)].toDF("n_rows", "hsum")
-      }
+    import spark.implicits._
+    val stored = Lake.readStore(spark, storePath).getOrElse(
+      Seq.empty[(Long, java.math.BigDecimal)].toDF("n_rows", "hsum"))
     stored
       .agg(coalesce(sum("n_rows"), lit(0L)).cast("long").as("n_rows"),
         pmod(coalesce(sum("hsum"), lit(0).cast(Dec)),

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Windows
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -14,11 +15,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *
   * State design: (user, week) activity is MERGEABLE (a user active in
   * any batch that week is active that week — distinct-union), so the
-  * store is append-only per-batch distinct partials in a
-  * `__batch`-partitioned lake with dynamic overwrite (the NbModelSink
-  * discipline: a replayed micro-batch rewrites its own partition with
-  * identical bytes; at-least-once redelivery converges). No state is
-  * read on the write path.
+  * store is one distinct partial per batch under the replay discipline
+  * of [[graft.sources.Lake.writeBatchPartition]].
   *
   * Report = ONE distinct-union of the store fed through the SAME
   * [[Windows.growthAccounting]] ledger the batch surface runs — one
@@ -28,15 +26,10 @@ object GrowthSink {
 
   def incrementsBatch(batch: DataFrame, batchId: Long,
                       statePath: String): Unit = {
-    batch
+    Lake.writeBatchPartition(batch
       .select(col("user_id"),
         to_date(date_trunc("week", col("ts"))).as("week"))
-      .distinct()
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(statePath)
+      .distinct(), batchId, statePath)
   }
 
   /** The live ledger over every stored partial: distinct-merge, then
@@ -50,9 +43,5 @@ object GrowthSink {
 
   def sink(stream: DataFrame, statePath: String,
            checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        incrementsBatch(batch, id, statePath)
-      }
+    Lake.batchSink(stream, checkpoint)(incrementsBatch(_, _, statePath))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -23,30 +24,23 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *     full replays.
   *
   * The twin rewrites the whole (per-key-compacted) dim lake per dim
-  * batch; at warehouse scale the dim is bucket-partitioned on the key
-  * and only touched buckets rewrite (EventStream.upsertSink's
-  * dynamic-partition-overwrite shape) — per-batch cost proportional to
-  * the batch's key set either way, and the facts-side anti-join is one
-  * key-equi probe of the lake, never a scan of fact history. */
+  * batch, through [[graft.sources.Lake.swapIn]] so a failed batch
+  * leaves the previous lake in place; at warehouse scale the dim is
+  * bucket-partitioned on the key and only touched buckets rewrite
+  * (EventStream.upsertSink's dynamic-partition-overwrite shape) —
+  * per-batch cost proportional to the batch's key set either way, and
+  * the facts-side anti-join is one key-equi probe of the lake, never a
+  * scan of fact history. */
 object InferredMemberSink {
-
-  private def lakeExists(df: DataFrame, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      .exists(p)
-  }
 
   /** Admit one fact micro-batch: append a placeholder for every
     * referenced key the dim lake does not yet carry. */
   def admitFacts(batch: DataFrame, dimPath: String,
                  factKey: String): Unit = {
-    val spark = batch.sparkSession
     val keys = batch.select(col(factKey).cast("long").as("dim_key"))
       .distinct()
-    val missing =
-      if (!lakeExists(batch, dimPath)) keys
-      else keys.join(spark.read.parquet(dimPath).select("dim_key"),
-        Seq("dim_key"), "left_anti")
+    val missing = Lake.readStore(batch.sparkSession, dimPath).fold(keys)(
+      dim => keys.join(dim.select("dim_key"), Seq("dim_key"), "left_anti"))
     val placeholders = missing
       .select(col("dim_key"), lit(null).cast("string").as("state"),
         lit(true).as("inferred"))
@@ -66,32 +60,24 @@ object InferredMemberSink {
       .agg(max(struct(col(ts).as("__t"), col(ord).as("__o"),
         col(state).as("__s"))).getField("__s").as("state"))
       .withColumn("inferred", lit(false))
-    val merged =
-      if (!lakeExists(batch, dimPath)) latest
-      else spark.read.parquet(dimPath)
-        .join(latest.select("dim_key"), Seq("dim_key"), "left_anti")
-        .unionByName(latest)
-    val snap = merged.localCheckpoint(true)
-    try snap.write.mode("overwrite").parquet(dimPath)
-    finally snap.unpersist()
+    Lake.swapIn(spark, dimPath) { next =>
+      Lake.readStore(spark, dimPath).fold(latest)(
+        _.join(latest.select("dim_key"), Seq("dim_key"), "left_anti")
+          .unionByName(latest))
+        .write.parquet(next)
+    }
   }
 
   /** Checkpointed fact-side sink: placeholder admission per batch. */
   def factsSink(facts: DataFrame, dimPath: String, checkpoint: String,
                 factKey: String): DataStreamWriter[Row] =
-    facts.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        admitFacts(batch, dimPath, factKey)
-      }
+    Lake.batchSink(facts, checkpoint)((batch, _) =>
+      admitFacts(batch, dimPath, factKey))
 
   /** Checkpointed dim-side sink: type-1 healing per batch. */
   def dimsSink(dims: DataFrame, dimPath: String, checkpoint: String,
                dimKey: String, state: String, ts: String,
                ord: String): DataStreamWriter[Row] =
-    dims.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        healDims(batch, dimPath, dimKey, state, ts, ord)
-      }
+    Lake.batchSink(dims, checkpoint)((batch, _) =>
+      healDims(batch, dimPath, dimKey, state, ts, ord))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -8,10 +9,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Dwh.mvRefresh for ADDITIVE aggregates (sum/count).
   *
   * Exactly-once without a transactional table format: each micro-batch
-  * writes its PARTIAL aggregate into its own `__batch=<id>` partition
-  * via dynamic partition overwrite — a replayed batch overwrites its
-  * own partition byte-for-byte instead of double-adding (the failure
-  * mode of merge-into-the-standing-view designs). The queryable view is
+  * writes its PARTIAL aggregate under the replay discipline of
+  * [[graft.sources.Lake.writeBatchPartition]], so a replayed batch
+  * replaces its own partial instead of double-adding (the failure mode
+  * of merge-into-the-standing-view designs). The queryable view is
   * a rollup OF the partials (batches × keys rows — agg-sized, never
   * data-sized), and `compact` folds history into one partition so the
   * partial count stays bounded.
@@ -22,22 +23,15 @@ object MvSink {
     * per-batch partition write. */
   def mvSink(df: DataFrame, path: String, checkpoint: String,
              keys: Seq[String], addCols: Seq[String]): DataStreamWriter[Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mvBatch(batch, path, keys, addCols, batchId)
-      }
+    Lake.batchSink(df, checkpoint)(mvBatch(_, path, keys, addCols, _))
 
   /** One micro-batch (also the backfill/batch-twin API). */
   def mvBatch(batch: DataFrame, path: String, keys: Seq[String],
               addCols: Seq[String], batchId: Long): Unit = {
     val aggs = addCols.map(c => sum(c).as(c))
-    batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(path)
+    Lake.writeBatchPartition(
+      batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*),
+      batchId, path)
   }
 
   /** The queryable view: merge every batch's partial (γ over the
@@ -51,14 +45,14 @@ object MvSink {
 
   /** Fold all partials into a single `__batch=-1` partition and drop
     * the per-batch history, bounding the partial count between
-    * compactions. Run from maintenance, not the hot path. */
+    * compactions. Run from maintenance, not the hot path; the fold
+    * replaces the store through [[graft.sources.Lake.swapIn]], so a
+    * failed compaction leaves the partials as they were. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-              keys: Seq[String], addCols: Seq[String]): Unit = {
-    val folded = readView(spark, path, keys, addCols)
-      .withColumn("__batch", lit(-1L))
-      .localCheckpoint(true)
-    try
-      folded.write.mode("overwrite").partitionBy("__batch").parquet(path)
-    finally folded.unpersist()
-  }
+              keys: Seq[String], addCols: Seq[String]): Unit =
+    Lake.swapIn(spark, path) { next =>
+      readView(spark, path, keys, addCols)
+        .withColumn("__batch", lit(-1L))
+        .write.partitionBy("__batch").parquet(next)
+    }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -12,14 +13,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * statistics), so the model at any moment is one rollup over the
   * stored partials.
   *
-  * State design: increments land in a parquet lake partitioned by
-  * `__batch` with DYNAMIC partition overwrite — a replayed micro-batch
-  * recomputes the same increment from the same data and overwrites its
-  * own partition with identical bytes, so at-least-once redelivery
-  * converges instead of double-counting (the upsertSink / OnlineSgdSink
-  * discipline). No state is read on the write path at all — unlike SGD
-  * there is no sequential dependency, which is exactly why count-based
-  * models are the easy ones to stream.
+  * State design: one increment per batch under the replay discipline
+  * of [[graft.sources.Lake.writeBatchPartition]]. No state is read on
+  * the write path at all — unlike SGD there is no sequential
+  * dependency, which is exactly why count-based models are the easy
+  * ones to stream.
   *
   * Scale shape: the per-batch increment is one map-side-combined
   * (token, lang) rollup over the batch; the store grows by
@@ -31,14 +29,10 @@ object NbModelSink {
   /** One micro-batch of count increments — also the backfill twin.
     * `batch` must carry `lang` and `text` columns. */
   def countsBatch(batch: DataFrame, batchId: Long, statePath: String): Unit = {
-    batch
+    Lake.writeBatchPartition(batch
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("lang", "tok").agg(count(lit(1)).as("c"))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(statePath)
+      .groupBy("lang", "tok").agg(count(lit(1)).as("c")),
+      batchId, statePath)
   }
 
   /** The live model: (lang, tok, c) totals over every stored batch
@@ -51,9 +45,5 @@ object NbModelSink {
     * point it at a state path, start. */
   def sink(stream: DataFrame, statePath: String,
            checkpoint: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        countsBatch(batch, id, statePath)
-      }
+    Lake.batchSink(stream, checkpoint)(countsBatch(_, _, statePath))
 }

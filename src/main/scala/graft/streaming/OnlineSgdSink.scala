@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Stats
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -14,14 +15,12 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * traffic).
   *
   * State design (the part that must survive failure): weights live in a
-  * tiny parquet lake partitioned by `__batch` — one row per micro-batch
-  * — written with DYNAMIC partition overwrite. Recovery reads the
-  * latest row STRICTLY BELOW the replaying batch id, so a replayed
+  * tiny per-batch store, one row per micro-batch, under the replay
+  * discipline of [[graft.sources.Lake.writeBatchPartition]]. Each batch
+  * starts from the latest row STRICTLY BELOW its own id, so a replayed
   * batch recomputes from exactly the state it saw the first time and
-  * overwrites its own partition with identical bytes: at-least-once
-  * redelivery converges instead of double-stepping (same discipline as
-  * upsertSink / MvSink). The weight history this leaves behind is the
-  * model's audit trail for free.
+  * rewrites identical weights instead of double-stepping. The weight
+  * history this leaves behind is the model's audit trail for free.
   *
   * Scale shape: the per-batch step is Stats.logisticStep — one
   * map-side-combined aggregate over the batch, weights inlined as
@@ -37,13 +36,9 @@ object OnlineSgdSink {
   def weightsBefore(spark: org.apache.spark.sql.SparkSession,
                     statePath: String, batchId: Long, dims: Int)
       : Array[Double] = {
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Array.fill(dims + 1)(0.0)
-    val rows = spark.read.parquet(statePath)
-      .filter(col("__batch") < batchId)
-      .orderBy(col("__batch").desc).limit(1)
-      .collect()
+    val rows = Lake.readStore(spark, statePath).fold(Array.empty[Row])(
+      _.filter(col("__batch") < batchId)
+        .orderBy(col("__batch").desc).limit(1).collect())
     if (rows.isEmpty) Array.fill(dims + 1)(0.0)
     else rows.head.getSeq[Double](rows.head.fieldIndex("w")).toArray
   }
@@ -61,11 +56,7 @@ object OnlineSgdSink {
       } finally feats.unpersist()
     }
     import spark.implicits._
-    Seq((batchId, w.toSeq)).toDF("__batch", "w")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(statePath)
+    Lake.writeBatchPartition(Seq(w.toSeq).toDF("w"), batchId, statePath)
   }
 
   /** The streaming writer: wire a feature stream in, point it at a
@@ -73,9 +64,6 @@ object OnlineSgdSink {
   def sink(stream: DataFrame, statePath: String, checkpoint: String,
            dims: Int = 3, lr: Double = 5.0,
            stepsPerBatch: Int = 1): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sgdBatch(batch, id, statePath, dims, lr, stepsPerBatch)
-      }
+    Lake.batchSink(stream, checkpoint)(
+      sgdBatch(_, _, statePath, dims, lr, stepsPerBatch))
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Stats
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -14,33 +15,25 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * so a reader merges cold-store days and live-stream batches with one
   * mergeQuantilePartials call — the lambda join the fixed domain buys.
   *
-  * Replay discipline (same as OnlineSgdSink/MvSink): partials land
-  * partitioned by `__batch` with DYNAMIC partition overwrite, so an
-  * at-least-once redelivery overwrites its own partition with identical
-  * bytes instead of double-counting. The store stays sketch-sized —
+  * The partials follow the replay discipline of
+  * [[graft.sources.Lake.writeBatchPartition]], so nothing
+  * double-counts. The store stays sketch-sized —
   * ≤ days×nBins rows per batch partition, never data-sized. */
 object QuantileSketchSink {
 
   /** One micro-batch of sketch maintenance — also the backfill twin. */
   def partialsBatch(batch: DataFrame, batchId: Long, storePath: String,
                     c: String, lo: Double, hi: Double, nBins: Int): Unit =
-    Stats.quantilePartials(batch, c, lo, hi, nBins)
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(storePath)
+    Lake.writeBatchPartition(Stats.quantilePartials(batch, c, lo, hi, nBins),
+      batchId, storePath)
 
   /** The streaming writer: point an event stream (with `ts` and the
     * value column) at a sketch store, start. */
   def sink(stream: DataFrame, storePath: String, checkpoint: String,
            c: String = "value", lo: Double = 0.0, hi: Double = 500.0,
            nBins: Int = 50): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        partialsBatch(batch, id, storePath, c, lo, hi, nBins)
-      }
+    Lake.batchSink(stream, checkpoint)(
+      partialsBatch(_, _, storePath, c, lo, hi, nBins))
 
   /** Read side: merged quantile estimates over EVERYTHING the store
     * holds (all batches, all days) — one constant-size sketch merge. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Stats
+import graft.sources.Lake
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,12 +14,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * trending-values loop next to AbMonitorSink's live experiment.
   *
   * State design: per-value counts are MERGEABLE (counts add across
-  * batches), so the store is append-only per-batch rollups in a
-  * `__batch`-partitioned lake with dynamic overwrite — a replayed
-  * micro-batch recomputes the same rollup from the same data and
-  * overwrites its own partition with identical bytes (the NbModelSink
-  * discipline: at-least-once redelivery converges, nothing
-  * double-counts). No state is read on the write path.
+  * batches), so the store is one rollup per batch under the replay
+  * discipline of [[graft.sources.Lake.writeBatchPartition]].
   *
   * Scale shape: the per-batch increment is one map-side-combined
   * value rollup over the batch, CAPPED at the top `capM` values per
@@ -56,13 +53,8 @@ object TopKSink {
     val cut = top.agg(
       coalesce(max(when(col("__r") === capM + 1, col("n"))), lit(0L))
         .as("__cut"))
-    top.filter(col("__r") <= capM).drop("__r")
-      .crossJoin(broadcast(cut))
-      .withColumn("__batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch")
-      .parquet(statePath)
+    Lake.writeBatchPartition(top.filter(col("__r") <= capM).drop("__r")
+      .crossJoin(broadcast(cut)), batchId, statePath)
   }
 
   /** The live top-k over every stored partial: one merge rollup, then
@@ -96,9 +88,6 @@ object TopKSink {
 
   def sink(stream: DataFrame, statePath: String, checkpoint: String,
            c: String, capM: Int = 4096): DataStreamWriter[Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        incrementsBatch(batch, id, statePath, c, capM)
-      }
+    Lake.batchSink(stream, checkpoint)(
+      incrementsBatch(_, _, statePath, c, capM))
 }
