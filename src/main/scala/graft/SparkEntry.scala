@@ -6129,20 +6129,25 @@ object SparkEntry {
              sum(v * n - s) OVER (ORDER BY hr
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS nx
            FROM hourly CROSS JOIN tt),
-         p2 AS (SELECT rn, n, CAST(nx AS DOUBLE) / n AS y FROM prof),
-         bx AS (SELECT m, (rn - 1) // m AS box,
-             CAST((rn - 1) % m + 1 AS DOUBLE) AS x, y
-           FROM p2 CROSS JOIN (VALUES (4), (8), (16), (32)) mm(m)
+         bx AS (SELECT m, (rn - 1) // m AS box, n,
+             (rn - 1) % m + 1 AS x, CAST(nx AS HUGEINT) AS nx
+           FROM prof CROSS JOIN (VALUES (4), (8), (16), (32)) mm(m)
            WHERE (rn - 1) // m < n // m),
-         pb AS (SELECT m, box, CAST(count(*) AS BIGINT) AS c,
-             sum(x) AS sx, sum(x * x) AS sxx, sum(y) AS sy,
-             sum(y * y) AS syy, sum(x * y) AS sxy
-           FROM bx GROUP BY 1, 2),
-         sse AS (SELECT m,
+         pb AS (SELECT m, box, n, CAST(count(*) AS BIGINT) AS c,
+             CAST(sum(x) AS DOUBLE) AS sx,
+             CAST(sum(x * x) AS DOUBLE) AS sxx,
+             sum(nx) AS su, sum(nx * nx) AS suu, sum(x * nx) AS sxu
+           FROM bx GROUP BY 1, 2, 3),
+         pd AS (SELECT m, box, c, sx, sxx,
+             CAST(CAST(su AS VARCHAR) AS DOUBLE) / n AS sy,
+             CAST(CAST(suu AS VARCHAR) AS DOUBLE) / (n * n) AS syy,
+             CAST(CAST(sxu AS VARCHAR) AS DOUBLE) / n AS sxy FROM pb),
+         sse AS (SELECT m, box,
              ((syy - sy * sy / c)
                - pow(sxy - sx * sy / c, 2) / (sxx - sx * sx / c)) AS sse,
-             c FROM pb),
-         fm AS (SELECT m, sqrt(sum(sse / c) / count(*)) AS f
+             c FROM pd),
+         fm AS (SELECT m, sqrt(list_reduce(list(sse / c ORDER BY box),
+               (a, b) -> a + b) / count(*)) AS f
            FROM sse GROUP BY 1),
          fl AS (SELECT m, f, ln(CAST(m AS DOUBLE)) AS lx, ln(f) AS ly
            FROM fm),

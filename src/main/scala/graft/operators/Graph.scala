@@ -112,11 +112,11 @@ object Graph {
         count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("src")))
       .localCheckpoint(true)
-    val nodes = ed.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
     // guarded rank/msum frames (Loops.bcOr; measured isolated sf0.1:
-    // 3.5 → 2.6 s warm, bit-identical): one node count off the checkpoint
-    val nNodes = nodes.count()
+    // 3.5 → 2.6 s warm, bit-identical): the node count rides the
+    // checkpoint's own job
+    val (nodes, nNodes) = Loops.checkpointCounted(
+      ed.select(col("src").as("node")).distinct())
     val seeds = nodes.orderBy("node").limit(nSeeds)
       .withColumn("base", lit(1.0 / nSeeds))
       .localCheckpoint(true)
@@ -244,11 +244,12 @@ object Graph {
     // FULLY LAZY label lineage, RE-CONFIRMED r15: materializing the
     // LPA chain here (labels.localCheckpoint(true) + count off it)
     // probe-measured 8.2 s suite / 9.5 s isolated vs 6.6/6.3 lazy at
-    // sf0.1 — the .rdd route still compiles the chain WITHOUT adaptive
-    // execution even with the r13 hints (every node-sized stage keeps
-    // all 32 shuffle tasks instead of AQE-coalescing), so the r13
-    // lazy trade stands: the two label probes re-run the lazy chain
-    // once each (~1.4 s, gr_lpa's own bench number).
+    // sf0.1, so the r13 lazy trade stands: the two label probes re-run
+    // the lazy chain once each (~1.4 s, gr_lpa's own bench number). A
+    // checkpoint does run under adaptive execution (a final
+    // AdaptiveSparkPlan with AQE-coalesced shuffle reads,
+    // plans/r18/gr_bfs_round_after.txt), so that is not what makes the
+    // materialized chain slower here; the cause is not known.
     // guarded label probes (Loops.bcOr). Counting `labels` would run the
     // chain a THIRD time, so the guard measures the node count off the
     // EDGE frame instead — under the documented precondition (labels
@@ -627,10 +628,8 @@ object Graph {
     * gr_coreness pins it to the oracle's 10-round unroll. */
   def coreness(edges: DataFrame, maxIters: Int = 30): DataFrame = {
     val und = symmetricEdges(edges).repartition(col("b")).localCheckpoint(true)
-    val c0 = und.groupBy(col("a").as("node"))
-      .agg(count(lit(1)).cast("int").as("c"))
-      .localCheckpoint(true)
-    val nNodes = c0.count()
+    val (c0, nNodes) = Loops.checkpointCounted(
+      und.groupBy(col("a").as("node")).agg(count(lit(1)).cast("int").as("c")))
     // h = max_w min(w, C_w) over the neighbor-value histogram, where
     // C_w = #neighbors with value ≥ w (proof: count(values ≥ k) ≥ k
     // holds for k = min(w, C_w) at every distinct w, and the max over
@@ -1184,16 +1183,15 @@ object Graph {
                                   maxRounds: Int = 60): DataFrame = {
     val ed0 = edges.select("src", "dst")
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
-    var active = ed0.select(col("src").as("node"))
-      .unionByName(ed0.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+    // every hinted frame below (label probes, pulled mins, classified
+    // set) is bounded by the ACTIVE node count, re-measured per pass by
+    // the checkpoint's own job (the active set shrinks as SCCs peel off)
+    var (active, nActive) = Loops.checkpointCounted(
+      ed0.select(col("src").as("node"))
+        .unionByName(ed0.select(col("dst").as("node"))).distinct())
     var ed = ed0
     val results = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var pass = 0
-    // every hinted frame below (label probes, pulled mins, classified
-    // set) is bounded by the ACTIVE node count, re-measured per pass off
-    // the checkpoint (the active set shrinks as SCCs peel off)
-    var nActive = active.count()
     def bc(df: DataFrame): DataFrame = bcOr(df, nActive)
     while (nActive > 0 && pass < maxPasses) {
       pass += 1
@@ -1226,14 +1224,15 @@ object Graph {
         .select(col("node"), col("m").as("scc_id"))
         .localCheckpoint(true)
       results += classified
-      active = active.join(bc(classified.select("node")), Seq("node"),
-        "left_anti").localCheckpoint(true)
+      val (rest, nRest) = Loops.checkpointCounted(active.join(
+        bc(classified.select("node")), Seq("node"), "left_anti"))
+      active = rest
       ed = ed.join(bc(classified.select(col("node").as("src"))),
           Seq("src"), "left_anti")
         .join(bc(classified.select(col("node").as("dst"))),
           Seq("dst"), "left_anti")
         .localCheckpoint(true)
-      nActive = active.count()
+      nActive = nRest
     }
     if (nActive > 0) throw new IllegalStateException(
       s"SCC peeling did not finish in $maxPasses passes")
@@ -1300,13 +1299,12 @@ object Graph {
       // probe costs a full crossing pass. Reverted; the 3-round shape
       // stands.
       // min outgoing edge per component under the (w, s, t) total order
-      val chosen = crossing.groupBy("cu")
+      val (chosen, nChosen) = Loops.checkpointCounted(crossing.groupBy("cu")
         .agg(min(struct(col("w"), col("s"), col("t"), col("cv")))
           .as("e"))
         .select(col("e.w").as("w"), col("e.s").as("s"),
-          col("e.t").as("t"), col("cu"), col("e.cv").as("cv"))
-        .localCheckpoint(true)
-      remaining = chosen.count()
+          col("e.t").as("t"), col("cu"), col("e.cv").as("cv")))
+      remaining = nChosen
       if (remaining > 0) {
         // picked is only CONSUMED once, at return: keep it a lazy
         // union of the already-checkpointed per-round chosen frames

@@ -2559,13 +2559,18 @@ object Resample {
     * (n·Xₜ = Σ(n·vᵢ − S) — micro-unit longs, no cumulative float
     * drift), box membership and in-box positions are integer
     * row-number arithmetic, and each box's OLS residual uses the
-    * closed form on ≤32 values. One window pass for the profile; the
-    * box rollup is one grouped aggregate over the (hour × 4 box
-    * sizes) frame; the α fit runs on a 4-row frame. */
+    * closed form on ≤32 values whose sums Σnx, Σnx² and Σx·nx are
+    * exact decimal(38,0) integers, each divided by n or n² once (a
+    * double sum would follow the shuffle's merge order). F(m) sums the
+    * per-box sse/c as a left fold over the boxes in order, the same
+    * order on both engines. One window pass for the profile; the box
+    * rollup is one grouped aggregate over the (hour × 4 box sizes)
+    * frame; the α fit runs on a 4-row frame. */
   def dfaAlpha(events: DataFrame, eventType: String = "click",
                boxes: Seq[Int] = Seq(4, 8, 16, 32)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import events.sparkSession.implicits._
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val hourly = events.filter(col("event_type") === eventType)
       .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
         .as("hr"))
@@ -2576,26 +2581,33 @@ object Resample {
       .select(row_number().over(w).cast("long").as("rn"), col("n"),
         sum(col("v") * col("n") - col("s")).over(
           w.rowsBetween(Window.unboundedPreceding, 0)).as("nx"))
-      .withColumn("y", col("nx").cast("double") / col("n"))
     val bx = prof.crossJoin(broadcast(boxes.toDF("m")))
       // integer box arithmetic (Spark's `/` on integral columns is a
       // DOUBLE divide — `div` keeps boxes and the full-box cutoff exact)
       .filter(expr("(rn - 1) div m") < expr("n div m"))
-      .select(col("m"), expr("(rn - 1) div m").as("box"),
-        (((col("rn") - 1) % col("m")) + 1).cast("double").as("x"),
-        col("y"))
-    val perBox = bx.groupBy("m", "box")
-      .agg(count(lit(1)).as("c"), sum("x").as("sx"),
-        sum(col("x") * col("x")).as("sxx"), sum("y").as("sy"),
-        sum(col("y") * col("y")).as("syy"),
-        sum(col("x") * col("y")).as("sxy"))
-      .select(col("m"),
+      .select(col("m"), expr("(rn - 1) div m").as("box"), col("n"),
+        (((col("rn") - 1) % col("m")) + 1).as("x"),
+        col("nx").cast(dec).as("nx"))
+    val perBox = bx.groupBy("m", "box", "n")
+      .agg(count(lit(1)).as("c"), sum("x").cast("double").as("sx"),
+        sum(col("x") * col("x")).cast("double").as("sxx"),
+        sum("nx").as("su"), sum(col("nx") * col("nx")).as("suu"),
+        sum(col("x").cast(dec) * col("nx")).as("sxu"))
+      .select(col("m"), col("box"), col("c"), col("sx"), col("sxx"),
+        (col("su").cast("double") / col("n")).as("sy"),
+        (col("suu").cast("double") / (col("n") * col("n"))).as("syy"),
+        (col("sxu").cast("double") / col("n")).as("sxy"))
+      .select(col("m"), col("box"),
         ((col("syy") - col("sy") * col("sy") / col("c")) -
           pow(col("sxy") - col("sx") * col("sy") / col("c"), 2) /
             (col("sxx") - col("sx") * col("sx") / col("c"))).as("sse"),
         col("c"))
     val fm = perBox.groupBy("m")
-      .agg(sqrt(sum(col("sse") / col("c")) / count(lit(1))).as("f"))
+      .agg(array_sort(collect_list(struct(col("box"),
+        (col("sse") / col("c")).as("q")))).as("qs"))
+      .select(col("m"), sqrt(
+        aggregate(col("qs"), lit(0.0), (acc, b) => acc + b.getField("q")) /
+          size(col("qs"))).as("f"))
       .withColumn("lx", log(col("m").cast("double")))
       .withColumn("ly", log(col("f")))
     val a = fm.agg(count(lit(1)).as("k"), sum("lx").as("sx"),

@@ -4773,39 +4773,39 @@ object Stats {
     * round(T·w9·1e9 / (k·Σnw9)) whose inputs are exact integers
     * (decimal sums cast to double deterministically) — so the DuckDB
     * twin unrolls the same six scalings and lands on identical longs.
-    * Every frame after the first rollup is CELL-BOUNDED (k_r × k_c);
-    * margins ride broadcasts. */
+    *
+    * One lazy plan, no eager job: the cell rollup keeps its parallel
+    * partial aggregation and is then coalesced to one partition — the
+    * grid is CELL-BOUNDED (k_r × 7 rows). `tt`/`kr`/`kc` are whole-frame
+    * window aggregates and each scaling's margin sum is a window over
+    * its key, so every scaling reads the previous frame once and the
+    * lineage grows by one window per scaling (a margin rollup joined
+    * back reads it twice, which doubles the lineage per scaling and
+    * needs a checkpoint each time). A window keeps the
+    * rows of a null key where the oracle's `JOIN … USING` drops them,
+    * so each scaling filters its key to non-null right after it: a null
+    * `event_type` cell goes at the first scaling, a null-day cell at the
+    * second, after it has counted in its row margin; `tt` counts both. */
   def ipf(events: DataFrame, rounds: Int = 3): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val cells = events.select(col("event_type").as("r"),
+    var w = events.select(col("event_type").as("r"),
         pmod(expr("unix_date(cast(ts as date))").cast("long"), lit(7L))
           .as("cgrp"))
       .groupBy("r", "cgrp").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    val tot = cells.agg(sum("n").as("tt"),
-      countDistinct("r").as("kr"), countDistinct("cgrp").as("kc"))
-    var w = cells.crossJoin(broadcast(tot))
-      .select(col("r"), col("cgrp"), col("n"), col("tt"), col("kr"),
-        col("kc"), lit(1000000000L).as("w9"))
+      .coalesce(1)
+      .select(col("r"), col("cgrp"), col("n"), sum("n").over().as("tt"),
+        size(collect_set("r").over()).cast("long").as("kr"),
+        size(collect_set("cgrp").over()).cast("long").as("kc"),
+        lit(1000000000L).as("w9"))
     def rescale(keyCol: String, kCol: String): Unit = {
-      val sums = w.groupBy(keyCol)
-        .agg(sum(col("n").cast(dec) * col("w9").cast(dec)).as("s"))
-      w = w.join(broadcast(sums), Seq(keyCol))
-        .withColumn("w9", round(
+      val s = sum(col("n").cast(dec) * col("w9").cast(dec))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(keyCol))
+      w = w.withColumn("w9", round(
           (col("tt").cast(dec) * col("w9").cast(dec) *
             lit(1000000000L).cast(dec)).cast("double") /
-          (col(kCol).cast("double") * col("s").cast("double")))
+          (col(kCol).cast("double") * s.cast("double")))
           .cast("long"))
-        .drop("s")
-        // checkpoint per scaling (r15): each rescale references w
-        // TWICE (the margin rollup and the join back), so the lazy
-        // lineage doubled per scaling — 2^6 copies of the base plan,
-        // 318 Exchange nodes in the dumped plan, and the optimizer
-        // re-planned all of them every action. The frame is
-        // CELL-BOUNDED (k_r × k_c rows), so six materializations are
-        // ~free and the plan stays one scaling deep (the classic
-        // iterative-lineage trap, same cure as the graph loops).
-        .localCheckpoint(true)
+        .filter(col(keyCol).isNotNull)
     }
     for (_ <- 1 to rounds) { rescale("r", "kr"); rescale("cgrp", "kc") }
     // floor convention (Exact.scala): w9/1000 is an exact double for

@@ -2349,6 +2349,28 @@ class StatsSpec extends SparkSpec {
     }
   }
 
+  test("ipf: a null event_type cell drops at the first scaling, a null " +
+      "day cell at the second after counting in its row margin, and tt " +
+      "counts both") {
+    import spark.implicits._
+    // (event_type, day, n); a null day makes a null ts and so a null cgrp
+    val cells = Seq[(String, Option[Int], Int)](("a", Some(0), 30),
+      ("a", Some(1), 10), ("b", Some(0), 10), ("b", Some(1), 10),
+      (null, Some(0), 5), (null, None, 2), ("a", None, 7), ("b", None, 3))
+    val events = cells.flatMap { case (et, d, n) => Seq.fill(n)((et, d)) }
+      .toDF("event_type", "day")
+      .select(col("event_type"),
+        date_add(lit("1970-01-01").cast("date"), col("day"))
+          .cast("timestamp").as("ts"))
+    val out = Stats.ipf(events).collect()
+      .map(r => ((r.getString(0), r.getLong(1)),
+        (r.getLong(2), r.getDouble(3)))).toMap
+    // pinned from the join-per-scaling form (inner joins on the key)
+    assert(out == Map(("a", 0L) -> (30L, 0.813347),
+      ("a", 1L) -> (10L, 1.408438), ("b", 0L) -> (10L, 1.409958),
+      ("b", 1L) -> (10L, 2.441562)), s"$out")
+  }
+
   test("brunnerMunzel: hand-computed W on the interleave, p_hat 1 with " +
       "null W under separation, exact zero on identical samples") {
     import spark.implicits._
