@@ -437,30 +437,12 @@ object Dedup {
       .orderBy(desc("n_docs"), desc("n_occurrences"), asc("chunk_hash"))
       .limit(topN)
 
-  /** Connected components over a near-dup pair list (d1 < d2): cluster
-    * id = smallest doc_id reachable. Iterative min-label propagation —
-    * the Spark-native CC (each round: join labels to edges, take the
-    * neighborhood min; converges in O(diameter) rounds, O(log n) with
-    * both edge directions). The loop is driver-side but each round is a
-    * distributed join; dup clusters are tiny diameter in practice. A
-    * graph whose labels have not settled within `maxIter` rounds throws
-    * IllegalStateException rather than return partial clusters.
-    *
-    * Small-graph fast path (MEASURED, the broadcast-gate idiom): an edge
-    * list under `driverEdgeLimit` rows (~32 MB of long pairs at the 2M
-    * default) finishes in one collect + union-find instead of paying
-    * O(log diameter) distributed rounds whose per-round job overhead
-    * dwarfs the work — a percolated 50k-edge graph measured 19 s in
-    * rounds vs milliseconds in the fast path, identical labels (spec-
-    * locked equal on both paths). A 100 TB corpus whose candidate pairs
-    * exceed the limit takes the distributed rounds unchanged; the
-    * collect is the same justified-scalar class as codebook training. */
   /** Driver-side union-find with path compression over an edge array
     * (direction/duplicates immaterial): (node, min member id) labels —
     * the [[dupClusters]] fast path's core, shared with
     * Graph.minimumSpanningForest's per-round component contraction
     * (whose pair frame is already checkpointed AND counted, so calling
-    * this directly skips the fast path's cache+count+re-collect). */
+    * this directly skips the fast path's counted checkpoint). */
   private[operators] def unionFindLabels(es: Array[(Long, Long)])
       : Seq[(Long, Long)] = {
     // union-find with path compression; final label = min member id
@@ -486,31 +468,52 @@ object Dedup {
     labels.toSeq
   }
 
+  /** Connected components over a near-dup pair list (d1 < d2): cluster
+    * id = smallest doc_id reachable. Iterative min-label propagation —
+    * the Spark-native CC (each round: join labels to edges, take the
+    * neighborhood min; converges in O(diameter) rounds, O(log n) with
+    * both edge directions). The loop is driver-side but each round is a
+    * distributed join; dup clusters are tiny diameter in practice. A
+    * graph whose labels have not settled within `maxIter` rounds throws
+    * IllegalStateException rather than return partial clusters.
+    *
+    * Small-graph fast path (MEASURED, the broadcast-gate idiom): an edge
+    * list under `driverEdgeLimit` rows (~32 MB of long pairs at the 2M
+    * default) finishes in one collect + union-find instead of paying
+    * O(log diameter) distributed rounds whose per-round job overhead
+    * dwarfs the work — a percolated 50k-edge graph measured 19 s in
+    * rounds vs milliseconds in the fast path, identical labels (spec-
+    * locked equal on both paths). A 100 TB corpus whose candidate pairs
+    * exceed the limit takes the distributed rounds unchanged; the
+    * collect is the same justified-scalar class as codebook training. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
                   driverEdgeLimit: Long = 2000000L): DataFrame = {
-    // near-dup edge lists are usually tiny relative to the corpus:
-    // collapse to a few partitions before caching so each fixpoint round
-    // doesn't pay 32 near-empty task launches per job. MEASURED, not
-    // assumed (the dd_cluster lesson): the cached row count decides, so
-    // a boilerplate-heavy corpus whose edge list is itself large keeps
-    // full parallelism instead of serializing every CC round onto 4
-    // tasks at 100 TB.
-    val edgesAll = pairs.select(col("d1").as("a"), col("d2").as("b"))
-      .unionByName(pairs.select(col("d2").as("a"), col("d1").as("b")))
-      .cache()
-    val nEdges = edgesAll.count()
+    // the pair lineage (the expensive candidate generation) runs once:
+    // one counted checkpoint of the pair list feeds the driver collect
+    // and both edge directions of the distributed rounds. Both paths
+    // keep a self-pair (x, x) as the singleton cluster {x}; a pair with
+    // a null end joins no cluster on the driver path.
+    val (pairList, nPairs) = Loops.checkpointCounted(
+      pairs.select(col("d1").as("a"), col("d2").as("b")))
+    val nEdges = 2 * nPairs
     if (nEdges <= driverEdgeLimit) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      // read the CACHED edge frame, not `pairs` — collecting the raw
-      // pair lineage would recompute the (expensive) candidate
-      // generation a second time; the a<b filter restores one direction
-      val es = edgesAll.filter(col("a") < col("b"))
-        .select(col("a").cast("long"), col("b").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      edgesAll.unpersist()
+      val es = pairList.select(col("a").cast("long"), col("b").cast("long"))
+        .collect().collect {
+          case r if !r.anyNull => (r.getLong(0), r.getLong(1))
+        }
       return unionFindLabels(es).toDF("doc_id", "cluster_id")
     }
+    // near-dup edge lists are usually tiny relative to the corpus:
+    // collapse to a few partitions so each fixpoint round doesn't pay 32
+    // near-empty task launches per job. MEASURED, not assumed (the
+    // dd_cluster lesson): the counted edge total decides, so a
+    // boilerplate-heavy corpus whose edge list is itself large keeps
+    // full parallelism instead of serializing every CC round onto 4
+    // tasks at 100 TB.
+    val edgesAll = pairList
+      .unionByName(pairList.select(col("b").as("a"), col("a").as("b")))
     val edges =
       if (nEdges <= 1000000L) edgesAll.coalesce(4)
       else edgesAll

@@ -698,9 +698,10 @@ object Graph {
     * Returns the (dist, n_nodes) histogram, seeds at dist 0.
     *
     * Scale shape: classic frontier expansion. Each round is ONE
-    * frontier⋈edges join on src (frontier is the only frame that moves;
-    * AQE broadcasts it while small) + a left_anti against the settled
-    * set to keep only newly reached nodes. The settled frame is
+    * frontier⋈edges join on src (the frontier is guard-broadcast while
+    * under the node limit, so only it moves; above the limit a
+    * `shuffle_hash` join exchanges both sides) + a left_anti against the
+    * settled set to keep only newly reached nodes. The settled frame is
     * multiply-referenced (anti-join now, union later, next rounds) AND
     * loop-carried, so it localCheckpoints per round — the frontier
     * collapses geometrically on small-world graphs, so rounds get
@@ -708,7 +709,7 @@ object Graph {
     * same bound via a depth-capped recursive CTE), so `maxDepth` is a
     * RESULT contract: reaching it is the answer, not an error. */
   def bfs(edges: DataFrame, seeds: DataFrame, maxDepth: Int = 4): DataFrame = {
-    val ed = partitionedEdges(edges)
+    val ed = checkpointedEdges(edges)
     val (levels, _) = Loops.frontier(
         seeds.select(col("node")).distinct().withColumn("dist", lit(0)),
         Seq("node"), maxDepth) { (f, depth) =>
@@ -720,12 +721,14 @@ object Graph {
       .groupBy("dist").agg(count(lit(1)).as("n_nodes"))
   }
 
-  /** The static edge list, deduplicated, hash-partitioned on src and
-    * checkpointed once: every frontier round probes it with a guarded
-    * broadcast frontier, so it never moves again. */
-  private def partitionedEdges(edges: DataFrame): DataFrame =
-    edges.select("src", "dst").distinct()
-      .repartition(col("src")).localCheckpoint(true)
+  /** The static edge list, deduplicated and checkpointed once: every
+    * frontier round probes it with a guarded broadcast frontier, so it
+    * stays put while the frontier is under the node limit. No
+    * partitioning on src is worth paying for first: the checkpoint
+    * reads back with `UnknownPartitioning`, so a `shuffle_hash` round
+    * above the limit exchanges it either way. */
+  private def checkpointedEdges(edges: DataFrame): DataFrame =
+    edges.select("src", "dst").distinct().localCheckpoint(true)
 
   /** Landmark HARMONIC closeness centrality — "which nodes sit nearest
     * to everything" — estimated from `nLandmarks` pivot nodes instead of
@@ -737,19 +740,19 @@ object Graph {
     *
     * Scale shape: ONE multi-source BFS carrying the landmark id in the
     * frontier key — state is (node, lm, dist), ≤ V×L rows; each round is
-    * the same frontier⋈edges join as [[bfs]] (edge list pre-partitioned
-    * on src and checkpointed — it never moves again), and the landmark
+    * the same frontier⋈edges join as [[bfs]] (edge list checkpointed
+    * once, probed by the guard-broadcast frontier), and the landmark
     * set is picked by a PORTABLE md5 hash-order (top-L of md5(node)) so
     * the DuckDB oracle selects the identical pivots. Top-k output is
     * TakeOrdered-sized. */
   /** Multi-landmark BFS distances — the shared frontier loop behind
     * [[harmonicCentrality]] and [[diameterEstimate]]: md5-pivoted
-    * landmarks, per-round frontier⋈edges on the pre-partitioned edge
-    * frame (only the frontier ever moves), settled (node, lm, dist)
-    * out. */
+    * landmarks, per-round frontier⋈edges on the checkpointed edge
+    * frame (only the frontier moves while it is broadcast), settled
+    * (node, lm, dist) out. */
   private def landmarkDistances(edges: DataFrame, nLandmarks: Int,
                                 maxDepth: Int): DataFrame = {
-    val ed = partitionedEdges(edges)
+    val ed = checkpointedEdges(edges)
     val nodes = ed.select(col("src").as("node"))
       .unionByName(ed.select(col("dst").as("node"))).distinct()
     val lms = nodes
@@ -1070,7 +1073,7 @@ object Graph {
     *
     * Forward pass: level-synchronous multi-source BFS carrying the
     * shortest-path COUNT σ — each round is one frontier⋈edges join on
-    * the pre-partitioned static edge frame + a (source, node)
+    * the checkpointed static edge frame + a (source, node)
     * partial-agg σ-sum + one anti-join against settled (in that
     * order — the anti-join filters aggregated rows, r14); state is
     * ≤ V·K rows. Backward pass: Brandes' dependency accumulation per level,
@@ -1081,7 +1084,7 @@ object Graph {
     * construction). One edge join + rollup per level, each way. */
   def betweennessSampled(edges: DataFrame, nSources: Int = 4,
                          maxDepth: Int = 6): DataFrame = {
-    val ed = partitionedEdges(edges)
+    val ed = checkpointedEdges(edges)
     val nodes = ed.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
     val sources = nodes
@@ -1324,7 +1327,7 @@ object Graph {
         // `chosen` is already checkpointed AND counted (`remaining`),
         // so under the dupClusters driver-edge limit the union-find
         // runs on ONE direct collect instead of dupClusters' fast path
-        // re-paying union-both-directions + cache + count per round
+        // re-paying a counted checkpoint of the pair list per round
         // (probe-measured, OPTIMIZATION_r15.md); above the limit the
         // distributed CC machinery takes over unchanged.
         val merged =
@@ -1379,8 +1382,8 @@ object Graph {
       .groupBy("s", "t").agg(max("w").as("w"))
       .localCheckpoint(true)
     // rungs are INDEPENDENT jobs over the same checkpointed edge frame
-    // (each dupClusters call does eager work: cache+count+collect /
-    // CC rounds) — overlap them on a small pool (guide §2.6) so one
+    // (each dupClusters call does eager work: a counted checkpoint and
+    // a collect / CC rounds) — overlap them on a small pool (guide §2.6) so one
     // rung's driver-side tail back-fills the others' idle executors.
     // Results are per-rung deterministic, assembled in ladder order.
     // Probe-measured at sf0.1 (isolated): 6.1 s sequential → see

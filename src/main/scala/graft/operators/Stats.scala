@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Statistics & profiling operators (reference: work/Intro_pySpark.ipynb —
@@ -4774,45 +4774,71 @@ object Stats {
     * (decimal sums cast to double deterministically) — so the DuckDB
     * twin unrolls the same six scalings and lands on identical longs.
     *
-    * One lazy plan, no eager job: the cell rollup keeps its parallel
-    * partial aggregation and is then coalesced to one partition — the
-    * grid is CELL-BOUNDED (k_r × 7 rows). `tt`/`kr`/`kc` are whole-frame
-    * window aggregates and each scaling's margin sum is a window over
-    * its key, so every scaling reads the previous frame once and the
-    * lineage grows by one window per scaling (a margin rollup joined
-    * back reads it twice, which doubles the lineage per scaling and
-    * needs a checkpoint each time). A window keeps the
-    * rows of a null key where the oracle's `JOIN … USING` drops them,
-    * so each scaling filters its key to non-null right after it: a null
-    * `event_type` cell goes at the first scaling, a null-day cell at the
-    * second, after it has counted in its row margin; `tt` counts both. */
+    * One task rakes the grid: the cell rollup keeps its parallel partial
+    * aggregation and is coalesced to one partition, and one
+    * `mapPartitions` runs [[rakeGrid]] over it. The grid is CELL-BOUNDED
+    * — one row per event type and weekday, plus null-key cells, so at
+    * most (k_r + 1) × 8 rows whatever the event count — and the step runs
+    * once per query, so it is no per-row UDF on a hot path. The plan stays
+    * lazy: no eager job, checkpoint or broadcast. The window form this
+    * replaces (`tt`/`kr`/`kc` as whole-frame windows, one margin window
+    * per scaling) gave the same rows from a chain of windows, sorts and
+    * projections of about 30 generated classes for ~35 rows at sf0.01.
+    * Spark's codegen cache holds 100 entries keyed per class loader, so
+    * in a mix of loop queries those classes were evicted and compiled
+    * again on every run: in perfbench's graph_loops (4 vCPU) its
+    * one-task stage spent ~380 ms of CPU a warm pass, against ~17 ms
+    * for this step. */
   def ipf(events: DataFrame, rounds: Int = 3): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    var w = events.select(col("event_type").as("r"),
+    import org.apache.spark.sql.types._
+    val cells = events.select(col("event_type").as("r"),
         pmod(expr("unix_date(cast(ts as date))").cast("long"), lit(7L))
           .as("cgrp"))
       .groupBy("r", "cgrp").agg(count(lit(1)).as("n"))
       .coalesce(1)
-      .select(col("r"), col("cgrp"), col("n"), sum("n").over().as("tt"),
-        size(collect_set("r").over()).cast("long").as("kr"),
-        size(collect_set("cgrp").over()).cast("long").as("kc"),
-        lit(1000000000L).as("w9"))
-    def rescale(keyCol: String, kCol: String): Unit = {
-      val s = sum(col("n").cast(dec) * col("w9").cast(dec))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy(keyCol))
-      w = w.withColumn("w9", round(
-          (col("tt").cast(dec) * col("w9").cast(dec) *
-            lit(1000000000L).cast(dec)).cast("double") /
-          (col(kCol).cast("double") * s.cast("double")))
-          .cast("long"))
-        .filter(col(keyCol).isNotNull)
+    val out = StructType(Seq(StructField("event_type", StringType),
+      StructField("dow", LongType), StructField("n", LongType, false),
+      StructField("weight", DoubleType)))
+    cells.mapPartitions { part =>
+      val grid = part.map(c => (c.getString(0),
+        if (c.isNullAt(1)) null else java.lang.Long.valueOf(c.getLong(1)),
+        c.getLong(2))).toVector
+      // floor convention (Exact.scala): w9/1000 is an exact double for
+      // integer w9 < 2^53, so the 6dp half-case quantizes identically on
+      // both engines — engine round() at 6dp of a 9dp-grid value does not
+      rakeGrid(grid, rounds).iterator.map { case (r, g, n, w9) =>
+        Row(r, g, n, math.floor(w9 / 1000.0 + 0.5).toLong / 1e6) }
+    }(Encoders.row(out))
+  }
+
+  /** [[ipf]]'s `rounds` row/column scaling pairs over the cells
+    * (r, cgrp, n), in the arithmetic of its DuckDB twin: `tt` counts
+    * every cell and `kr`/`kc` the distinct non-null keys; a scaling's
+    * margins are exact sums of n·w9, all taken before any of its weights
+    * change; w9 ← round(double(tt·w9·1e9) / (double(k)·double(margin)))
+    * with the correctly rounded integer-to-double conversions and
+    * Spark's HALF_UP `round` of a double. A null-key cell counts in its
+    * scaling's margin and then drops, as the twin's `JOIN … USING` drops
+    * it. Returns (r, cgrp, n, w9) for every cell left. */
+  private def rakeGrid(cells: Seq[(String, java.lang.Long, Long)],
+                       rounds: Int)
+      : Seq[(String, java.lang.Long, Long, Long)] = {
+    type Cell = (String, java.lang.Long, Long, Long)
+    val tt = BigInt(cells.map(_._3).sum)
+    val kr = cells.flatMap(c => Option(c._1)).distinct.size.toDouble
+    val kc = cells.flatMap(c => Option(c._2)).distinct.size.toDouble
+    var w: Seq[Cell] = cells.map { case (r, g, n) => (r, g, n, 1000000000L) }
+    def rescale(key: Cell => Any, k: Double): Unit = {
+      val margin = w.groupMapReduce(key)(c => BigInt(c._3) * c._4)(_ + _)
+      w = w.filter(key(_) != null).map { c =>
+        val q = (tt * c._4 * 1000000000L).toDouble /
+          (k * margin(key(c)).toDouble)
+        c.copy(_4 = java.math.BigDecimal.valueOf(q)
+          .setScale(0, java.math.RoundingMode.HALF_UP).longValue)
+      }
     }
-    for (_ <- 1 to rounds) { rescale("r", "kr"); rescale("cgrp", "kc") }
-    // floor convention (Exact.scala): w9/1000 is an exact double for
-    // integer w9 < 2^53, so the 6dp half-case quantizes identically on
-    // both engines — engine round() at 6dp of a 9dp-grid value does not
-    w.select(col("r").as("event_type"), col("cgrp").as("dow"), col("n"),
-      (floor(col("w9").cast("double") / 1000.0 + 0.5) / 1e6).as("weight"))
+    for (_ <- 1 to rounds) { rescale(_._1, kr); rescale(_._2, kc) }
+    w
   }
 
   /** Two-sample F TEST of variance ratio — the pre-t-test variance

@@ -43,6 +43,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Exchange hashpartitioning"))
   }
 
+  test("st_ipf: the cell rollup's exchange is the only one, and no " +
+      "window chain rakes the grid") {
+    val p = plan("st_ipf")
+    assert(!p.contains("Window"), s"st_ipf plans a window:\n$p")
+    val n = "Exchange ".r.findAllIn(p).length
+    assert(n == 1, s"expected exactly one exchange, got $n in:\n$p")
+  }
+
   test("q1_agg: aggregation is partial (map-side) before the exchange") {
     val p = plan("q1_agg")
     assert(p.contains("partial_sum") || p.contains("partial_count"))

@@ -72,5 +72,11 @@ class ClusterSpec extends SparkSpec {
     val fast = m(Dedup.dupClusters(pairs))
     val dist = m(Dedup.dupClusters(pairs, driverEdgeLimit = 0L))
     assert(fast.nonEmpty && fast == dist)
+    // a self-pair is a singleton cluster on both paths; a repeated pair
+    // changes nothing
+    val selfPairs = Seq((1L, 1L), (2L, 3L), (2L, 3L)).toDF("d1", "d2")
+    val want = Map(1L -> 1L, 2L -> 2L, 3L -> 2L)
+    assert(m(Dedup.dupClusters(selfPairs)) == want)
+    assert(m(Dedup.dupClusters(selfPairs, driverEdgeLimit = 0L)) == want)
   }
 }

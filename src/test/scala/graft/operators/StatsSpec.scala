@@ -2371,6 +2371,75 @@ class StatsSpec extends SparkSpec {
       ("b", 1L) -> (10L, 2.441562)), s"$out")
   }
 
+  /** The window-chain form `Stats.ipf` had before it raked the grid in
+    * one task, kept as the reference its rows must equal: `tt`/`kr`/`kc`
+    * as whole-frame windows and each scaling's margin as a window over
+    * its key, null keys filtered after their scaling. */
+  private def windowedIpf(events: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+    var w = events.select(col("event_type").as("r"),
+        pmod(expr("unix_date(cast(ts as date))").cast("long"), lit(7L))
+          .as("cgrp"))
+      .groupBy("r", "cgrp").agg(count(lit(1)).as("n"))
+      .coalesce(1)
+      .select(col("r"), col("cgrp"), col("n"), sum("n").over().as("tt"),
+        size(collect_set("r").over()).cast("long").as("kr"),
+        size(collect_set("cgrp").over()).cast("long").as("kc"),
+        lit(1000000000L).as("w9"))
+    def rescale(keyCol: String, kCol: String): Unit = {
+      val s = sum(col("n").cast(dec) * col("w9").cast(dec))
+        .over(org.apache.spark.sql.expressions.Window.partitionBy(keyCol))
+      w = w.withColumn("w9", round(
+          (col("tt").cast(dec) * col("w9").cast(dec) *
+            lit(1000000000L).cast(dec)).cast("double") /
+          (col(kCol).cast("double") * s.cast("double")))
+          .cast("long"))
+        .filter(col(keyCol).isNotNull)
+    }
+    for (_ <- 1 to 3) { rescale("r", "kr"); rescale("cgrp", "kc") }
+    w.select(col("r").as("event_type"), col("cgrp").as("dow"), col("n"),
+      (floor(col("w9").cast("double") / 1000.0 + 0.5) / 1e6).as("weight"))
+  }
+
+  test("ipf: the one-task raking step returns the window chain's rows " +
+      "and schema on seeded random grids") {
+    // (event_type, day, n) cells; a null day makes a null ts, so a null
+    // cgrp; days d and d + 7 land in the same cell
+    def events(cells: Seq[(String, Option[Int], Int)]) =
+      cells.flatMap { case (et, d, n) => Seq.fill(n)((et, d)) }
+        .toDF("event_type", "day")
+        .select(col("event_type"),
+          date_add(lit("1970-01-01").cast("date"), col("day"))
+            .cast("timestamp").as("ts"))
+    val rnd = new scala.util.Random(20261019L)
+    def randomGrid(kr: Int, days: Seq[Int], nulls: Boolean) = {
+      val ets = (0 until kr).map(i => s"t$i") ++ (if (nulls) Seq(null) else Nil)
+      val ds = days.map(Option(_)) ++ (if (nulls) Seq(None) else Nil)
+      for (et <- ets; d <- ds if rnd.nextDouble() < 0.85)
+        yield (et, d.map(_ + 7 * rnd.nextInt(3)), 1 + rnd.nextInt(40))
+    }
+    val grids: Seq[Seq[(String, Option[Int], Int)]] = Seq(
+      Seq(("a", Some(3), 9)),                                   // 1 x 1
+      (0 until 7).map(d => ("a", Some(d), 1 + 3 * d)),          // 1 x 7
+      Seq(("a", Some(2), 4), ("b", Some(9), 11), ("c", Some(2), 1)), // k x 1
+      Seq(("a", Some(0), 5), (null, Some(0), 6), (null, None, 2)),
+      Seq((null, Some(1), 3), (null, None, 4)),                 // no key left
+      Nil) ++                                                   // empty
+      (1 to 16).map(i => randomGrid(1 + rnd.nextInt(6),
+        (0 until 7).filter(_ => rnd.nextDouble() < 0.8) :+ (i % 7), i % 2 == 0))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(r => (Option(r.getString(0)),
+        if (r.isNullAt(1)) None else Some(r.getLong(1))))
+    grids.zipWithIndex.foreach { case (cells, i) =>
+      val ev = events(cells)
+      val got = Stats.ipf(ev)
+      val ref = windowedIpf(ev)
+      assert(got.schema == ref.schema, s"grid $i")
+      assert(sorted(got) == sorted(ref), s"grid $i: $cells")
+    }
+  }
+
   test("brunnerMunzel: hand-computed W on the interleave, p_hat 1 with " +
       "null W under separation, exact zero on identical samples") {
     import spark.implicits._
