@@ -5169,20 +5169,17 @@ object SparkEntry {
                AS BIGINT) AS cc
            FROM orders GROUP BY 1),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             sum(CAST(cc AS HUGEINT)) AS s,
-             sum(CAST(cc AS HUGEINT) * cc) AS s2
+             CAST(CAST(sum(CAST(cc AS HUGEINT)) AS VARCHAR) AS DOUBLE)
+               AS s,
+             CAST(CAST(sum(CAST(cc AS HUGEINT) * cc) AS VARCHAR) AS DOUBLE)
+               AS s2
            FROM per)
          SELECT n AS n_customers,
-           round(CAST(s2 AS DOUBLE)
-             / (CAST(s AS DOUBLE) * CAST(s AS DOUBLE)), 6) AS hhi,
-           round((CAST(s2 AS DOUBLE)
-               / (CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-               - 1.0 / CAST(n AS DOUBLE))
+           round(s2 / (s * s), 6) AS hhi,
+           round((s2 / (s * s) - 1.0 / CAST(n AS DOUBLE))
              / nullif(1.0 - 1.0 / CAST(n AS DOUBLE), 0.0), 6)
              AS hhi_norm,
-           round(1.0 / (CAST(s2 AS DOUBLE)
-             / (CAST(s AS DOUBLE) * CAST(s AS DOUBLE))), 4)
-             AS effective_n
+           round(1.0 / (s2 / (s * s)), 4) AS effective_n
          FROM m""",
     "st_smd" ->
       """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS c1,

@@ -426,8 +426,7 @@ object Quality {
     * the first gap pinpointed. */
   def hourCoverage(events: DataFrame): DataFrame = {
     val hrs = events
-      .select(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr")).distinct()
+      .select(Resample.hourKey.as("hr")).distinct()
     val expected = hrs.agg(min("hr").as("h0"), max("hr").as("h1"))
       .select(explode(sequence(col("h0"), col("h1"))).as("hr"))
     val missing = expected.join(hrs, Seq("hr"), "left_anti")
@@ -500,8 +499,8 @@ object Quality {
     * D = sup|ECDF − u| evaluated at both sides of every jump. A biased
     * hash here means every downstream split is quietly biased.
     *
-    * Same striped-prefix-sum skeleton as st_ks (value-range stripes on
-    * u itself — no global sort); D is a max, which commutes, so the
+    * [[Stats.stripedPrefix]] on value-range stripes of u itself (no
+    * global sort, no bounds pass); D is a max, which commutes, so the
     * whole statistic is partition-invariant with zero rounding
     * tolerance. The id·constant product runs in DECIMAL(38,0) — a Long
     * product would silently wrap (non-ANSI mode) for ids ≥ ~3.5e9,
@@ -509,28 +508,18 @@ object Quality {
     * exact; decimal keeps both engines bit-identical across the full
     * id space, and the mod-2³² residue is < 2⁵³ so the final double
     * division stays exact. */
-  def hashUniformity(events: DataFrame, keyCol: String = "user_id",
-                     stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def hashUniformity(events: DataFrame, keyCol: String = "user_id")
+      : DataFrame = {
     val pts = events.select(col(keyCol)).distinct()
       .withColumn("u",
         (col(keyCol).cast("decimal(38,0)") * lit(2654435761L)
           % lit(4294967296L)).cast("double") / lit(4294967296.0))
       .groupBy("u").agg(count(lit(1)).as("c"))
-      .withColumn("__stripe",
-        least(lit(stripes - 1),
-          floor(col("u") * stripes).cast("int")))
-    val wIn = Window.partitionBy("__stripe").orderBy("u")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = pts.groupBy("__stripe").agg(sum("c").as("__sc"))
-      .select(col("__stripe"),
-        coalesce(sum("__sc").over(wStripe), lit(0L)).as("__oc"))
     val tot = pts.agg(sum("c").as("n"))
-    pts.join(broadcast(offs), Seq("__stripe"))
-      .withColumn("below",
-        col("__oc") + coalesce(sum("c").over(wIn), lit(0L)))
+    // u lies in [0, 1): its value-range stripes need no bounds pass
+    Stats.stripedPrefix(pts, Stats.valueStripe(col("u"), lit(0.0), lit(1.0)),
+        Seq(col("u")), Seq("c"))
+      .withColumnRenamed("below_c", "below")
       .crossJoin(broadcast(tot))
       .agg(max(greatest(
         abs((col("below") + col("c")).cast("double") / col("n")

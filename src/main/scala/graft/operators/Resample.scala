@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,6 +16,42 @@ import org.apache.spark.sql.functions._
   *     the same (key) partitioning).
   */
 object Resample {
+
+  /** Epoch-hour key of `ts`: whole hours since 1970-01-01 UTC, the hour
+    * bucket of every hourly series. */
+  private[operators] val hourKey: Column =
+    expr("unix_seconds(date_trunc('hour', ts)) div 3600")
+
+  /** Hourly series of the events of `types`: one row per [[hourKey]]
+    * `hr` carrying `aggs`. One map-side-combined shuffle on the hour. */
+  private[operators] def hourly(events: DataFrame, types: String*)(
+      aggs: Column*): DataFrame =
+    events.filter(col("event_type").isin(types: _*))
+      .groupBy(hourKey.as("hr"))
+      .agg(aggs.head, aggs.tail: _*)
+
+  /** Hourly mean value `v` of one event type (micro-exact
+    * [[Exact.avgValueMicros]], in value units). */
+  private[operators] def hourlyMeans(events: DataFrame,
+                                     eventType: String): DataFrame =
+    hourly(events, eventType)(
+      (Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+
+  /** Paired hourly frame of two or three event types: per-hour means
+    * `x`, `y` (and `z`) of `types` in order, aligned on the hour, hours
+    * with any side missing dropped. Shared by the agreement and
+    * correlation family ([[Stats.linCcc]], [[Stats.kendallTau]],
+    * [[Stats.partialCorr]], [[cointegration]], ...). */
+  private[operators] def alignedHourly(events: DataFrame,
+                                       types: String*): DataFrame = {
+    val names = Seq("x", "y", "z").take(types.size)
+    val means = types.zip(names).map { case (t, n) =>
+      (Exact.avgMicrosExpr(s"case when event_type = '$t' then value end")
+        .cast("double") / lit(1e6)).as(n)
+    }
+    hourly(events, types: _*)(means: _*)
+      .filter(names.map(n => col(n).isNotNull).reduce(_ && _))
+  }
 
   /** Downsample `events` to fixed slots of `slotUs` micros per user:
     * slot_us, n, mean value (exact fixed-point, engine-stable). */
@@ -214,10 +250,7 @@ object Resample {
     val spark = events.sparkSession
     import spark.implicits._
     val alphas = (1 to 9).map(_ / 10.0)
-    val rows = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val rows = hourlyMeans(events, eventType)
       .select(col("hr"), col("v")).as[(Long, Double)]
       .groupByKey(_ => 0)
       .flatMapSortedGroups($"hr") { (_, it) =>
@@ -471,8 +504,7 @@ object Resample {
     val byType = Window.partitionBy("event_type").orderBy("hr")
       .rowsBetween(-(windowHours - 1), Window.currentRow)
     val h = events
-      .groupBy(col("event_type"),
-        expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
+      .groupBy(col("event_type"), hourKey.as("hr"))
       .agg(Exact.avgValueMicros.as("v6"))
       .withColumn("wn", count(lit(1)).over(byType))
       .withColumn("s1", sum("v6").over(byType))
@@ -522,24 +554,7 @@ object Resample {
     * partition on the segment key. */
   def binarySegmentation(events: DataFrame,
                          eventType: String = "click"): DataFrame = {
-    val byHr = Window.orderBy("hr")
-    val run = byHr.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val all = byHr.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val h = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("vu"))
-      .withColumn("i", row_number().over(byHr))
-      .withColumn("pre", sum("vu").over(run))
-      .withColumn("tot", last("pre").over(all))
-      .withColumn("n", count(lit(1)).over(all))
-    val b1 = h.filter(col("i") < col("n"))
-      .select(min(struct(
-        (-abs(col("n") * col("pre") - col("i") * col("tot"))).as("negt"),
-        col("i").as("t1"))).as("b"))
-      .select(col("b.t1").as("t1"))
-    val seg1 = h.crossJoin(broadcast(b1))
+    val seg1 = cusumKnot(events, eventType)
       .withColumn("seg", when(col("i") <= col("t1"), 0).otherwise(1))
     val bySeg = Window.partitionBy("seg").orderBy("hr")
     val segRun = bySeg.rowsBetween(Window.unboundedPreceding,
@@ -571,6 +586,30 @@ object Resample {
       round(col("su") / col("n_hours") / lit(1e6), 6).as("mean_value"))
   }
 
+  /** The level-0 CUSUM split shared by [[binarySegmentation]] and
+    * [[piecewiseTrend]]: the hourly micro-unit series `vu` with its
+    * 1-based index `i`, plus the knot `t1` — the earliest i < n that
+    * maximizes the pure-integer criterion |n·prefix − i·total|,
+    * riding back as a 1-row broadcast. */
+  private def cusumKnot(events: DataFrame, eventType: String)
+      : DataFrame = {
+    val byHr = Window.orderBy("hr")
+    val run = byHr.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val all = byHr.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val h = hourly(events, eventType)(Exact.avgValueMicros.as("vu"))
+      .withColumn("i", row_number().over(byHr))
+      .withColumn("pre", sum("vu").over(run))
+      .withColumn("tot", last("pre").over(all))
+      .withColumn("n", count(lit(1)).over(all))
+    val b1 = h.filter(col("i") < col("n"))
+      .select(min(struct(
+        (-abs(col("n") * col("pre") - col("i") * col("tot"))).as("negt"),
+        col("i").as("t1"))).as("b"))
+      .select(col("b.t1").as("t1"))
+    h.crossJoin(broadcast(b1))
+  }
+
   /** PIECEWISE-LINEAR TREND at the CUSUM knot — the regression
     * companion to [[binarySegmentation]]'s level view: split the
     * hourly series at the level-0 CUSUM argmax, then fit an exact OLS
@@ -586,24 +625,7 @@ object Resample {
     * as a 1-row broadcast, moments partial-agg per segment. */
   def piecewiseTrend(events: DataFrame,
                      eventType: String = "click"): DataFrame = {
-    val byHr = Window.orderBy("hr")
-    val run = byHr.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val all = byHr.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val h = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("vu"))
-      .withColumn("i", row_number().over(byHr))
-      .withColumn("pre", sum("vu").over(run))
-      .withColumn("tot", last("pre").over(all))
-      .withColumn("n", count(lit(1)).over(all))
-    val b1 = h.filter(col("i") < col("n"))
-      .select(min(struct(
-        (-abs(col("n") * col("pre") - col("i") * col("tot"))).as("negt"),
-        col("i").as("t1"))).as("b"))
-      .select(col("b.t1").as("t1"))
-    val g = h.crossJoin(broadcast(b1))
+    val g = cusumKnot(events, eventType)
       .withColumn("seg", when(col("i") <= col("t1"), 0L).otherwise(1L))
       .withColumn("j", row_number().over(
         Window.partitionBy("seg").orderBy("hr")).cast("long"))
@@ -641,8 +663,7 @@ object Resample {
   def crossCorrelation(events: DataFrame, ga: String, gb: String,
                        maxLag: Int = 6): DataFrame = {
     val hourly = events.filter(col("event_type").isin(ga, gb))
-      .groupBy(col("event_type"),
-        expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
+      .groupBy(col("event_type"), hourKey.as("hr"))
       .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
     val a = hourly.filter(col("event_type") === ga)
       .select(col("hr"), col("v").as("va"))
@@ -725,9 +746,7 @@ object Resample {
     * 1.53 s entry was scheduler contention, not a plan change. */
   def pacf(events: DataFrame, eventType: String = "click",
            maxLag: Int = 12): DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
     val b = hourly.select(col("hr").as("hr_b"), col("v").as("vb"))
     val rRows = hourly
       .withColumn("lag", explode(sequence(lit(0L), lit(maxLag.toLong))))
@@ -779,8 +798,7 @@ object Resample {
     import org.apache.spark.sql.expressions.Window
     require(p >= 1 && p <= 6, "lag order 1..6")
     val hourly = events.filter(col("event_type").isin(causeType, effectType))
-      .groupBy(col("event_type"),
-        expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
+      .groupBy(col("event_type"), hourKey.as("hr"))
       .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
     val x = hourly.filter(col("event_type") === causeType)
       .select(col("hr"), col("v").as("x"))
@@ -894,8 +912,7 @@ object Resample {
   def rollingCorrelation(events: DataFrame, ga: String, gb: String,
                          windowHours: Int = 24): DataFrame = {
     val hourly = events.filter(col("event_type").isin(ga, gb))
-      .groupBy(col("event_type"),
-        expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
+      .groupBy(col("event_type"), hourKey.as("hr"))
       .agg(Exact.avgValue4dp.as("v"))
     val joined = hourly.filter(col("event_type") === ga)
       .select(col("hr"), col("v").as("x"))
@@ -935,8 +952,7 @@ object Resample {
     * feed the medians identical doubles. */
   def theilSen(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(col("event_type"),
-        expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
+      .groupBy(col("event_type"), hourKey.as("hr"))
       .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
       .withColumn("x",
         col("hr") - min("hr").over(Window.partitionBy("event_type")))
@@ -993,8 +1009,7 @@ object Resample {
     val w = Window.partitionBy("event_type").orderBy("hr")
     val wAll = Window.partitionBy("event_type")
     val hourly = events
-      .groupBy(col("event_type"),
-        expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
+      .groupBy(col("event_type"), hourKey.as("hr"))
       .agg(Exact.avgValue4dp.as("v"))
     hourly
       .withColumn("__prev", lag("v", 1).over(w))
@@ -1073,10 +1088,7 @@ object Resample {
     * longs. */
   def mannKendall(events: DataFrame,
                   eventType: String = "click"): DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
     val b = hourly.select(col("hr").as("hr2"), col("v").as("v2"))
     val s = hourly.join(broadcast(b), col("hr") < col("hr2"))
       .agg(sum(signum(col("v2") - col("v")).cast("long")).as("s"))
@@ -1112,10 +1124,7 @@ object Resample {
     * comparisons on both engines); one double division at the close. */
   def seasonalMannKendall(events: DataFrame,
                           eventType: String = "click"): DataFrame = {
-    val hv = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hv = hourlyMeans(events, eventType)
       .select((col("hr") % 24).as("hod"),
         expr("hr div 24").as("day"), col("v"))
     val b = hv.select(col("hod"), col("day").as("day2"),
@@ -1159,10 +1168,8 @@ object Resample {
   def pettitt(events: DataFrame, eventType: String = "click")
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
     val wv = Window.orderBy("v")
       .rowsBetween(Window.unboundedPreceding, -1)
     val ranks = hourly.groupBy("v").agg(count(lit(1)).as("t"))
@@ -1204,21 +1211,9 @@ object Resample {
     * calendar-bounded broadcast self-join (kendallTau contract). */
   def sampleEntropy(events: DataFrame, eventType: String = "click",
                     rFrac: Double = 0.2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
-    val rRow = broadcast(hourly.agg(count(lit(1)).as("nn"),
-        sum(col("v").cast(dec)).cast(dec).as("sv"),
-        sum((col("v").cast(dec) * col("v").cast(dec)).cast(dec))
-          .cast(dec).as("svv"))
-      .select(floor(sqrt((col("nn").cast(dec) * col("svv") -
-          col("sv") * col("sv")).cast("double") /
-          (col("nn").cast("double") * (col("nn") - lit(1)))) * rFrac
-          + 0.5)
-        .cast("long").as("r")))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
+    val rRow = tolerance(hourly, rFrac)
     val w = Window.orderBy("hr")
     val tpl = hourly
       .select(row_number().over(w).as("i"), col("v").as("v0"),
@@ -1246,6 +1241,24 @@ object Resample {
           col("b").cast("double")), 6)).as("sampen"))
   }
 
+  /** The template-match tolerance r = round(rFrac·σ) of
+    * [[sampleEntropy]] and [[recurrenceMetrics]], in the micro units of
+    * the hourly series `v`, as a 1-row broadcast: σ comes from the
+    * exact integer moment sums (nΣv²−(Σv)²)/(n(n−1)), so r is one
+    * quantization with no float stddev drift. */
+  private def tolerance(hourly: DataFrame, rFrac: Double): DataFrame = {
+    val dec = "decimal(38,0)"
+    broadcast(hourly.agg(count(lit(1)).as("nn"),
+        sum(col("v").cast(dec)).cast(dec).as("sv"),
+        sum((col("v").cast(dec) * col("v").cast(dec)).cast(dec))
+          .cast(dec).as("svv"))
+      .select(floor(sqrt((col("nn").cast(dec) * col("svv") -
+          col("sv") * col("sv")).cast("double") /
+          (col("nn").cast("double") * (col("nn") - lit(1)))) * rFrac
+          + 0.5)
+        .cast("long").as("r")))
+  }
+
   /** RECURRENCE-PLOT metrics on the hourly series — the
     * nonlinear-dynamics view [[sampleEntropy]] summarizes in one
     * number, split into its two classic axes: RR (recurrence rate —
@@ -1265,21 +1278,9 @@ object Resample {
     * drop them identically via the null lead). */
   def recurrenceMetrics(events: DataFrame, eventType: String = "click",
                         rFrac: Double = 0.2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dec = "decimal(38,0)"
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
-    val rRow = broadcast(hourly.agg(count(lit(1)).as("nn"),
-        sum(col("v").cast(dec)).cast(dec).as("sv"),
-        sum((col("v").cast(dec) * col("v").cast(dec)).cast(dec))
-          .cast(dec).as("svv"))
-      .select(floor(sqrt((col("nn").cast(dec) * col("svv") -
-          col("sv") * col("sv")).cast("double") /
-          (col("nn").cast("double") * (col("nn") - lit(1)))) * rFrac
-          + 0.5)
-        .cast("long").as("r")))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
+    val rRow = tolerance(hourly, rFrac)
     val w = Window.orderBy("hr")
     val tpl = hourly
       .select(row_number().over(w).as("i"), col("v").as("v0"),
@@ -1317,10 +1318,7 @@ object Resample {
   def periodogram(events: DataFrame, eventType: String = "click",
                   periods: Seq[Int] = Seq(6, 8, 12, 24, 48, 168))
       : DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
     val mean = hourly.agg(round(avg("v"), 6).as("vm"),
       count(lit(1)).as("n"))
     val centered = hourly.crossJoin(broadcast(mean))
@@ -1462,10 +1460,7 @@ object Resample {
                         alpha: Double = 0.1, calDays: Int = 14)
       : DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy("hr")
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
       .withColumn("pred", lag("v", 24).over(w))
       .filter(col("pred").isNotNull)
       .withColumn("r", round(abs(col("v") - col("pred")), 6))
@@ -1499,10 +1494,7 @@ object Resample {
     * per-day RMS over its ≤24 deviations, ranked worst-first. */
   def dayProfileOutliers(events: DataFrame, eventType: String = "click",
                          topK: Int = 10): DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
       .select(floor(col("hr") / 24).as("day"),
         pmod(col("hr"), lit(24)).as("hod"), col("v"))
     val profile = hourly.groupBy("hod")
@@ -1535,10 +1527,7 @@ object Resample {
     * engines pick identical symbols. */
   def saxWords(events: DataFrame, eventType: String = "click",
                blockHours: Int = 4): DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
       .withColumn("day", floor(col("hr") / 24))
     val dstats = hourly.groupBy("day")
       .agg(avg("v").as("mu"), stddev_pop(col("v")).as("sd"),
@@ -1574,10 +1563,7 @@ object Resample {
     * rollup per q. */
   def varianceRatio(events: DataFrame, eventType: String = "click",
                     qs: Seq[Int] = Seq(2, 4, 8)): DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
     val w = org.apache.spark.sql.expressions.Window.orderBy("hr")
     val lagged = hourly.select(
       (col("v") - lag("v", 1).over(w)).as("d1") +:
@@ -1638,19 +1624,7 @@ object Resample {
     * aligned self-frame, two sum rollups. */
   def cointegration(events: DataFrame, typeA: String = "click",
                     typeB: String = "view"): DataFrame = {
-    val hourly = events.filter(col("event_type").isin(typeA, typeB))
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeA' then value end")
-          .cast("double") / lit(1e6))
-          .as("x"),
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeB' then value end")
-          .cast("double") / lit(1e6))
-          .as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
+    val hourly = alignedHourly(events, typeA, typeB)
     val fit = hourly.agg(
       round(regr_slope(col("y"), col("x")), 6).as("beta"),
       round(regr_intercept(col("y"), col("x")), 6).as("alpha"))
@@ -1690,10 +1664,7 @@ object Resample {
     * aggregate frame; the pattern histogram is a ≤6-row rollup. */
   def permutationEntropy(events: DataFrame,
                          eventType: String = "click"): DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
     val w = Window.orderBy("hr")
     val trip = hourly
       .withColumn("v1", lead("v", 1).over(w))
@@ -1801,8 +1772,7 @@ object Resample {
     val ac = crossCorrelation(events, eventType, eventType, maxLag)
       .filter(col("lag") >= 1 && col("xcorr").isNotNull)
     val hours = events.filter(col("event_type") === eventType)
-      .select(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
+      .select(hourKey.as("hr"))
       .distinct().agg(count(lit(1)).as("n"))
     ac.crossJoin(broadcast(hours))
       .agg(max("n").as("n"), count(lit(1)).as("maxlag"),
@@ -1835,10 +1805,7 @@ object Resample {
   def backtestBaselines(events: DataFrame, eventType: String = "click",
                         trainFrac: Double = 0.8,
                         season: Int = 24): DataFrame = {
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = hourlyMeans(events, eventType)
     val w = Window.orderBy("hr")
     val seq = hourly
       .withColumn("rn", row_number().over(w))
@@ -1959,33 +1926,9 @@ object Resample {
       .select((col("v") - col("l1")).cast(dec).as("yy"),
         col("l1").cast(dec).as("a"),
         (col("l1") - col("l2")).cast(dec).as("b"))
-    val s = pts.agg(count(lit(1)).as("n"),
-      sum("a").as("sa"), sum("b").as("sb"), sum("yy").as("sy"),
-      sum(col("a") * col("a")).as("saa"),
-      sum(col("a") * col("b")).as("sab"),
-      sum(col("b") * col("b")).as("sbb"),
-      sum(col("a") * col("yy")).as("say"),
-      sum(col("b") * col("yy")).as("sby"),
-      sum(col("yy") * col("yy")).as("syy"))
-    val n = col("n").cast("double")
-    val (sa, sb, sy) = (col("sa").cast("double"),
-      col("sb").cast("double"), col("sy").cast("double"))
-    val (saa, sab, sbb) = (col("saa").cast("double"),
-      col("sab").cast("double"), col("sbb").cast("double"))
-    val (say, sby, syy) = (col("say").cast("double"),
-      col("sby").cast("double"), col("syy").cast("double"))
-    val det = n * (saa * sbb - sab * sab) - sa * (sa * sbb - sab * sb) +
-      sb * (sa * sab - saa * sb)
-    val d0 = sy * (saa * sbb - sab * sab) - sa * (say * sbb - sab * sby) +
-      sb * (say * sab - saa * sby)
-    val d1 = n * (say * sbb - sab * sby) - sy * (sa * sbb - sab * sb) +
-      sb * (sa * sby - say * sb)
-    val d2 = n * (saa * sby - say * sab) - sa * (sa * sby - say * sb) +
-      sy * (sa * sab - saa * sb)
-    val (a0, b1, b2) = (d0 / det, d1 / det, d2 / det)
-    val sse = syy - a0 * sy - b1 * say - b2 * sby
+    import Stats.Ols3._
     val seB = sqrt(sse / (n - 3.0) * (n * sbb - sb * sb) / det)
-    s.select(col("n"),
+    Stats.Ols3.sums(pts).select(col("n"),
       round(b1, 6).as("beta"), round(b2, 6).as("gamma"),
       round(b1 / nullif(seB, lit(0.0)), 4).as("adf_t"))
   }
@@ -2098,10 +2041,8 @@ object Resample {
               blockSizes: Seq[Int] = Seq(32, 64, 128)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(sum(round(col("value") * 10000).cast("long")).as("v"))
+    val hourly = Resample.hourly(events, eventType)(
+      sum(round(col("value") * 10000).cast("long")).as("v"))
       .withColumn("i",
         row_number().over(Window.orderBy("hr")) - 1)
       .localCheckpoint(true)
@@ -2169,10 +2110,8 @@ object Resample {
   def haarEnergy(events: DataFrame, eventType: String = "click",
                  levels: Int = 5): DataFrame = {
     require(levels >= 1 && levels <= 12, "levels 1..12")
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v6"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v6"))
     var cur = hourly
       .withColumn("i",
         (row_number().over(Window.orderBy("hr")) - 1).cast("long"))
@@ -2274,10 +2213,7 @@ object Resample {
                       typeY: String = "view"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def hourly(t: String, alias: String) =
-      events.filter(col("event_type") === t)
-        .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-          .as("hr"))
-        .agg(Exact.avgValueMicros.as(alias))
+      Resample.hourly(events, t)(Exact.avgValueMicros.as(alias))
     val xy = hourly(typeX, "x").join(hourly(typeY, "y"), "hr")
     val w = Window.orderBy("hr")
     val stepped = xy
@@ -2347,10 +2283,8 @@ object Resample {
     val LnEmitHit = -223144L // ln(0.8)
     val LnEmitMiss = -1609438L // ln(0.2)
     val LnPrior = -693147L   // ln(0.5)
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
     val tot = hourly.agg(count(lit(1)).as("n"), sum("v").as("s"))
     hourly.crossJoin(broadcast(tot))
       .select(col("hr"), (col("v") * col("n") > col("s")).as("o"))
@@ -2417,10 +2351,8 @@ object Resample {
                 lags: Seq[Int] = Seq(1, 2, 3, 4, 6, 12)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import events.sparkSession.implicits._
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
     val n0 = hourly.agg(count(lit(1)).as("n0"))
     val binned = hourly.crossJoin(broadcast(n0))
       .withColumn("r",
@@ -2571,10 +2503,8 @@ object Resample {
     import org.apache.spark.sql.expressions.Window
     import events.sparkSession.implicits._
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
     val tot = hourly.agg(count(lit(1)).as("n"), sum("v").as("s"))
     val w = Window.orderBy("hr")
     val prof = hourly.crossJoin(broadcast(tot))

@@ -68,12 +68,6 @@ object Stats {
       round(corr(col(x), col(y)), 6).as("corr_xy"),
       round(covar_samp(col(x), col(y)), 4).as("cov_xy"))
 
-  /** Stratified sample: per-stratum fractions (seeded). The scale tool
-    * for class-balanced training subsets — one scan, no shuffle. */
-  def stratifiedSample(df: DataFrame, stratumCol: String,
-                       fractions: Map[String, Double], seed: Long): DataFrame =
-    df.stat.sampleBy(stratumCol, fractions, seed)
-
   /** HyperLogLog approximate distinct counts — the 100 TB twin of exact
     * countDistinct (constant sketch memory, single pass, no expand). */
   def approxDistinct(df: DataFrame, groupCol: String, c: String,
@@ -359,47 +353,50 @@ object Stats {
     *
     * Scale shape: ties collapse in one partial-agg pass (one row per
     * DISTINCT value with both groups' counts), then the global running
-    * sum over value order is a striped two-pass prefix sum — per-stripe
-    * totals (a ≤`stripes`-row frame, the only single-partition window)
-    * are prefix-summed and broadcast back, and the within-stripe
-    * cumulative sums run in parallel across stripes. Nothing ever
-    * serializes the distinct-value frame onto one task, which a plain
-    * `Window.orderBy(v)` would. Stripes are value-range bins from a
-    * broadcast (min, max) — monotone in v, so concatenating stripe
-    * prefixes is the exact global prefix. */
+    * sum over value order is [[stripedPrefix]] on value-range stripes:
+    * nothing ever serializes the distinct-value frame onto one task,
+    * which a plain `Window.orderBy(v)` would. */
   def ksTest(df: DataFrame, groupCol: String, c: String,
-             ga: String, gb: String, stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+             ga: String, gb: String): DataFrame =
+    ecdfPair(df, groupCol, c, ga, gb)
+      .agg(round(max(abs(col("fa") - col("fb"))), 6).as("d_stat"),
+        max("__na").as("n_a"), max("__nb").as("n_b"))
+
+  /** Distinct-value frame of the two-sample rank family: one row per
+    * distinct value `v` of `c` over groups `ga`/`gb` with their counts
+    * `ca`, `cb` and `t` = ca + cb, the value range `__lo`/`__hi` and
+    * the group sizes `__na`/`__nb` on every row, plus `below_<s>` for
+    * each of `sums` from [[stripedPrefix]] over value order. */
+  private def twoSampleBelow(df: DataFrame, groupCol: String, c: String,
+                             ga: String, gb: String,
+                             sums: String*): DataFrame = {
     val pts = df.filter(col(groupCol).isin(ga, gb))
       .groupBy(col(c).as("v"))
       .agg(sum(when(col(groupCol) === ga, 1L).otherwise(0L)).as("ca"),
         sum(when(col(groupCol) === gb, 1L).otherwise(0L)).as("cb"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // strictly-preceding stripes: a stripe's own total must not count
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("ca").as("__sa"), sum("cb").as("__sb"))
-      .select(col("__stripe"),
-        coalesce(sum("__sa").over(wStripe), lit(0L)).as("__oa"),
-        coalesce(sum("__sb").over(wStripe), lit(0L)).as("__ob"))
-    striped.join(broadcast(offs), Seq("__stripe"))
-      .select(
-        ((col("__oa") + sum("ca").over(wIn)) / col("__na")).as("fa"),
-        ((col("__ob") + sum("cb").over(wIn)) / col("__nb")).as("fb"),
-        col("__na"), col("__nb"))
-      .agg(round(max(abs(col("fa") - col("fb"))), 6).as("d_stat"),
-        max("__na").as("n_a"), max("__nb").as("n_b"))
+      .withColumn("t", col("ca") + col("cb"))
+    valueBelow(pts, sums, sum("ca").as("__na"), sum("cb").as("__nb"))
   }
+
+  /** [[stripedPrefix]] of `sums` over ascending `v` on value-range
+    * stripes: the 1-row bounds frame (`__lo`/`__hi` plus the caller's
+    * `totals`) rides a broadcast onto every row. */
+  private def valueBelow(pts: DataFrame, sums: Seq[String],
+                         totals: Column*): DataFrame = {
+    val bounds =
+      pts.agg(min("v").as("__lo"), max("v").as("__hi") +: totals: _*)
+    stripedPrefix(pts.crossJoin(broadcast(bounds)),
+      valueStripe(col("v"), col("__lo"), col("__hi")), Seq(col("v")), sums)
+  }
+
+  /** The two inclusive ECDFs `fa`, `fb` at every distinct value — the
+    * frame [[ksTest]] and [[kuiperTest]] take their maxima over. */
+  private def ecdfPair(df: DataFrame, groupCol: String, c: String,
+                       ga: String, gb: String): DataFrame =
+    twoSampleBelow(df, groupCol, c, ga, gb, "ca", "cb")
+      .select(((col("below_ca") + col("ca")) / col("__na")).as("fa"),
+        ((col("below_cb") + col("cb")) / col("__nb")).as("fb"),
+        col("__na"), col("__nb"))
 
   /** KUIPER'S two-sample statistic V = D⁺ + D⁻ — the
     * ROTATION-INVARIANT member of the ECDF family ([[ksTest]]'s D
@@ -408,38 +405,11 @@ object Stats {
     * — exactly what periodic/wrapped data does; Kuiper keeps both
     * excursions, so a distribution slid around a cycle scores the
     * same V wherever it is cut): D⁺ = max(Fₐ−F_b), D⁻ = max(F_b−Fₐ).
-    * Same striped tie-collapsed skeleton as [[ksTest]] — the only
+    * Same tie-collapsed [[stripedPrefix]] ECDFs as [[ksTest]] — the only
     * change is keeping the two signed maxima apart. */
   def kuiperTest(df: DataFrame, groupCol: String, c: String,
-                 ga: String, gb: String, stripes: Int = 256)
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pts = df.filter(col(groupCol).isin(ga, gb))
-      .groupBy(col(c).as("v"))
-      .agg(sum(when(col(groupCol) === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === gb, 1L).otherwise(0L)).as("cb"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("ca").as("__sa"), sum("cb").as("__sb"))
-      .select(col("__stripe"),
-        coalesce(sum("__sa").over(wStripe), lit(0L)).as("__oa"),
-        coalesce(sum("__sb").over(wStripe), lit(0L)).as("__ob"))
-    striped.join(broadcast(offs), Seq("__stripe"))
-      .select(
-        ((col("__oa") + sum("ca").over(wIn)) / col("__na")).as("fa"),
-        ((col("__ob") + sum("cb").over(wIn)) / col("__nb")).as("fb"),
-        col("__na"), col("__nb"))
+                 ga: String, gb: String): DataFrame =
+    ecdfPair(df, groupCol, c, ga, gb)
       .agg(max(col("fa") - col("fb")).as("dp"),
         max(col("fb") - col("fa")).as("dm"),
         max("__na").as("na"), max("__nb").as("nb"))
@@ -448,7 +418,6 @@ object Stats {
         round(greatest(col("dm"), lit(0.0)), 6).as("d_minus"),
         round(greatest(col("dp"), lit(0.0)) +
           greatest(col("dm"), lit(0.0)), 6).as("v_stat"))
-  }
 
   /** COHEN'S H effect size between the [[md5Arm]] arms' conversion
     * rates — the PROPORTION-scale companion to st_cohens_d (a 2-point
@@ -489,7 +458,7 @@ object Stats {
     * pooled values with Bⱼ < N, where Maⱼ/Bⱼ are the inclusive
     * group-a/pooled cumulative counts and lⱼ the pooled tie count.
     *
-    * Same striped two-pass prefix-sum skeleton as [[ksTest]] (ties
+    * Same [[stripedPrefix]] running counts as [[ksTest]] (ties
     * collapse in one partial-agg pass; nothing serializes the
     * distinct-value frame), and the same exactness discipline as
     * mannWhitneyU: Ma, B, l are exact longs on any partitioning, so
@@ -497,35 +466,11 @@ object Stats {
     * 1e6-quantized BEFORE the cross-value sum (order-free longs) —
     * hash-identical to the oracle with no float-order tolerance. */
   def andersonDarling(df: DataFrame, groupCol: String, c: String,
-                      ga: String, gb: String,
-                      stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pts = df.filter(col(groupCol).isin(ga, gb))
-      .groupBy(col(c).as("v"))
-      .agg(sum(when(col(groupCol) === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === gb, 1L).otherwise(0L)).as("cb"))
-      .withColumn("t", col("ca") + col("cb"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("ca").as("__sa"), sum("t").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__sa").over(wStripe), lit(0L)).as("__oa"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
+                      ga: String, gb: String): DataFrame = {
     val nTot = col("__na") + col("__nb")
-    val ma = col("__oa") + sum("ca").over(wIn)
-    val b = col("__ot") + sum("t").over(wIn)
-    striped.join(broadcast(offs), Seq("__stripe"))
+    val ma = col("below_ca") + col("ca")
+    val b = col("below_t") + col("t")
+    twoSampleBelow(df, groupCol, c, ga, gb, "ca", "t")
       .select(col("t"), col("__na"), col("__nb"),
         (nTot * ma - col("__na") * b).as("num"), b.as("b"),
         nTot.as("nt"))
@@ -549,37 +494,18 @@ object Stats {
     * integer-rank selection with no interpolation (engine-identical,
     * the ts_conformal rank discipline).
     *
-    * Same striped two-pass prefix skeleton as [[ksTest]] over the
-    * distinct-value frame (weights partial-agg per value first);
+    * [[stripedPrefix]] over the distinct-value frame (weights
+    * partial-agg per value first);
     * the whole percentile ladder rides ONE broadcast of the tiny
     * (p, threshold) frame — selection is cw·100 ≥ W·p in exact long
     * arithmetic, one min per p. */
   def weightedQuantiles(df: DataFrame, c: String, w: String,
-                        ps: Seq[Int] = Seq(25, 50, 75),
-                        stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                        ps: Seq[Int] = Seq(25, 50, 75)): DataFrame = {
     val pts = df.groupBy(col(c).as("v"))
       .agg(sum(round(col(w)).cast("long")).as("t"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("t").as("__w"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("t").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
     val ladder = ps.map(p => struct(lit(p.toLong).as("p")))
-    striped.join(broadcast(offs), Seq("__stripe"))
-      .select(col("v"), col("__w"),
-        (col("__ot") + sum("t").over(wIn)).as("cw"))
+    valueBelow(pts, Seq("t"), sum("t").as("__w"))
+      .select(col("v"), col("__w"), (col("below_t") + col("t")).as("cw"))
       .select(col("v"), col("__w"), col("cw"),
         explode(array(ladder: _*)).as("pp"))
       .filter(col("cw") * 100 >= col("__w") * col("pp.p"))
@@ -597,35 +523,17 @@ object Stats {
     * deterministic, no engine-specific quantile interpolation), then
     * the k×2 above/≤ contingency χ² on K−1 df.
     *
-    * The median comes from the same striped two-pass prefix sum as
-    * [[ksTest]] (ties collapse first; nothing serializes the
+    * The median comes from [[stripedPrefix]] over the distinct values
+    * (ties collapse first; nothing serializes the
     * distinct-value frame) and rides back as a 1-row broadcast; the
     * k×2 cells are one conditional-count pass of exact longs, each
     * group's χ² contribution 1e6-quantized before the cross-group sum
     * (order-free longs, the cmhTest discipline). */
-  def moodMedian(df: DataFrame, groupCol: String, c: String,
-                 stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def moodMedian(df: DataFrame, groupCol: String, c: String): DataFrame = {
     val pts = df.groupBy(col(c).as("v"))
       .agg(count(lit(1)).as("t"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("t").as("__n"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("t").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
-    val med = striped.join(broadcast(offs), Seq("__stripe"))
-      .select(col("v"), (col("__ot") + sum("t").over(wIn)).as("c"),
+    val med = valueBelow(pts, Seq("t"), sum("t").as("__n"))
+      .select(col("v"), (col("below_t") + col("t")).as("c"),
         ((col("__n") + 1) / 2).cast("long").as("k"))
       .filter(col("c") >= col("k"))
       .agg(min("v").as("med"))
@@ -662,43 +570,19 @@ object Stats {
     * Var = n₁n₂/(N(N−1))·Σ(sᵢ−s̄)² — the general form, so ties need
     * no special correction.
     *
-    * Same striped prefix-sum skeleton as [[mannWhitneyU]]; everything
+    * Same [[stripedPrefix]] below-counts as [[mannWhitneyU]]; everything
     * stays INTEGER: doubled midranks mr2 = 2·below+t+1 are exact
     * longs, doubled scores s2 = min(mr2, 2(N+1)−mr2), and the three
     * sufficient sums (Σca·s2, Σt·s2, Σt·s2²) accumulate in
     * decimal(38,0) — AB is exact on any partitioning, one double
     * division at the close. */
   def ansariBradley(df: DataFrame, groupCol: String, c: String,
-                    ga: String, gb: String,
-                    stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                    ga: String, gb: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val pts = df.filter(col(groupCol).isin(ga, gb))
-      .groupBy(col(c).as("v"))
-      .agg(sum(when(col(groupCol) === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === gb, 1L).otherwise(0L)).as("cb"))
-      .withColumn("t", col("ca") + col("cb"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("t").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
     val nTot = col("__na") + col("__nb")
-    val mr2 = lit(2) * (col("__ot") +
-      coalesce(sum("t").over(wIn), lit(0L))) + col("t") + 1
+    val mr2 = lit(2) * col("below_t") + col("t") + 1
     val s2 = least(mr2, lit(2) * (nTot + 1) - mr2)
-    val agg = striped.join(broadcast(offs), Seq("__stripe"))
+    val agg = twoSampleBelow(df, groupCol, c, ga, gb, "t")
       .select(col("ca"), col("t"), col("__na"), col("__nb"),
         s2.as("s2"))
       .agg(max("__na").as("na"), max("__nb").as("nb"),
@@ -733,46 +617,21 @@ object Stats {
     * stochastic superiority p̂ = (R̄₂−(n₂+1)/2)/n₁ (an effect size on
     * its own).
     *
-    * Same striped two-pass prefix skeleton as [[mannWhitneyU]], kept
+    * Same [[stripedPrefix]] below-counts as [[mannWhitneyU]], kept
     * INTEGER throughout: pooled and within-group doubled midranks are
     * exact longs per distinct value (all tied members share one
     * placement, so the placement sums and square-sums are weighted
     * rollups of the distinct-value frame in decimal(38,0)); W and p̂
     * are two double formulas at the close. */
   def brunnerMunzel(df: DataFrame, groupCol: String, c: String,
-                    ga: String, gb: String,
-                    stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                    ga: String, gb: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val pts = df.filter(col(groupCol).isin(ga, gb))
-      .groupBy(col(c).as("v"))
-      .agg(sum(when(col(groupCol) === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === gb, 1L).otherwise(0L)).as("cb"))
-      .withColumn("t", col("ca") + col("cb"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("ca").as("__sa"), sum("cb").as("__sb"))
-      .select(col("__stripe"),
-        coalesce(sum("__sa").over(wStripe), lit(0L)).as("__oa"),
-        coalesce(sum("__sb").over(wStripe), lit(0L)).as("__ob"))
-    val ba = col("__oa") + coalesce(sum("ca").over(wIn), lit(0L))
-    val bb = col("__ob") + coalesce(sum("cb").over(wIn), lit(0L))
+    val (ba, bb) = (col("below_ca"), col("below_cb"))
     // doubled midranks: pooled, within-a, within-b (exact longs)
     val mr2 = lit(2) * (ba + bb) + col("t") + 1
     val mra2 = lit(2) * ba + col("ca") + 1
     val mrb2 = lit(2) * bb + col("cb") + 1
-    val agg = striped.join(broadcast(offs), Seq("__stripe"))
+    val agg = twoSampleBelow(df, groupCol, c, ga, gb, "ca", "cb")
       .select(col("ca"), col("cb"), col("__na"), col("__nb"),
         (mr2 - mra2).as("p2a"), (mr2 - mrb2).as("p2b"), mr2.as("mr2"))
       .agg(max("__na").as("na"), max("__nb").as("nb"),
@@ -817,37 +676,13 @@ object Stats {
     * exact integers. One corpus rollup; everything after is
     * distinct-value-sized. */
   def yuenTTest(df: DataFrame, groupCol: String, c: String,
-                ga: String, gb: String, trim: Double = 0.2,
-                stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                ga: String, gb: String, trim: Double = 0.2): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val pts = df.filter(col(groupCol).isin(ga, gb))
-      .select(col(groupCol).as("g"),
-        round(col(c) * 1e6).cast("long").as("q"))
-      .groupBy("q")
-      .agg(sum(when(col("g") === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("g") === gb, 1L).otherwise(0L)).as("cb"))
-    val bounds = pts.agg(min("q").as("__lo"), max("q").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("q") - col("__lo")).cast("double") /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("q")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("ca").as("__sa"), sum("cb").as("__sb"))
-      .select(col("__stripe"),
-        coalesce(sum("__sa").over(wStripe), lit(0L)).as("__oa"),
-        coalesce(sum("__sb").over(wStripe), lit(0L)).as("__ob"))
-    val cum = striped.join(broadcast(offs), Seq("__stripe"))
-      .select(col("q"), col("ca"), col("cb"), col("__na"), col("__nb"),
-        (col("__oa") + coalesce(sum("ca").over(wIn), lit(0L))).as("ba"),
-        (col("__ob") + coalesce(sum("cb").over(wIn), lit(0L))).as("bb"))
+    val micro = df.select(col(groupCol),
+      round(col(c) * 1e6).cast("long").as("q"))
+    val cum = twoSampleBelow(micro, groupCol, "q", ga, gb, "ca", "cb")
+      .select(col("v").as("q"), col("ca"), col("cb"), col("__na"),
+        col("__nb"), col("below_ca").as("ba"), col("below_cb").as("bb"))
       .localCheckpoint(true)
     // per group: g = floor(trim*n), interior ranks [g+1, n-g]
     def side(n: Column, below: Column, cnt: Column) = {
@@ -911,10 +746,8 @@ object Stats {
   def grubbs(events: DataFrame, eventType: String = "click")
       : DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
     val m = hourly.agg(count(lit(1)).as("n"),
       sum(col("v").cast(dec)).as("sv"),
       sum(col("v").cast(dec) * col("v").cast(dec)).as("svv"))
@@ -977,7 +810,7 @@ object Stats {
     * the nonparametric A/B test (median shift without normality
     * assumptions), with the tie-corrected normal approximation z.
     *
-    * Same striped-prefix-sum skeleton as [[ksTest]], but the quantity
+    * Same [[stripedPrefix]] pass as [[ksTest]], but the quantity
     * is the EXCLUSIVE running count of observations below each distinct
     * value, giving every value's average rank: ar(v) = below(v) +
     * (t+1)/2. The whole statistic stays in INTEGER arithmetic until the
@@ -987,8 +820,8 @@ object Stats {
     * distinct value (longs; a single value class above ~2M rows needs
     * the correction term widened — loud ANSI overflow, not silent). */
   def mannWhitneyU(df: DataFrame, groupCol: String, c: String,
-                   ga: String, gb: String, stripes: Int = 256): DataFrame = {
-    val s = rankSumAgg(df, groupCol, c, ga, gb, stripes)
+                   ga: String, gb: String): DataFrame = {
+    val s = rankSumAgg(df, groupCol, c, ga, gb)
     val u = (col("r1x2") - col("na") * (col("na") + 1)) / 2.0
     val n = col("na") + col("nb")
     val varU = col("na") * col("nb") / 12.0 *
@@ -1005,8 +838,8 @@ object Stats {
     * (same zero-rounding-tolerance guarantee: U is integer-exact, one
     * division at the end). */
   def auc(df: DataFrame, groupCol: String, c: String,
-          ga: String, gb: String, stripes: Int = 256): DataFrame = {
-    val s = rankSumAgg(df, groupCol, c, ga, gb, stripes)
+          ga: String, gb: String): DataFrame = {
+    val s = rankSumAgg(df, groupCol, c, ga, gb)
     val u = (col("r1x2") - col("na") * (col("na") + 1)) / 2.0
     s.select(round(u / (col("na") * col("nb")), 6).as("auc"),
       col("na").as("n_pos"), col("nb").as("n_neg"))
@@ -1018,29 +851,9 @@ object Stats {
     * instruments reading 2x apart still correlate 1.0 — CCC penalizes
     * both: ρc = 2·cov/(σx²+σy²+(μx−μy)²)). One pass over the aligned
     * hourly frame to the five moments, one 1-row formula, round 6. */
-  /** Paired hourly (x, y) frame shared by the agreement family
-    * ([[linCcc]], [[blandAltman]], [[pairedTTest]]): per-hour means of
-    * the two event types, aligned on the hour, pairs with either side
-    * missing dropped. One map-side-combined shuffle on the hour key. */
-  private def alignedHourly(events: DataFrame, typeA: String,
-                            typeB: String): DataFrame =
-    events.filter(col("event_type").isin(typeA, typeB))
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeA' then value end")
-          .cast("double") / lit(1e6))
-          .as("x"),
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeB' then value end")
-          .cast("double") / lit(1e6))
-          .as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
-
   def linCcc(events: DataFrame, typeA: String = "click",
              typeB: String = "view"): DataFrame = {
-    val hourly = alignedHourly(events, typeA, typeB)
+    val hourly = Resample.alignedHourly(events, typeA, typeB)
     val m = hourly.agg(count(lit(1)).as("n"),
       avg("x").as("mx"), avg("y").as("my"),
       var_pop(col("x")).as("vx"), var_pop(col("y")).as("vy"),
@@ -1062,7 +875,7 @@ object Stats {
     * difference moments, one 1-row formula. */
   def blandAltman(events: DataFrame, typeA: String = "click",
                   typeB: String = "view"): DataFrame = {
-    val m = alignedHourly(events, typeA, typeB)
+    val m = Resample.alignedHourly(events, typeA, typeB)
       .agg(count(lit(1)).as("n"),
         avg(col("x") - col("y")).as("bias"),
         stddev_samp(col("x") - col("y")).as("sd"))
@@ -1081,7 +894,7 @@ object Stats {
     * frame, one moment pass, 1-row formula. */
   def pairedTTest(events: DataFrame, typeA: String = "click",
                   typeB: String = "view"): DataFrame = {
-    val m = alignedHourly(events, typeA, typeB)
+    val m = Resample.alignedHourly(events, typeA, typeB)
       .agg(count(lit(1)).as("n"),
         avg(col("x") - col("y")).as("md"),
         stddev_samp(col("x") - col("y")).as("sd"))
@@ -1508,27 +1321,11 @@ object Stats {
   def welchBatteryBH(df: DataFrame, groupCol: String, c: String,
                      q: Double = 0.05): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = welchTTest(df, groupCol, c)
-    val x = abs(col("t_stat"))
-    val k = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
-    val poly = k * (lit(0.319381530) + k * (lit(-0.356563782) +
-      k * (lit(1.781477937) + k * (lit(-1.821255978) +
-        k * lit(1.330274429)))))
-    val phi = exp(-x * x / lit(2.0)) * lit(0.3989422804014327)
-    val withP = t.withColumn("p", round(lit(2.0) * phi * poly, 8))
-    val wAll = Window.partitionBy()
-    val wRank = Window.orderBy("p", "group_a", "group_b")
-    val ranked = withP
-      .withColumn("m", count(lit(1)).over(wAll))
-      .withColumn("i", row_number().over(wRank))
-      .withColumn("raw", col("p") * col("m") / col("i"))
     val wSuffix = Window.orderBy("i")
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    ranked
-      .withColumn("p_adj",
-        round(least(lit(1.0), min("raw").over(wSuffix)), 6))
-      .select(col("group_a"), col("group_b"), col("t_stat"), col("p"),
-        col("p_adj"), (col("p_adj") <= q).as("significant"))
+    welchAdjusted(welchRanked(df, groupCol, c)
+        .withColumn("raw", col("p") * col("m") / col("i")),
+      round(least(lit(1.0), min("raw").over(wSuffix)), 6), q)
   }
 
   /** BENJAMINI–YEKUTIELI correction over the same Welch battery — the
@@ -1546,28 +1343,12 @@ object Stats {
   def welchBatteryBY(df: DataFrame, groupCol: String, c: String,
                      q: Double = 0.05): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = welchTTest(df, groupCol, c)
-    val x = abs(col("t_stat"))
-    val k = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
-    val poly = k * (lit(0.319381530) + k * (lit(-0.356563782) +
-      k * (lit(1.781477937) + k * (lit(-1.821255978) +
-        k * lit(1.330274429)))))
-    val phi = exp(-x * x / lit(2.0)) * lit(0.3989422804014327)
-    val withP = t.withColumn("p", round(lit(2.0) * phi * poly, 8))
-    val wAll = Window.partitionBy()
-    val wRank = Window.orderBy("p", "group_a", "group_b")
-    val ranked = withP
-      .withColumn("m", count(lit(1)).over(wAll))
-      .withColumn("i", row_number().over(wRank))
-      .withColumn("cm", sum(lit(1.0) / col("i")).over(wAll))
-      .withColumn("raw", col("p") * col("m") * col("cm") / col("i"))
     val wSuffix = Window.orderBy("i")
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    ranked
-      .withColumn("p_adj",
-        round(least(lit(1.0), min("raw").over(wSuffix)), 6))
-      .select(col("group_a"), col("group_b"), col("t_stat"), col("p"),
-        col("p_adj"), (col("p_adj") <= q).as("significant"))
+    welchAdjusted(welchRanked(df, groupCol, c)
+        .withColumn("cm", sum(lit(1.0) / col("i")).over(Window.partitionBy()))
+        .withColumn("raw", col("p") * col("m") * col("cm") / col("i")),
+      round(least(lit(1.0), min("raw").over(wSuffix)), 6), q)
   }
 
   /** HOLM step-down FWER correction over the same Welch battery —
@@ -1582,27 +1363,41 @@ object Stats {
   def welchBatteryHolm(df: DataFrame, groupCol: String, c: String,
                        alpha: Double = 0.05): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = welchTTest(df, groupCol, c)
+    val wPrefix = Window.orderBy("i")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    welchAdjusted(welchRanked(df, groupCol, c)
+        .withColumn("raw",
+          least(lit(1.0), col("p") * (col("m") - col("i") + 1))),
+      round(max("raw").over(wPrefix), 6), alpha)
+  }
+
+  /** The Welch battery's shared steps: [[welchTTest]]'s pairs with the
+    * two-sided normal p-value `p` (Abramowitz–Stegun 7.1.26, rounded
+    * 8dp so both engines rank identical doubles), the pair count `m`
+    * and the rank `i` in the (p, group_a, group_b) total order. */
+  private def welchRanked(df: DataFrame, groupCol: String, c: String)
+      : DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val x = abs(col("t_stat"))
     val k = lit(1.0) / (lit(1.0) + lit(0.2316419) * x)
     val poly = k * (lit(0.319381530) + k * (lit(-0.356563782) +
       k * (lit(1.781477937) + k * (lit(-1.821255978) +
         k * lit(1.330274429)))))
     val phi = exp(-x * x / lit(2.0)) * lit(0.3989422804014327)
-    val withP = t.withColumn("p", round(lit(2.0) * phi * poly, 8))
-    val wAll = Window.partitionBy()
-    val wRank = Window.orderBy("p", "group_a", "group_b")
-    val ranked = withP
-      .withColumn("m", count(lit(1)).over(wAll))
-      .withColumn("i", row_number().over(wRank))
-      .withColumn("raw", least(lit(1.0), col("p") * (col("m") - col("i") + 1)))
-    val wPrefix = Window.orderBy("i")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranked
-      .withColumn("p_adj", round(max("raw").over(wPrefix), 6))
-      .select(col("group_a"), col("group_b"), col("t_stat"), col("p"),
-        col("p_adj"), (col("p_adj") <= alpha).as("significant"))
+    welchTTest(df, groupCol, c)
+      .withColumn("p", round(lit(2.0) * phi * poly, 8))
+      .withColumn("m", count(lit(1)).over(Window.partitionBy()))
+      .withColumn("i",
+        row_number().over(Window.orderBy("p", "group_a", "group_b")))
   }
+
+  /** The battery report: each pair's adjusted p-value `pAdj` and
+    * whether it clears `level`. */
+  private def welchAdjusted(ranked: DataFrame, pAdj: Column,
+                            level: Double): DataFrame =
+    ranked.withColumn("p_adj", pAdj)
+      .select(col("group_a"), col("group_b"), col("t_stat"), col("p"),
+        col("p_adj"), (col("p_adj") <= level).as("significant"))
 
   /** The deterministic md5 arm split — first hex digit < '8' (the high
     * bit of the first nibble) → A. ONE definition shared by dq_srm's
@@ -1768,8 +1563,8 @@ object Stats {
     * rounding tolerance anywhere before the final 6dp. δ∈[−1,1]:
     * ±1 = complete separation, 0 = stochastic equality. */
   def cliffsDelta(df: DataFrame, groupCol: String, c: String,
-                  ga: String, gb: String, stripes: Int = 256): DataFrame = {
-    val s = rankSumAgg(df, groupCol, c, ga, gb, stripes)
+                  ga: String, gb: String): DataFrame = {
+    val s = rankSumAgg(df, groupCol, c, ga, gb)
     val u = (col("r1x2") - col("na") * (col("na") + 1)) / 2.0
     s.select(
       round(lit(2.0) * u / nullif((col("na") * col("nb")).cast("double"),
@@ -1789,10 +1584,7 @@ object Stats {
     * both engines drop identical ties. */
   def runsTest(events: DataFrame, eventType: String = "click"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg((Exact.avgValueMicros.cast("double") / lit(1e6)).as("v"))
+    val hourly = Resample.hourlyMeans(events, eventType)
     val med = hourly.agg(
       round(expr("percentile(v, CAST(1 AS DOUBLE)/2)"), 6).as("__m"))
     val signed = hourly.crossJoin(broadcast(med))
@@ -1891,8 +1683,8 @@ object Stats {
     * is one partial-agg pass over the event frame. */
   def wilcoxonSignedRank(events: DataFrame, unitCol: String = "user_id",
                          typeCol: String = "event_type", c: String = "value",
-                         ta: String = "click", tb: String = "view",
-                         stripes: Int = 256): DataFrame = {
+                         ta: String = "click", tb: String = "view")
+      : DataFrame = {
     val d = events.filter(col(typeCol).isin(ta, tb))
       .groupBy(unitCol)
       .agg(avg(when(col(typeCol) === ta, col(c))).as("__ma"),
@@ -1902,7 +1694,7 @@ object Stats {
       .filter(col("d") =!= 0.0)
       .select(abs(col("d")).as("v"),
         when(col("d") > 0, "pos").otherwise("neg").as("sgn"))
-    val s = rankSumAgg(d, "sgn", "v", "pos", "neg", stripes)
+    val s = rankSumAgg(d, "sgn", "v", "pos", "neg")
     val n = (col("na") + col("nb")).cast("double")
     val wPlus = col("r1x2") / 2.0
     val varW = n * (n + 1) * (n * 2 + 1) / 24.0 - col("ties") / 48.0
@@ -1915,39 +1707,12 @@ object Stats {
     * 1-row frame (r1x2 = 2·R1, ties = Σt³−t, na, nb), all exact
     * integers. */
   private def rankSumAgg(df: DataFrame, groupCol: String, c: String,
-                         ga: String, gb: String,
-                         stripes: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pts = df.filter(col(groupCol).isin(ga, gb))
-      .groupBy(col(c).as("v"))
-      .agg(sum(when(col(groupCol) === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === gb, 1L).otherwise(0L)).as("cb"))
-      .withColumn("t", col("ca") + col("cb"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("t").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
-    val s = striped.join(broadcast(offs), Seq("__stripe"))
-      .withColumn("below",
-        col("__ot") + coalesce(sum("t").over(wIn), lit(0L)))
+                         ga: String, gb: String): DataFrame =
+    twoSampleBelow(df, groupCol, c, ga, gb, "t")
       .agg(
-        sum(col("ca") * (lit(2) * col("below") + col("t") + 1)).as("r1x2"),
+        sum(col("ca") * (lit(2) * col("below_t") + col("t") + 1)).as("r1x2"),
         sum(col("t") * col("t") * col("t") - col("t")).as("ties"),
         max("__na").as("na"), max("__nb").as("nb"))
-    s
-  }
 
   /** One-way ANOVA F over ALL groups at once (welchTTest's k-group
     * sibling): between-group vs within-group variance from the same
@@ -2004,31 +1769,13 @@ object Stats {
 
   /** Global MIDRANKS of a numeric column (ties share the average rank)
     * — the striped twin of avg(row_number) OVER (ORDER BY v): distinct
-    * values collapse in one partial-agg pass, value-range stripes give
-    * parallel prefix sums (st_ks's skeleton), midrank = below + (t+1)/2.
+    * values collapse in one partial-agg pass, [[stripedPrefix]] gives
+    * the below-counts, midrank = below + (t+1)/2.
     * One row per DISTINCT value; never a single-partition global sort. */
-  private def midranks(df: DataFrame, c: String, stripes: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pts = df.groupBy(col(c).as("v")).agg(count(lit(1)).as("t"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe").agg(sum("t").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
-    striped.join(broadcast(offs), Seq("__stripe"))
-      .withColumn("below",
-        col("__ot") + coalesce(sum("t").over(wIn), lit(0L)))
-      .select(col("v"), (col("below") + (col("t") + 1) / 2.0).as("rk"))
-  }
+  private def midranks(df: DataFrame, c: String): DataFrame =
+    valueBelow(df.groupBy(col(c).as("v")).agg(count(lit(1)).as("t")),
+        Seq("t"))
+      .select(col("v"), (col("below_t") + (col("t") + 1) / 2.0).as("rk"))
 
   /** Spearman rank correlation (the monotone-association measure
     * Pearson misses): Pearson corr of the two columns' global midranks.
@@ -2036,14 +1783,13 @@ object Stats {
     * value key (plain equi-joins — AQE broadcasts small rank frames);
     * ranks are exact half-integers from integer arithmetic, so both
     * oracle engines see identical inputs to the final corr. */
-  def spearman(df: DataFrame, x: String, y: String,
-               stripes: Int = 256): DataFrame = {
+  def spearman(df: DataFrame, x: String, y: String): DataFrame = {
     val pairs = df
       .select(col(x).cast("double").as("xv"), col(y).cast("double").as("yv"))
       .filter(col("xv").isNotNull && col("yv").isNotNull)
-    val rx = midranks(pairs, "xv", stripes)
+    val rx = midranks(pairs, "xv")
       .select(col("v").as("xv"), col("rk").as("rkx"))
-    val ry = midranks(pairs, "yv", stripes)
+    val ry = midranks(pairs, "yv")
       .select(col("v").as("yv"), col("rk").as("rky"))
     pairs.join(rx, "xv").join(ry, "yv")
       .agg(count(lit(1)).as("n"),
@@ -2187,8 +1933,8 @@ object Stats {
     * One exchange on the group key with an in-partition sort (groups
     * rank in parallel; ties are rank-order-invariant because equal x
     * contribute the same Σ i·x under any permutation of their ranks).
-    * For a single giant group the st_ks striped-prefix-sum skeleton is
-    * the drop-in replacement for the window rank. */
+    * For a single giant group [[stripedRank]] is the drop-in
+    * replacement for the window rank. */
   def gini(df: DataFrame, groupCol: String, c: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(groupCol).orderBy(col("__x"))
@@ -2595,12 +2341,12 @@ object Stats {
     * tie-corrected form leave integer land only in the final k-row
     * formula (identical expression tree on both engines, round 4).
     * Output: one row — k, n, h, h_adj, plus Σ(t³−t) for audit. */
-  def kruskalWallis(df: DataFrame, groupCol: String, c: String,
-                    stripes: Int = 256): DataFrame = {
+  def kruskalWallis(df: DataFrame, groupCol: String, c: String)
+      : DataFrame = {
     val rows = df.filter(col(c).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).as("g"), col(c).cast("double").as("v"))
     val cnt = rows.groupBy("g", "v").agg(count(lit(1)).as("c"))
-    val rk = midranks(rows, "v", stripes)
+    val rk = midranks(rows, "v")
     val gs = cnt.join(rk, "v")
       .groupBy("g")
       .agg(sum("c").as("n"), sum(col("c") * col("rk")).as("rsum"))
@@ -2632,15 +2378,14 @@ object Stats {
     * engine-identical).
     *
     * NOT the quadratic pairwise form: one (group, value) count pass,
-    * a k×distinct-value grid, striped per-group prefix sums for
-    * below-counts (the [[ksTest]] skeleton with the group key added —
+    * a k×distinct-value grid, per-group [[stripedPrefix]] sums for
+    * below-counts (keyed on the group —
     * no value-cardinality window partition), then a k-bounded prefix
     * over group order per value; 2·JT = Σ t·(2·below+ t_prev) stays an
     * exact integer in decimal(38,0) on any partitioning (validated
     * against the brute-force pairwise sum). Frames are
     * distinct-value×k-sized, never pair-sized. */
-  def jonckheereTerpstra(orders: DataFrame,
-                         stripes: Int = 256): DataFrame = {
+  def jonckheereTerpstra(orders: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
     val rows = orders.select(col("o_orderpriority").as("g"),
@@ -2651,22 +2396,10 @@ object Stats {
       .crossJoin(broadcast(cnt.select("g").distinct()))
       .join(cnt, Seq("g", "v"), "left")
       .na.fill(0L, Seq("t"))
-    val striped = grid.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")).cast("double") /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("g", "__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.partitionBy("g").orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("g", "__stripe").agg(sum("t").as("__st"))
-      .select(col("g"), col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
-    val below = striped.join(broadcast(offs), Seq("g", "__stripe"))
-      .withColumn("below",
-        col("__ot") + coalesce(sum("t").over(wIn), lit(0L)))
+    val below = stripedPrefix(grid.crossJoin(broadcast(bounds)),
+        valueStripe(col("v"), col("__lo"), col("__hi")), Seq(col("v")),
+        Seq("t"), keys = Seq("g"))
+      .withColumnRenamed("below_t", "below")
     // k-bounded prefix over the group ORDER per value: contributions
     // of every lower-ordered group to this group's values
     val wG = Window.partitionBy("v").orderBy("g")
@@ -2714,10 +2447,8 @@ object Stats {
                    eventType: String = "click"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("y"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("y"))
     val h0 = broadcast(hourly.agg(min("hr").as("h0")))
     val pts = hourly.crossJoin(h0)
       .select((col("hr") - col("h0")).as("x"), col("y"))
@@ -2772,19 +2503,7 @@ object Stats {
     * pair join never grows with the data. */
   def kendallTau(events: DataFrame, typeA: String = "click",
                  typeB: String = "view"): DataFrame = {
-    val hourly = events.filter(col("event_type").isin(typeA, typeB))
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeA' then value end")
-          .cast("double") / lit(1e6))
-          .as("x"),
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeB' then value end")
-          .cast("double") / lit(1e6))
-          .as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
+    val hourly = Resample.alignedHourly(events, typeA, typeB)
     val b = hourly.select(col("hr").as("hr2"), col("x").as("x2"),
       col("y").as("y2"))
     val pairs = hourly.join(broadcast(b), col("hr") < col("hr2"))
@@ -2819,7 +2538,7 @@ object Stats {
     * window); C, D, Tx, Ty exact longs, two double divisions out. */
   def somersD(events: DataFrame, typeA: String = "click",
               typeB: String = "view"): DataFrame = {
-    val hourly = alignedHourly(events, typeA, typeB)
+    val hourly = Resample.alignedHourly(events, typeA, typeB)
     val b = hourly.select(col("hr").as("hr2"), col("x").as("x2"),
       col("y").as("y2"))
     val pairs = hourly.join(broadcast(b), col("hr") < col("hr2"))
@@ -2863,7 +2582,7 @@ object Stats {
   def hoeffdingD(events: DataFrame, typeA: String = "click",
                  typeB: String = "view"): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val hourly = alignedHourly(events, typeA, typeB)
+    val hourly = Resample.alignedHourly(events, typeA, typeB)
     val b = hourly.select(col("hr").as("hr2"), col("x").as("x2"),
       col("y").as("y2"))
     def c2(a: Column, bb: Column): Column =
@@ -2903,39 +2622,47 @@ object Stats {
     * b1, b2, r2. */
   def ols2(df: DataFrame, y: String, x1: String, x2: String): DataFrame = {
     def z(c: String) = round(col(c) * 100).cast("decimal(18,0)")
-    val s = df
-      .select(z(y).as("yy"), z(x1).as("a"), z(x2).as("b"))
-      .agg(count(lit(1)).as("n"),
-        sum("a").as("sa"), sum("b").as("sb"), sum("yy").as("sy"),
-        sum(col("a") * col("a")).as("saa"),
-        sum(col("a") * col("b")).as("sab"),
-        sum(col("b") * col("b")).as("sbb"),
-        sum(col("a") * col("yy")).as("say"),
-        sum(col("b") * col("yy")).as("sby"),
-        sum(col("yy") * col("yy")).as("syy"))
-    val n = col("n").cast("double")
-    val (sa, sb, sy) = (col("sa").cast("double"), col("sb").cast("double"),
-      col("sy").cast("double"))
-    val (saa, sab, sbb) = (col("saa").cast("double"),
-      col("sab").cast("double"), col("sbb").cast("double"))
-    val (say, sby, syy) = (col("say").cast("double"),
-      col("sby").cast("double"), col("syy").cast("double"))
-    // Cramer on the 3×3 normal equations [n sa sb; sa saa sab; sb sab sbb]
+    import Ols3._
+    val sst = syy - sy * sy / n
+    Ols3.sums(df.select(z(y).as("yy"), z(x1).as("a"), z(x2).as("b")))
+      .select(col("n"),
+        round(a0 / 100.0, 6).as("intercept"),
+        round(b1, 6).as("b1"), round(b2, 6).as("b2"),
+        round(lit(1.0) - sse / nullif(sst, lit(0.0)), 6).as("r2"))
+  }
+
+  /** Least squares of `yy` ~ 1 + `a` + `b` from exact sums: [[sums]] is
+    * the one aggregate of n and the nine cross-moments, and the rest is
+    * the Cramer solve of the 3×3 normal equations
+    * [n sa sb; sa saa sab; sb sab sbb] over its columns — one identical
+    * double expression tree on both engines. Shared by [[ols2]] and
+    * [[Resample.adfTest]]. */
+  private[operators] object Ols3 {
+    def sums(pts: DataFrame): DataFrame = pts.agg(count(lit(1)).as("n"),
+      sum("a").as("sa"), sum("b").as("sb"), sum("yy").as("sy"),
+      sum(col("a") * col("a")).as("saa"),
+      sum(col("a") * col("b")).as("sab"),
+      sum(col("b") * col("b")).as("sbb"),
+      sum(col("a") * col("yy")).as("say"),
+      sum(col("b") * col("yy")).as("sby"),
+      sum(col("yy") * col("yy")).as("syy"))
+    private def d(c: String) = col(c).cast("double")
+    val n = d("n")
+    val (sa, sb, sy) = (d("sa"), d("sb"), d("sy"))
+    val (saa, sab, sbb) = (d("saa"), d("sab"), d("sbb"))
+    val (say, sby, syy) = (d("say"), d("sby"), d("syy"))
     val det = n * (saa * sbb - sab * sab) - sa * (sa * sbb - sab * sb) +
       sb * (sa * sab - saa * sb)
-    val d0 = sy * (saa * sbb - sab * sab) - sa * (say * sbb - sab * sby) +
-      sb * (say * sab - saa * sby)
-    val d1 = n * (say * sbb - sab * sby) - sy * (sa * sbb - sab * sb) +
-      sb * (sa * sby - say * sb)
-    val d2 = n * (saa * sby - say * sab) - sa * (sa * sby - say * sb) +
-      sy * (sa * sab - saa * sb)
+    private val d0 = sy * (saa * sbb - sab * sab) -
+      sa * (say * sbb - sab * sby) + sb * (say * sab - saa * sby)
+    private val d1 = n * (say * sbb - sab * sby) -
+      sy * (sa * sbb - sab * sb) + sb * (sa * sby - say * sb)
+    private val d2 = n * (saa * sby - say * sab) -
+      sa * (sa * sby - say * sb) + sy * (sa * sab - saa * sb)
+    /** Intercept and the two slopes. */
     val (a0, b1, b2) = (d0 / det, d1 / det, d2 / det)
-    val sst = syy - sy * sy / n
+    /** Residual sum of squares. */
     val sse = syy - a0 * sy - b1 * say - b2 * sby
-    s.select(col("n"),
-      round(a0 / 100.0, 6).as("intercept"),
-      round(b1, 6).as("b1"), round(b2, 6).as("b2"),
-      round(lit(1.0) - sse / nullif(sst, lit(0.0)), 6).as("r2"))
   }
 
   /** Friedman test over COMPLETE blocks — the repeated-measures twin of
@@ -3047,15 +2774,14 @@ object Stats {
     * Within-block ranks are the ROW-LOCAL [[friedmanRanked]]
     * comparisons kept as doubled integers; ranges quantize to
     * micro-unit longs and their across-block midranks come from the
-    * same striped two-pass prefix sum as [[ksTest]] (the only global
+    * [[stripedPrefix]] (the only global
     * rank — distinct-range-sized, never serialized); 4S = (2Q)(2r−4)
     * is an exact long per cell, the sufficient sums accumulate in
     * decimal(38,0), and F is one double formula. All-blocks-agree
     * (A₂=B) reports null (F diverges — documented). */
   def quade(events: DataFrame,
-            types: Seq[String] = Seq("click", "view", "purchase"),
-            stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+            types: Seq[String] = Seq("click", "view", "purchase"))
+      : DataFrame = {
     require(types.size == 3, "row-local rank formulas are written for k=3")
     val Seq(t1, t2, t3) = types
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -3080,27 +2806,11 @@ object Stats {
         round((greatest(col("x1"), col("x2"), col("x3")) -
           least(col("x1"), col("x2"), col("x3"))) * 1e6).cast("long")
           .as("rq"))
-    val pts = blocks.groupBy("rq").agg(count(lit(1)).as("t"))
-    val bounds = pts.agg(min("rq").as("__lo"), max("rq").as("__hi"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("rq") - col("__lo")).cast("double") /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("rq")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("t").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"))
-    val q2 = striped.join(broadcast(offs), Seq("__stripe"))
-      .select(col("rq"),
-        (lit(2) * (col("__ot") +
-          coalesce(sum("t").over(wIn), lit(0L))) + col("t") + 1)
-          .as("q2"))
+    val q2 = valueBelow(
+        blocks.groupBy(col("rq").as("v")).agg(count(lit(1)).as("t")),
+        Seq("t"))
+      .select(col("v").as("rq"),
+        (lit(2) * col("below_t") + col("t") + 1).as("q2"))
     val cells = blocks.join(q2, Seq("rq"))
       .select((col("q2") * (col("ra") - 4)).as("s1"),
         (col("q2") * (col("rb") - 4)).as("s2"),
@@ -3345,8 +3055,8 @@ object Stats {
     * maximization — the algebra drops the constant terms), and the
     * argmax threshold ties to the SMALLEST value.
     *
-    * The candidate sweep costs one [[ksTest]]-style striped prefix
-    * pass — no per-threshold rescan (the naive stump is O(values ×
+    * The candidate sweep costs one [[stripedPrefix]] pass — no
+    * per-threshold rescan (the naive stump is O(values ×
     * corpus); this is one corpus rollup + one distinct-value pass,
     * the 100 TB shape). Counts and their squares live in
     * decimal(38,0); each candidate's s quantizes to NANO-units for an
@@ -3359,34 +3069,17 @@ object Stats {
     * (4e9·n³ < 1e38 ⟺ n < 2.92e9; DuckDB HUGEINT has the same ~1.7e38
     * ceiling). Beyond ~3 billion rows per stump pass, rescale the 1e9
     * nano-unit to 1e6 (buys 10×) or pre-aggregate the feature. */
-  def giniStump(documents: DataFrame, posLang: String = "en",
-                stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def giniStump(documents: DataFrame, posLang: String = "en")
+      : DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val pts = documents.select(col("n_chars").as("v"),
         (col("lang") === posLang).cast("long").as("y"))
       .groupBy("v")
       .agg(sum("y").as("n1"), sum(lit(1L) - col("y")).as("n0"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("n1").as("__t1"), sum("n0").as("__t0"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")).cast("double") /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("n1").as("__s1"), sum("n0").as("__s0"))
-      .select(col("__stripe"),
-        coalesce(sum("__s1").over(wStripe), lit(0L)).as("__o1"),
-        coalesce(sum("__s0").over(wStripe), lit(0L)).as("__o0"))
-    val c1 = col("__o1") + sum("n1").over(wIn)
-    val c0 = col("__o0") + sum("n0").over(wIn)
-    val cand = striped.join(broadcast(offs), Seq("__stripe"))
+    val c1 = col("below_n1") + col("n1")
+    val c0 = col("below_n0") + col("n0")
+    val cand = valueBelow(pts, Seq("n1", "n0"),
+        sum("n1").as("__t1"), sum("n0").as("__t0"))
       .select(col("v"), col("__t0"), col("__t1"),
         c1.as("c1"), c0.as("c0"))
       .withColumn("nl", col("c0") + col("c1"))
@@ -3853,24 +3546,7 @@ object Stats {
   def partialCorr(events: DataFrame, typeA: String = "click",
                   typeB: String = "view",
                   ctrl: String = "purchase"): DataFrame = {
-    val hourly = events.filter(col("event_type").isin(typeA, typeB, ctrl))
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeA' then value end")
-          .cast("double") / lit(1e6))
-          .as("x"),
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$typeB' then value end")
-          .cast("double") / lit(1e6))
-          .as("y"),
-        (Exact.avgMicrosExpr(
-          s"case when event_type = '$ctrl' then value end")
-          .cast("double") / lit(1e6))
-          .as("z"))
-      .filter(col("x").isNotNull && col("y").isNotNull &&
-        col("z").isNotNull)
+    val hourly = Resample.alignedHourly(events, typeA, typeB, ctrl)
     hourly.agg(count(lit(1)).as("n"),
       round(corr(col("x"), col("y")), 6).as("rxy"),
       round(corr(col("x"), col("z")), 6).as("rxz"),
@@ -3930,49 +3606,23 @@ object Stats {
     * occupies own-sample slots belowA+1..belowA+ca, so with the odd
     * integer D = 2·(below − belowA) + t + 1,
     *   4·Σ_class(r−i)² = ca·D² − 2·D·ca·(ca+1) + 2·ca·(ca+1)·(2ca+1)/3
-    * is an exact long on any engine and any partitioning ([[ksTest]]'s
-    * striped-prefix-sum skeleton; no global single-partition sort).
+    * is an exact long on any engine and any partitioning
+    * ([[stripedPrefix]] below-counts; no global single-partition sort).
     * The two sample sums widen to decimal(38,0) before the N·/M·
     * products (the long bound 4N³ passes ~10⁸ rows — loud ANSI
     * overflow beyond, never silent), and the single final division to
     * doubles happens on bit-identical exact inputs. */
   def cramerVonMises(df: DataFrame, groupCol: String, c: String,
-                     ga: String, gb: String, stripes: Int = 256)
-      : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pts = df.filter(col(groupCol).isin(ga, gb))
-      .groupBy(col(c).as("v"))
-      .agg(sum(when(col(groupCol) === ga, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === gb, 1L).otherwise(0L)).as("cb"))
-      .withColumn("t", col("ca") + col("cb"))
-    val bounds = pts.agg(min("v").as("__lo"), max("v").as("__hi"),
-      sum("ca").as("__na"), sum("cb").as("__nb"))
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col("v") - col("__lo")) /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-    val wIn = Window.partitionBy("__stripe").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(sum("t").as("__st"), sum("ca").as("__sa"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__ot"),
-        coalesce(sum("__sa").over(wStripe), lit(0L)).as("__oa"))
+                     ga: String, gb: String): DataFrame = {
     // 4·Σ(r−i)² per class for one sample (its count cg, its D): the
     // DIV keeps the whole term in long arithmetic (2·cg·(cg+1)·(2cg+1)
     // is always divisible by 3)
     def quad(cg: String, d: String): Column = expr(
       s"CASE WHEN $cg = 0 THEN 0 ELSE $cg*$d*$d - 2*$d*$cg*($cg+1)" +
         s" + (2*$cg*($cg+1)*(2*$cg+1)) DIV 3 END")
-    val s = striped.join(broadcast(offs), Seq("__stripe"))
-      .withColumn("below",
-        col("__ot") + coalesce(sum("t").over(wIn), lit(0L)))
-      .withColumn("belowA",
-        col("__oa") + coalesce(sum("ca").over(wIn), lit(0L)))
+    val s = twoSampleBelow(df, groupCol, c, ga, gb, "t", "ca")
+      .withColumnRenamed("below_t", "below")
+      .withColumnRenamed("below_ca", "belowA")
       .withColumn("belowB", col("below") - col("belowA"))
       .withColumn("__da",
         lit(2L) * (col("below") - col("belowA")) + col("t") + lit(1L))
@@ -4076,7 +3726,7 @@ object Stats {
     * crossJoin of a calendar-sized frame, documented as such. */
   def distanceCorrelation(events: DataFrame, typeA: String = "click",
                           typeB: String = "view"): DataFrame = {
-    val h = alignedHourly(events, typeA, typeB)
+    val h = Resample.alignedHourly(events, typeA, typeB)
       .select(col("hr"), round(col("x") * 1e6).cast("long").as("xu"),
         round(col("y") * 1e6).cast("long").as("yu"))
       .localCheckpoint(true)
@@ -4201,7 +3851,7 @@ object Stats {
   def signTest(events: DataFrame, typeA: String = "click",
                typeB: String = "view"): DataFrame = {
     val d = round(col("x") - col("y"), 6)
-    alignedHourly(events, typeA, typeB)
+    Resample.alignedHourly(events, typeA, typeB)
       .agg(sum(when(d > 0, 1L).otherwise(0L)).as("n_pos"),
         sum(when(d < 0, 1L).otherwise(0L)).as("n_neg"),
         sum(when(d === 0, 1L).otherwise(0L)).as("n_ties"))
@@ -4226,8 +3876,7 @@ object Stats {
   def energyDistance(events: DataFrame, typeA: String = "click",
                      typeB: String = "view"): DataFrame = {
     val h = events.filter(col("event_type").isin(typeA, typeB))
-      .groupBy(col("event_type"),
-        expr("unix_seconds(date_trunc('hour', ts)) div 3600").as("hr"))
+      .groupBy(col("event_type"), Resample.hourKey.as("hr"))
       .agg(Exact.avgValueMicros.as("vu"))
       .localCheckpoint(true)
     val a = h.filter(col("event_type") === typeA)
@@ -4295,7 +3944,7 @@ object Stats {
   def demingRegression(events: DataFrame, typeA: String = "click",
                        typeB: String = "view"): DataFrame = {
     val dec = "decimal(38,0)"
-    val h = alignedHourly(events, typeA, typeB)
+    val h = Resample.alignedHourly(events, typeA, typeB)
       .select(round(col("x") * 1e6).cast("long").as("x6"),
         round(col("y") * 1e6).cast("long").as("y6"))
     val m = h.agg(count(lit(1)).as("n"),
@@ -5054,6 +4703,89 @@ object Stats {
           .as("mmd2"))
   }
 
+  /** Stripe count of the value-range stripe map ([[valueStripe]]). The
+    * offset window of [[stripedPrefix]] sees at most this many rows. */
+  private[operators] val Stripes = 256
+
+  /** Value-range stripe of `v`: `stripes` equal-width bins over
+    * [`lo`, `hi`], computed on doubles, every row in bin 0 when
+    * hi = lo. Non-decreasing in `v`, so it is a valid stripe map for
+    * [[stripedPrefix]] over ascending `v`; a null `v` lands in bin 0
+    * (`greatest` skips the null), where it also sorts first. */
+  private[operators] def valueStripe(v: Column, lo: Column, hi: Column,
+                                     stripes: Int = Stripes): Column = {
+    val (x, l, h) = (v.cast("double"), lo.cast("double"), hi.cast("double"))
+    when(h === l, lit(0L)).otherwise(least(lit(stripes - 1L),
+      greatest(lit(0L), floor((x - l) / (h - l) * stripes))))
+  }
+
+  /** STRIPED TWO-PASS PREFIX SUM — the running sum every rank and ECDF
+    * operator here needs, without the single-task sort a plain
+    * `Window.orderBy` brings. For each column `c` of `sums` (long or
+    * decimal) it adds `below_<c>`: the total of `c` over the rows
+    * strictly before this one in `order`, within each `keys` group
+    * (null keys form their own group) — what
+    * `sum(c).over(partitionBy(keys).orderBy(order)
+    * .rowsBetween(unboundedPreceding, -1))` computes, 0 for the first
+    * row. An inclusive running sum is `below_<c> + c`, exact in long
+    * and decimal arithmetic.
+    *
+    * Pass 1 sums each (keys, stripe) and prefix-sums those totals over
+    * a window of at most one row per stripe, broadcast back; pass 2
+    * runs the within-stripe running sums in parallel across stripes.
+    * CONTRACT: `stripe` must be non-decreasing in `order` (within a
+    * key). Then concatenating stripe prefixes is the global prefix, and
+    * ANY such map gives the same sums — the stripe count is an
+    * execution detail, never part of the result. */
+  private[operators] def stripedPrefix(df: DataFrame, stripe: Column,
+                                       order: Seq[Column],
+                                       sums: Seq[String],
+                                       keys: Seq[String] = Nil)
+      : DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val striped = df.withColumn("__stripe", stripe.cast("int"))
+    val on = keys :+ "__stripe"
+    val byStripe = Window.orderBy("__stripe").partitionBy(keys.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offs = striped.groupBy(on.map(col): _*)
+      .agg(sum(sums.head).as(s"__t_${sums.head}"),
+        sums.tail.map(c => sum(c).as(s"__t_$c")): _*)
+      .select(on.map(k => col(k).as(s"__on_$k")) ++ sums.map(c =>
+        coalesce(sum(s"__t_$c").over(byStripe), lit(0L)).as(s"__o_$c")): _*)
+    val inStripe = Window.partitionBy(on.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    striped
+      .join(broadcast(offs), on.map(k => col(k) <=> col(s"__on_$k"))
+        .reduce(_ && _))
+      .select(df.columns.toSeq.map(c => striped(c)) ++ sums.map(c =>
+        (col(s"__o_$c") + coalesce(sum(c).over(inStripe), lit(0L)))
+          .as(s"below_$c")): _*)
+  }
+
+  /** Global 1-based row rank `r` over the (`v`, `tie`) total order, as
+    * `row_number().over(Window.orderBy(v, tie))` would give it, through
+    * [[stripedPrefix]] on value-range stripes of `v` (r = below + 1):
+    * corpus-proportional rank frames never pass through one task.
+    * Output: the input columns plus `r`. */
+  private[operators] def stripedRank(pts: DataFrame, v: String,
+                                     tie: String): DataFrame =
+    stripedRankWith(pts, v, tie,
+      pts.agg(min(col(v)).as("__lo"), max(col(v)).as("__hi")))
+
+  /** [[stripedRank]] with a CALLER-built 1-row bounds frame carrying
+    * `__lo`/`__hi` — callers that already aggregate the input (a count
+    * for decile arithmetic, say) fold the bounds into that same pass
+    * and save one scan; any extra columns on `bounds` ride along into
+    * the output (the ml_lift/ml_qini r12-verdict item-5 shave). */
+  private[operators] def stripedRankWith(pts: DataFrame, v: String,
+                                         tie: String,
+                                         bounds: DataFrame): DataFrame =
+    stripedPrefix(pts.crossJoin(broadcast(bounds)).withColumn("__n", lit(1L)),
+        valueStripe(col(v), col("__lo"), col("__hi")),
+        Seq(col(v), col(tie)), Seq("__n"))
+      .withColumn("r", col("below___n") + 1)
+      .drop("__lo", "__hi", "__n", "below___n")
+
   /** PEAKS-OVER-THRESHOLD tail fit — EXTREME VALUE THEORY's working
     * tool ([[grubbs]] asks "is this one point an outlier"; EVT asks
     * the capacity question: how heavy is the tail ITSELF, and what
@@ -5070,50 +4802,6 @@ object Stats {
     * engines), ranks are row_number over the (y, event_id) total
     * order, and the two weighted sums are single aggregates over
     * exact inputs. One corpus pass to the exceedance frame. */
-  /** Global 1-based row rank over the (`v`, `tie`) total order WITHOUT
-    * an unpartitioned window — the [[giniStump]] striped-prefix pattern
-    * extracted for corpus-proportional rank frames: range-stripe on v
-    * (the stripe is a function of v alone, so equal values never
-    * straddle a boundary and stripe order equals value order), rank
-    * within each stripe in parallel, then add the per-stripe count
-    * offsets. The only global window left runs over the `stripes`-row
-    * offset frame; a plain row_number().over(orderBy(...)) would drag
-    * the whole frame through ONE task at 100 TB. Output: the input
-    * columns plus `r`. */
-  private[operators] def stripedRank(pts: DataFrame, v: String,
-                                     tie: String,
-                                     stripes: Int = 256): DataFrame =
-    stripedRankWith(pts, v, tie,
-      pts.agg(min(col(v)).as("__lo"), max(col(v)).as("__hi")), stripes)
-
-  /** [[stripedRank]] with a CALLER-built 1-row bounds frame carrying
-    * `__lo`/`__hi` — callers that already aggregate the input (a count
-    * for decile arithmetic, say) fold the bounds into that same pass
-    * and save one scan; any extra columns on `bounds` ride along into
-    * the output (the ml_lift/ml_qini r12-verdict item-5 shave). */
-  private[operators] def stripedRankWith(pts: DataFrame, v: String,
-                                         tie: String, bounds: DataFrame,
-                                         stripes: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val striped = pts.crossJoin(broadcast(bounds))
-      .withColumn("__stripe",
-        when(col("__hi") === col("__lo"), lit(0L)).otherwise(
-          least(lit(stripes - 1L), greatest(lit(0L),
-            floor((col(v) - col("__lo")).cast("double") /
-              (col("__hi") - col("__lo")) * stripes)))).cast("int"))
-      .drop("__lo", "__hi")
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = striped.groupBy("__stripe")
-      .agg(count(lit(1)).as("__sn"))
-      .select(col("__stripe"),
-        coalesce(sum("__sn").over(wStripe), lit(0L)).as("__off"))
-    val wIn = Window.partitionBy("__stripe").orderBy(col(v), col(tie))
-    striped.join(broadcast(offs), Seq("__stripe"))
-      .withColumn("r", col("__off") + row_number().over(wIn))
-      .drop("__stripe", "__off")
-  }
-
   def potTailFit(events: DataFrame, eventType: String = "click",
                  q: Double = 0.95): DataFrame = {
     val pts = events.filter(col("event_type") === eventType)
@@ -5278,8 +4966,8 @@ object Stats {
     * Exactness: cents are exact longs, decile assignment is integer
     * rank arithmetic ((r−1)·10 div n — engine-identical on the
     * (value, key) total order), cumulative sums ride a 10-row window.
-    * The corpus-proportional rank uses the [[stripedRank]] pattern
-    * (giniStump's), never a single-task global window; everything
+    * The corpus-proportional rank uses [[stripedRank]], never a
+    * single-task global window; everything
     * after is decile-bounded. */
   def lorenzCurve(orders: DataFrame, k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -5387,10 +5075,8 @@ object Stats {
   def runsUpDown(events: DataFrame, eventType: String = "click")
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hourly = events.filter(col("event_type") === eventType)
-      .groupBy(expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .as("hr"))
-      .agg(Exact.avgValueMicros.as("v"))
+    val hourly =
+      Resample.hourly(events, eventType)(Exact.avgValueMicros.as("v"))
     val w = Window.orderBy("hr")
     val moves = hourly.withColumn("prev", lag("v", 1).over(w))
       .filter(col("prev").isNotNull && col("v") =!= col("prev"))

@@ -391,38 +391,30 @@ object TextAnalysis {
     *
     * The global running sum is a DISTRIBUTED PREFIX SUM, not one
     * window partition per split (which would serialize a 100 TB corpus
-    * onto #splits tasks): docs stripe by a monotone doc_id range
-    * (`stripeDocs` ids per stripe), pass 1 aggregates per-stripe token
-    * totals (tiny: #splits × #stripes rows) and prefix-sums THEM, pass
-    * 2 runs the within-stripe running sum in parallel across stripes
-    * and adds the broadcast stripe offset. Output is identical to the
-    * single-partition formulation (the DuckDB oracle) for any stripe
-    * size. Deterministic: same corpus → same chunks, no RNG. */
-  def packSequences(documents: DataFrame, ctxTokens: Long = 2048L,
-                    stripeDocs: Long = 1L << 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wIn = Window.partitionBy("split", "__stripe").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    // strictly-preceding stripes only: this stripe's own total must not
-    // count, and the first stripe's offset is 0
-    val wStripe = Window.partitionBy("split").orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
+    * onto #splits tasks): [[Stats.stripedPrefix]] per split over
+    * monotone doc_id ranges of [[PackStripeDocs]] ids. Output is
+    * identical to the single-partition formulation (the DuckDB oracle)
+    * for any stripe size. Deterministic: same corpus → same chunks, no
+    * RNG. */
+  def packSequences(documents: DataFrame, ctxTokens: Long = 2048L)
+      : DataFrame = {
     val base = Scale.fanOut(documents, Seq("doc_id"))
       .select(col("doc_id"), hashSplitOf(col("text")).as("split"),
         wsTokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("__stripe", expr(s"doc_id div ${stripeDocs}L"))
-    val stripeOffsets = base.groupBy("split", "__stripe")
-      .agg(sum("n_tokens").as("__st"))
-      .select(col("split"), col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__off"))
-    base.join(broadcast(stripeOffsets), Seq("split", "__stripe"))
-      .withColumn("cum_tokens", col("__off") + sum("n_tokens").over(wIn))
+    Stats.stripedPrefix(base, expr(s"doc_id div ${PackStripeDocs}L"),
+        Seq(col("doc_id")), Seq("n_tokens"), keys = Seq("split"))
       .select(col("doc_id"), col("split"), col("n_tokens"),
         // integer `div`, not double division: token counts at 100 TB
         // overflow double exactness past 2^53
-        expr(s"(cum_tokens - n_tokens) div ${ctxTokens}L").as("chunk_id"),
-        expr(s"(cum_tokens - n_tokens) % ${ctxTokens}L").as("chunk_offset"))
+        expr(s"below_n_tokens div ${ctxTokens}L").as("chunk_id"),
+        expr(s"below_n_tokens % ${ctxTokens}L").as("chunk_offset"))
   }
+
+  /** Doc ids per stripe of [[packSequences]]' prefix sum. */
+  private val PackStripeDocs = 1L << 20
+
+  /** Quality bins of [[tokenBudgetSelect]]'s prefix sum. */
+  private[operators] val BudgetStripes = 64
 
   /** TOKEN-BUDGET selection — "take the best documents until N tokens"
     * (how a training mix is actually drawn from a scored corpus: a
@@ -433,33 +425,23 @@ object TextAnalysis {
     * fill-then-cut convention shared with packSequences).
     *
     * The running total is the same DISTRIBUTED PREFIX SUM as
-    * packSequences, striped here on the BOUNDED quality domain
-    * ([0,1] → fixed value-range stripes, so stripe order ≡ global
-    * quality order by construction): per-stripe totals prefix-sum on a
-    * stripes-sized frame, within-stripe windows run in parallel.
-    * Quality rounds to 6dp BEFORE ordering so both engines walk one
-    * global order (doc_id tiebreak). */
-  def tokenBudgetSelect(documents: DataFrame, budgetTokens: Long = 9000L,
-                        stripes: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    * packSequences ([[Stats.stripedPrefix]]), striped here on the
+    * BOUNDED quality domain: 1 − q ∈ [0,1] in [[BudgetStripes]] fixed
+    * value-range bins, so stripe order ≡ global quality order by
+    * construction. Quality rounds to 6dp BEFORE ordering so both
+    * engines walk one global order (doc_id tiebreak). */
+  def tokenBudgetSelect(documents: DataFrame, budgetTokens: Long = 9000L)
+      : DataFrame = {
     val base = documents.select(col("doc_id"),
         round(qualityScore(col("text")), 6).as("q"),
         wsTokenCount(col("text")).cast("long").as("n_tokens"))
-      .withColumn("__stripe",
-        least(lit(stripes - 1), greatest(lit(0),
-          floor((lit(1.0) - col("q")) * stripes))).cast("int"))
-    val wIn = Window.partitionBy("__stripe")
-      .orderBy(col("q").desc, col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wStripe = Window.orderBy("__stripe")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = base.groupBy("__stripe").agg(sum("n_tokens").as("__st"))
-      .select(col("__stripe"),
-        coalesce(sum("__st").over(wStripe), lit(0L)).as("__off"))
-    base.join(broadcast(offs), Seq("__stripe"))
-      .withColumn("cum_tokens", col("__off") + sum("n_tokens").over(wIn))
-      .filter(col("cum_tokens") - col("n_tokens") < budgetTokens)
-      .select(col("doc_id"), col("q"), col("n_tokens"), col("cum_tokens"))
+    Stats.stripedPrefix(base,
+        Stats.valueStripe(lit(1.0) - col("q"), lit(0.0), lit(1.0),
+          BudgetStripes),
+        Seq(col("q").desc, col("doc_id")), Seq("n_tokens"))
+      .filter(col("below_n_tokens") < budgetTokens)
+      .select(col("doc_id"), col("q"), col("n_tokens"),
+        (col("below_n_tokens") + col("n_tokens")).as("cum_tokens"))
   }
 
   /** Jensen–Shannon divergence between two sources' unigram

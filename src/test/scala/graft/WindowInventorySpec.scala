@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * input frame to ONE task — fine when the frame is bounded by
   * construction (a 256-stripe offset table, a calendar span, a decile
   * report, a top-k shortlist), fatal when it is corpus-proportional
-  * (the class the stripedRank helper exists for; liftTable and qini
+  * (the class the Stats.stripedPrefix helper exists for; liftTable and qini
   * were converted off it this round). Each existing site is
   * individually classified in SURVEY.md §8.10.1 (stripe / calendar /
   * report / value-cardinality / documented-trade); this spec pins the
@@ -26,11 +26,11 @@ class WindowInventorySpec extends AnyFunSuite {
   // SURVEY §8.10.1 inventory counts — update ONLY together with a new
   // classified row in the §8.10.1 table
   private val expected = Map(
-    "operators/Stats.scala" -> 40,
-    "operators/Resample.scala" -> 24,
-    "operators/TextAnalysis.scala" -> 5,
+    "operators/Stats.scala" -> 25,
+    "operators/Resample.scala" -> 23,
+    "operators/TextAnalysis.scala" -> 4,
     "operators/Dwh.scala" -> 3,
-    "operators/Quality.scala" -> 2,
+    "operators/Quality.scala" -> 1,
     "operators/Graph.scala" -> 2,
     "operators/SimilaritySearch.scala" -> 2,
     "operators/Relational.scala" -> 1,
@@ -60,7 +60,7 @@ class WindowInventorySpec extends AnyFunSuite {
     assert(counts == expected,
       "unpartitioned Window.orderBy inventory drifted — classify the " +
         "new/changed site's frame bound in SURVEY.md §8.10.1, convert " +
-        "corpus-proportional frames to Stats.stripedRank, then update " +
+        "corpus-proportional frames to Stats.stripedPrefix, then update " +
         "this spec's counts.\n" +
         s"actual:   ${counts.toSeq.sortBy(_._1)}\n" +
         s"expected: ${expected.toSeq.sortBy(_._1)}")

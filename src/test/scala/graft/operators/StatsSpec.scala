@@ -103,28 +103,31 @@ class StatsSpec extends SparkSpec {
   }
 
   test("mannWhitneyU is stripe-count invariant and symmetric (U1+U2=na*nb)") {
+    // stripe-count invariance: StripedPrefixSpec, on this frame
     val as = Seq.tabulate(300)(i => ("A", (i * 7919 % 997) / 9.0))
     val bs = Seq.tabulate(250)(i => ("B", (i * 104729 % 1201) / 11.0))
     val df = (as ++ bs).toDF("g", "v")
-    val us = Seq(1, 5, 256).map(s =>
-      Stats.mannWhitneyU(df, "g", "v", "A", "B", stripes = s)
-        .collect().head.getAs[Double]("u_stat"))
-    assert(us.distinct.size == 1, s"stripes changed U: $us")
-    val u1 = us.head
+    val u1 = Stats.mannWhitneyU(df, "g", "v", "A", "B")
+      .collect().head.getAs[Double]("u_stat")
     val u2 = Stats.mannWhitneyU(df, "g", "v", "B", "A")
       .collect().head.getAs[Double]("u_stat")
     assert(u1 + u2 == 300.0 * 250.0, s"U1+U2 must equal na*nb, got ${u1 + u2}")
   }
 
   test("ksTest is stripe-count invariant (distributed prefix sum is exact)") {
+    // stripe-count invariance: StripedPrefixSpec, on this frame; here
+    // the statistic must still come out (a sup of |Fa − Fb| ∈ [0, 1])
     val as = Seq.tabulate(400)(i => ("A", (i * 7919 % 1000) / 10.0))
     val bs = Seq.tabulate(300)(i => ("B", (i * 104729 % 1300) / 11.0))
     val df = (as ++ bs).toDF("g", "v")
-    val ds = Seq(1, 3, 256).map(s =>
-      Stats.ksTest(df, "g", "v", "A", "B", stripes = s)
-        .collect().head.getAs[Double]("d_stat"))
-    assert(ds.distinct.size == 1,
-      s"stripe counts must not change the statistic, got $ds")
+    val r = Stats.ksTest(df, "g", "v", "A", "B").collect().head
+    // driver-side D over the same distinct values
+    val (va, vb) = (as.map(_._2), bs.map(_._2))
+    val d = (va ++ vb).distinct.map(x =>
+      math.abs(va.count(_ <= x).toDouble / va.size -
+        vb.count(_ <= x).toDouble / vb.size)).max
+    assert(math.abs(r.getAs[Double]("d_stat") - d) < 1e-6)
+    assert(r.getAs[Long]("n_a") == 400L && r.getAs[Long]("n_b") == 300L)
   }
 
   test("olsRegression recovers an exact line and matches hand-computed R²") {
@@ -195,13 +198,22 @@ class StatsSpec extends SparkSpec {
     val anti = Seq(1.0, 2.0, 5.0, 9.0).map(v => (v, -v * v)).toDF("x", "y")
     assert(Stats.spearman(anti, "x", "y").collect().head
       .getAs[Double]("spearman_rho") == -1.0)
-    // heavy ties + stripe invariance (midranks exact at any stripe count)
+    // heavy ties (stripe-count invariance: StripedPrefixSpec, on this
+    // frame)
     val tied = Seq.tabulate(300)(i => ((i % 7).toDouble, (i * 31 % 13).toDouble))
       .toDF("x", "y")
-    val rhos = Seq(1, 4, 256).map(s =>
-      Stats.spearman(tied, "x", "y", stripes = s).collect().head
-        .getAs[Double]("spearman_rho"))
-    assert(rhos.distinct.size == 1, s"stripes changed rho: $rhos")
+    val rho = Stats.spearman(tied, "x", "y").collect().head
+    // driver-side Pearson of the midranks
+    def midranks(xs: Seq[Double]): Seq[Double] = xs.map(x =>
+      xs.count(_ < x) + (xs.count(_ == x) + 1) / 2.0)
+    val pts = tied.collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    val (rx, ry) = (midranks(pts.map(_._1)), midranks(pts.map(_._2)))
+    val (mx, my) = (rx.sum / rx.size, ry.sum / ry.size)
+    val cxy = rx.zip(ry).map { case (a, b) => (a - mx) * (b - my) }.sum
+    val expect = cxy / math.sqrt(rx.map(a => (a - mx) * (a - mx)).sum *
+      ry.map(b => (b - my) * (b - my)).sum)
+    assert(rho.getAs[Long]("n") == 300L)
+    assert(math.abs(rho.getAs[Double]("spearman_rho") - expect) < 1e-6)
   }
 
   test("benford extracts first digits exactly and shares sum to 1") {
@@ -1536,9 +1548,9 @@ class StatsSpec extends SparkSpec {
   }
 
   test("cramerVonMises: hand values for separation/identity; stripe-invariant") {
-    def cvm(rows: Seq[(String, Double)], stripes: Int = 256) =
-      Stats.cramerVonMises(rows.toDF("g", "v"), "g", "v", "a", "b",
-        stripes).collect().head
+    def cvm(rows: Seq[(String, Double)]) =
+      Stats.cramerVonMises(rows.toDF("g", "v"), "g", "v", "a", "b")
+        .collect().head
     // complete separation a={1,2} b={3,4}: U = 2·0 + 2·8 = 16,
     // T = 16/16 − 15/24 = 0.375
     val sep = cvm(Seq("a" -> 1.0, "a" -> 2.0, "b" -> 3.0, "b" -> 4.0))
@@ -1546,11 +1558,20 @@ class StatsSpec extends SparkSpec {
     // identical samples (full ties): midranks cancel exactly → T = 0
     val same = cvm(Seq("a" -> 1.0, "a" -> 2.0, "b" -> 1.0, "b" -> 2.0))
     assert(same.getAs[Double]("t_stat") == 0.0)
-    // striping is pure bookkeeping: 1 stripe ≡ 256 stripes on a
-    // tie-heavy sample
+    // a tie-heavy sample against the driver-side midrank formula
+    // (stripe-count invariance: StripedPrefixSpec, on this frame)
     val messy = (1 to 120).map(i => ("a", (i % 7).toDouble)) ++
       (1 to 80).map(i => ("b", (i % 5).toDouble + 0.5))
-    assert(cvm(messy, 1) == cvm(messy, 256))
+    val pooled = messy.map(_._2)
+    def mr(x: Double) = pooled.count(_ < x) + (pooled.count(_ == x) + 1) / 2.0
+    def dev(xs: Seq[Double]) = xs.sorted.zipWithIndex
+      .map { case (x, i) => math.pow(mr(x) - (i + 1), 2) }.sum
+    val (xa, xb) = (messy.filter(_._1 == "a").map(_._2),
+      messy.filter(_._1 == "b").map(_._2))
+    val (n, m) = (xa.size.toDouble, xb.size.toDouble)
+    val u = n * dev(xa) + m * dev(xb)
+    val t = u / (n * m * (n + m)) - (4 * m * n - 1) / (6 * (m + n))
+    assert(math.abs(cvm(messy).getAs[Double]("t_stat") - t) < 1e-6)
   }
 
   test("tukeyHsd: separated group flagged, identical pair q=0") {

@@ -96,18 +96,6 @@ class LakeSpec extends SparkSpec {
     assert(fresh.agg(sum("l_quantity")).head().getDouble(0) == 3.0)
   }
 
-  test("stratified sample respects per-stratum proportions roughly") {
-    val docs = Tables.documents(spark, sf)
-    val out = graft.operators.Stats.stratifiedSample(docs, "lang",
-      Map("en" -> 0.5, "fr" -> 0.0), seed = 42)
-    val langs = out.groupBy("lang").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(!langs.contains("fr"))
-    assert(!langs.keySet.exists(l => l != "en")) // unlisted strata default 0
-    val enTotal = docs.filter(col("lang") === "en").count()
-    assert(langs.getOrElse("en", 0L) > 0 && langs("en") < enTotal)
-  }
-
   test("schema evolution: merged read surfaces added columns as null on old files") {
     val sup = Tables.supplier(spark, sf)
     val dir = s"target/graft_io/test/evolve_${System.nanoTime()}"
